@@ -12,7 +12,9 @@ extensions a 100 TB transcript/document corpus needs.  Design rules:
   ``minhash_signatures`` for the measured rationale;
 * candidate generation (LSH banding) shuffles only (band, signature,
   doc_id) tuples, never document text;
-* exact dedup is a hash groupBy (partial agg absorbs duplicates map-side).
+* exact dedup is a hash groupBy (partial agg absorbs duplicates map-side);
+* a bounded-corpus native fast path and its distributed twin are chosen
+  in ONE place, :func:`_bounded_collect`, against the caps below.
 """
 
 from __future__ import annotations
@@ -26,6 +28,21 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MERSENNE31 = 2147483647
+
+# driver-side caps of the native fast paths (rows collected to pandas)
+_NATIVE_MAX_DOCS = 600_000
+_NATIVE_MAX_EDGES = 2_000_000
+
+
+def _bounded_collect(df: DataFrame, cap: int) -> pd.DataFrame | None:
+    """``df`` as pandas when it holds at most ``cap`` rows, else None --
+    the one native-vs-distributed decision of every bounded fast path
+    (None means: run the distributed plan).  Guard and collect are ONE
+    action: ``limit(cap + 1)`` stops early on over-cap input, and a
+    caller whose input is an expensive derived lineage pays for it once
+    instead of a count() pass plus a second collect pass."""
+    pdf = df.limit(cap + 1).toPandas()
+    return None if len(pdf) > cap else pdf
 
 
 def h32(c: Column) -> Column:
@@ -189,47 +206,6 @@ def minhash_signatures_hof(
     )
 
 
-def _minhash_sig_array_udf(shingle_n: int, num_hashes: int):
-    """Arrow-batched native twin of ``minhash_signatures`` returning the
-    signature as ONE array<long> (r7 optimization): hashlib md5 per
-    shingle -- identical bytes, hex slice and integer arithmetic to the
-    ``h32`` chain (Python slicing and ``len`` count codepoints exactly
-    like Spark's ``substr``/``length``; verified equal on the full
-    corpus) -- then the num_hashes mins vectorized in numpy.  NULL text
-    returns a NULL array, matching the JVM path's NULL signatures."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    params = _hash_params(num_hashes)
-    a_np = np.array([a for a, _ in params], dtype=np.int64)
-    b_np = np.array([b for _, b in params], dtype=np.int64)
-    n = shingle_n
-
-    @pandas_udf("array<long>")
-    def udf(texts: pd.Series) -> pd.Series:
-        import hashlib
-
-        md5 = hashlib.md5
-        out = []
-        for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            ww = max(len(t) - (n - 1), 1)
-            hs = np.fromiter(
-                (
-                    int(md5(t[i : i + n].encode("utf-8")).hexdigest()[:8], 16)
-                    for i in range(ww)
-                ),
-                dtype=np.int64,
-                count=ww,
-            )
-            out.append(((hs[:, None] * a_np + b_np) % MERSENNE31).min(axis=0))
-        return pd.Series(out)
-
-    return udf
-
-
 def lsh_buckets(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -237,43 +213,16 @@ def lsh_buckets(
     shingle_n: int = 4,
     bands: int = 4,
     rows_per_band: int = 4,
-    native: bool = False,
 ) -> DataFrame:
     """(id, band, sig) bucket assignments.  The band key is a STRUCT of the
     band's minhash longs -- bucket membership is exact tuple equality, with
     no string materialization (the earlier concat_ws key built and hashed a
     ~40-char string per (doc, band); structs of longs join on raw 8-byte
     comparisons and cannot collide, unlike hashing the tuple to one long).
-
-    ``native=True`` computes the signature with
-    :func:`_minhash_sig_array_udf` (identical integers -- tested equal,
-    incl. NULL-text docs, whose NULL-field band structs never equi-join
-    so the pair set is unchanged) and slices the band structs from the
-    array.  Measured BOTH WAYS at sf1.0 and kept OFF by default: the
-    isolated signature pass is faster native (2.65 s -> 1.75 s) but the
-    LSH chains came out ~0.5 s SLOWER end-to-end (dedup_minhash_lsh
-    3.9 -> 4.6 s, dedup_groups 8.5 -> 9.0 s, same-session best-of-3) --
-    the codegen aggregate's groupBy exchange is the self-join reuse
-    point, while the UDF shape leans on ReuseExchange of the join-input
-    shuffles and in practice re-evaluates the Python pass per side.
-    The JVM aggregate engine (``minhash_signatures``) stays the default."""
-    if native:
-        sig = _minhash_sig_array_udf(shingle_n, bands * rows_per_band)(
-            F.col(text_col)
-        )
-        tmp = df.select(F.col(id_col).alias("id"), sig.alias("_sig"))
-        band_structs = F.array(
-            *[
-                F.struct(
-                    *[
-                        F.col("_sig")[b * rows_per_band + r].alias(f"s{r}")
-                        for r in range(rows_per_band)
-                    ]
-                )
-                for b in range(bands)
-            ]
-        )
-        return tmp.select("id", F.posexplode(band_structs).alias("band", "sig"))
+    Signatures come from the codegen aggregate (``minhash_signatures``):
+    an Arrow-UDF signature engine measured faster in isolation but ~0.5 s
+    SLOWER end-to-end on the LSH chains at sf1.0, because the aggregate's
+    exchange is what the self-join sides reuse."""
     sigs = minhash_signatures(df, id_col, text_col, shingle_n, bands * rows_per_band)
     band_structs = F.array(
         *[
@@ -1321,15 +1270,11 @@ def _verified_jaccard_native(
     def codes_udf(texts: pd.Series) -> pd.Series:
         return texts.map(lambda t: _char_ngram_codes_py(t, n))
 
-    # guard and collect are ONE action: limit(cap+1) stops early on
-    # over-cap corpora (None -> the caller's join path runs), and -- for
-    # callers whose input is an expensive derived lineage, e.g. the
-    # distinct-paragraph unit table -- avoids paying a separate count()
-    # pass over that lineage just to decide the strategy
-    gp = df.select(
-        F.col(id_col).alias("id"), codes_udf(F.col(text_col)).alias("g")
-    ).limit(max_docs + 1).toPandas()
-    if len(gp) > max_docs:
+    gp = _bounded_collect(
+        df.select(F.col(id_col).alias("id"), codes_udf(F.col(text_col)).alias("g")),
+        max_docs,
+    )
+    if gp is None:
         return None
     id_type = cand.schema["id_a"].dataType.simpleString()
     out_schema = f"id_a {id_type}, id_b {id_type}, jaccard double"
@@ -1393,7 +1338,7 @@ def lsh_jaccard_verified(
     n: int = 3,
     threshold: float = 0.5,
     max_bucket_size: int | None = None,
-    native_max_docs: int = 600_000,
+    native_max_docs: int = _NATIVE_MAX_DOCS,
 ) -> DataFrame:
     """THE default near-dup path at scale: LSH candidates -> exact n-gram
     Jaccard computed on candidates ONLY.
@@ -1406,7 +1351,8 @@ def lsh_jaccard_verified(
     keep all-pairs only as an explicitly small-block verifier.
 
     Execution strategy (r7 optimization): corpora up to
-    ``native_max_docs`` docs verify via :func:`_verified_jaccard_native`
+    ``native_max_docs`` docs (sized by :func:`_bounded_collect`; 0 pins
+    the join path) verify via :func:`_verified_jaccard_native`
     (candidate generation unchanged and distributed; the gram sets are
     int64-encoded, broadcast once, and each candidate pair reduced to its
     two counts in numpy) -- identical doubles, measured 26.4 s -> ~7 s at
@@ -1524,8 +1470,9 @@ def _cc_native(edges: DataFrame, pdf: "pd.DataFrame") -> DataFrame:
     the corpus -- 170k edges at sf1.0 while the label loop paid ~6-8
     rounds of join+agg+checkpoint+probe actions (~8 s).  Identical
     contract: component = MIN reachable ORIGINAL id, string ids ordered
-    by UTF-8 bytes exactly like Spark's ``min``.  The caller guards edge
-    count and falls back to the distributed iteration beyond the cap."""
+    by UTF-8 bytes exactly like Spark's ``min``.  ``pdf`` is the edge
+    list :func:`_bounded_collect` returned; beyond its cap the caller
+    runs the distributed iteration."""
     a_list = pdf["id_a"].tolist()
     b_list = pdf["id_b"].tolist()
     parent: dict = {}
@@ -1576,7 +1523,6 @@ def connected_components(
     checkpoint_dir: str | None = None,
     jump_after: int = 4,
     algorithm: str = "label",
-    native_max_edges: int = 2_000_000,
 ) -> DataFrame:
     """(id, component) for every node in the edge list, component = MIN id
     reachable.  ``algorithm`` selects the iteration scheme behind the same
@@ -1648,6 +1594,11 @@ def connected_components(
 
     Raises if not converged within ``max_iters`` -- silent partial labels
     would be wrong-but-plausible, the worst failure mode for dedup.
+
+    Edge lists that :func:`_bounded_collect` admits (``_NATIVE_MAX_EDGES``)
+    with no NULL endpoint skip the iteration for driver-side union-find
+    (:func:`_cc_native`, identical labels) when ``algorithm="label"`` and
+    no ``checkpoint_dir`` is given.
     """
     if checkpoint_dir is not None:
         import uuid as _uuid
@@ -1686,19 +1637,16 @@ def connected_components(
     ) or (isinstance(id_type, T.DecimalType) and id_type.scale == 0)
     if algorithm not in ("label", "star"):
         raise ValueError(f"algorithm must be 'label' or 'star', got {algorithm!r}")
-    if native_max_edges and checkpoint_dir is None and algorithm == "label":
-        # bounded-edge fast path (see _cc_native): one persist+count
-        # guard, collect the edge list, union-find on the driver.  NULL
-        # endpoints (SQL join semantics never connect them) and the
+    if checkpoint_dir is None and algorithm == "label":
+        # bounded-edge fast path (see _cc_native): collect the edge list
+        # (_bounded_collect), union-find on the driver.  NULL endpoints
+        # (SQL join semantics never connect them) and the
         # reliable-checkpoint contract keep the distributed iteration.
-        edges_p = edges.select("id_a", "id_b").persist()
-        try:
-            if edges_p.count() <= native_max_edges:
-                pdf = edges_p.toPandas()
-                if not (pdf["id_a"].isna().any() or pdf["id_b"].isna().any()):
-                    return _cc_native(edges, pdf)
-        finally:
-            edges_p.unpersist()
+        pdf = _bounded_collect(edges.select("id_a", "id_b"), _NATIVE_MAX_EDGES)
+        if pdf is not None and not (
+            pdf["id_a"].isna().any() or pdf["id_b"].isna().any()
+        ):
+            return _cc_native(edges, pdf)
     # Constraint propagation is DISABLED for the iteration: checkpointed
     # relations (LogicalRDD) retain origin isNotNull constraints over
     # attributes the surrounding projections have pruned, and Spark's
@@ -2121,6 +2069,7 @@ def _round6_spark(raw: float, digits: int = 6) -> float:
 
 def _winnow_overlap_native(
     sk: DataFrame,
+    rows: "pd.DataFrame",
     min_overlap: float,
     max_hash_df: int | None,
 ) -> DataFrame:
@@ -2137,8 +2086,9 @@ def _winnow_overlap_native(
     ``np.bincount`` over bucket tails (only partners with larger doc
     index, so every unordered pair is counted exactly once).  Identical
     integers and identical ``round(x, 6)`` doubles to the join path
-    (see :func:`_round6_spark`); the caller guards corpus size and falls
-    back to the distributed bucket join beyond it.
+    (see :func:`_round6_spark`).  ``rows`` is ``sk`` as collected by
+    :func:`_bounded_collect`; beyond its cap the caller runs the
+    distributed bucket join.
     """
     import numpy as np
 
@@ -2146,7 +2096,6 @@ def _winnow_overlap_native(
     id_type = sk.schema["id"].dataType.simpleString()
     out_schema = f"id_a {id_type}, id_b {id_type}, shared bigint, overlap double"
 
-    rows = sk.select("id", "sketch").toPandas()
     n = len(rows)
     if n == 0:
         return spark.createDataFrame([], out_schema)
@@ -2295,7 +2244,6 @@ def winnow_overlap_pairs(
     min_overlap: float = 0.5,
     max_hash_df: int | None = None,
     use_pandas: bool = True,
-    native_max_docs: int = 600_000,
 ) -> DataFrame:
     """Containment/overlap candidate pairs from winnowing sketches
     (textstats.winnow_fingerprint): explode each document's selected
@@ -2327,11 +2275,12 @@ def winnow_overlap_pairs(
     co-occurrence count, which is Omega(sum_h df(h)^2) regardless of plan
     shape -- boilerplate windows make that quadratic term brutal (sf1.0:
     11.7e9 joined rows for 33k output pairs; the join+agg paid 321 s in
-    the round-6 driver bench).  Corpora up to ``native_max_docs`` docs
-    therefore run :func:`_winnow_overlap_native`: one sketch pass, then
-    the (doc, hash) postings -- a lightweight proxy, never text (guide
-    §8) -- are broadcast as a CSR inverted index and every task bincounts
-    an interleaved doc block in numpy (guide §4.2).  Identical rows,
+    the round-6 driver bench).  Corpora of up to ``_NATIVE_MAX_DOCS``
+    non-empty docs (:func:`_bounded_collect`) therefore run
+    :func:`_winnow_overlap_native`: one sketch pass, then the (doc, hash)
+    postings -- a lightweight proxy, never text (guide §8) -- are
+    broadcast as a CSR inverted index and every task bincounts an
+    interleaved doc block in numpy (guide §4.2).  Identical rows,
     integers and rounded doubles (oracle-checked).  Larger corpora keep
     the distributed hash-bucket join below, whose exchange carries only
     (id, sz, h).
@@ -2352,8 +2301,9 @@ def winnow_overlap_pairs(
         F.col(id_col).alias("id"),
         sketch.alias("sketch"),
     ).filter(F.length(normalize_text(F.col(text_col))) > 0)
-    if native_max_docs and df.count() <= native_max_docs:
-        return _winnow_overlap_native(sk, min_overlap, max_hash_df)
+    rows = _bounded_collect(sk, _NATIVE_MAX_DOCS)
+    if rows is not None:
+        return _winnow_overlap_native(sk, rows, min_overlap, max_hash_df)
     ex = sk.select(
         "id", F.size("sketch").alias("sz"), F.explode("sketch").alias("h")
     )
@@ -2618,10 +2568,11 @@ def _containment_native(
     bounded corpora (r7 optimization).  The distributed plan paid ~8 s at
     sf1.0 just exploding and re-aggregating the 14M (id, gram) postings
     for the frequency cap, then joined the gram arrays back twice; here
-    the ALREADY-COMPUTED gram arrays are collected once and the rest is
-    numpy: bincount for gram frequency, bucket pair emission over rare
-    grams (the identical rare_cap^2/2 structural bound as the join), and
-    a searchsorted intersection per distinct candidate pair.  Identical
+    the ALREADY-COMPUTED gram arrays are collected once
+    (:func:`_bounded_collect`) and the rest is numpy: bincount for gram
+    frequency, bucket pair emission over rare grams (the identical
+    rare_cap^2/2 structural bound as the join), and a searchsorted
+    intersection per distinct candidate pair.  Identical
     integers, identical ``round(x, d)`` doubles (:func:`_round6_spark`)."""
     import numpy as np
 
@@ -2700,7 +2651,6 @@ def containment_pairs(
     rare_cap: int = 20,
     threshold: float = 0.9,
     round_digits: int = 6,
-    native_max_docs: int = 600_000,
 ) -> DataFrame:
     """Asymmetric SET-CONTAINMENT dedup: find (inner, outer) document
     pairs where nearly every word ``n``-gram of the inner doc also occurs
@@ -2730,6 +2680,10 @@ def containment_pairs(
     ``round_digits`` BEFORE the threshold test (oracle thresholds the
     same value).  inner = the doc with the SMALLER distinct-gram set
     (ties: lower id), so each unordered pair appears at most once.
+
+    Corpora of up to ``_NATIVE_MAX_DOCS`` docs (:func:`_bounded_collect`)
+    run :func:`_containment_native` instead of the joins below, with
+    identical rows.
     """
     from mariadb_to_graylog_spark.operators.decontam import word_ngram_hashes
 
@@ -2740,10 +2694,11 @@ def containment_pairs(
         F.col(id_col).alias("id"),
         word_ngram_hashes(F.col(text_col), n).alias("grams"),
     )
-    if native_max_docs and df.count() <= native_max_docs:
+    pdf = _bounded_collect(garr, _NATIVE_MAX_DOCS)
+    if pdf is not None:
         return _containment_native(
             df.sparkSession,
-            garr.toPandas(),
+            pdf,
             df.schema[id_col].dataType,
             rare_cap,
             threshold,

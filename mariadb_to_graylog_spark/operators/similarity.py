@@ -22,6 +22,15 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# driver-side caps of the native fast paths (see dedup._bounded_collect)
+_NATIVE_MAX_ROWS = 2_000_000  # k-means / PQ training vectors
+_NATIVE_MAX_EMBED_ROWS = 600_000  # SRP near-dup vectors
+# Sum over bands of C(bucket, 2): the candidate pairs the SRP native path
+# may emit on the driver.  Identical or all-zero vectors share one bucket
+# in every band, so a skewed corpus can ask for O(n^2) pairs; past the
+# budget the distributed bucket join runs instead.
+_NATIVE_MAX_PAIRS = 20_000_000
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -124,10 +133,10 @@ def _centroid_cos_array(
 ) -> Column:
     """Per-centroid cosine array from TWO flat literals (array<long> ids +
     array<array<double>> vectors) instead of k per-centroid struct
-    expression trees.  Same lesson as ``srp_band_values``: with per-entry
-    literals, Catalyst ANALYSIS of the k x dim expression forest dominated
-    wall time (k=32/dim=64 spent minutes planning a job that executes in
-    seconds); two nested literals keep the tree O(1) in k."""
+    expression trees: with per-entry literals, Catalyst ANALYSIS of the
+    k x dim expression forest dominated wall time (k=32/dim=64 spent
+    minutes planning a job that executes in seconds); two nested literals
+    keep the tree O(1) in k."""
     cvs = F.lit([[float(x) for x in cv] for _, cv in cents])
     return F.transform(cvs, lambda cv: cosine(F.col(vec_col), cv))
 
@@ -184,7 +193,6 @@ def assign_buckets_local(
     cents: list[tuple[int, list[float]]],
     vec_col: str = "embedding",
     bucket_col: str = "bucket",
-    native: bool = True,
 ) -> DataFrame:
     """IVF assignment, fully map-side: nearest centroid by cosine (ties ->
     lowest id) -- ZERO shuffle, zero window.  (The previous shape scored
@@ -196,44 +204,25 @@ def assign_buckets_local(
     array, and the lowest cid among exact-max entries wins -- identical to
     ``ROW_NUMBER() OVER (ORDER BY cs DESC, cid)``.
 
-    ``native`` (default, r7 optimization) computes the argmax in an
-    Arrow-batched numpy kernel with the same bit-exact sequential fold
-    (:func:`_cos_matrix_seqfold`) and Spark NaN ordering/equality
-    (:func:`_argmax_spark`) -- the interpreted k x dim HOF fold cost
-    4.8 s per materialization over 20k rows at sf1.0, the kernel
-    milliseconds; tested equal.  ``native=False`` keeps the pure
-    JVM-expression path (the oracle-shaped reference)."""
-    from mariadb_to_graylog_spark.operators.textstats import bind_once
+    The argmax runs in an Arrow-batched numpy kernel (r7 optimization)
+    with the bit-exact sequential fold (:func:`_cos_matrix_seqfold`) and
+    Spark NaN ordering/equality (:func:`_argmax_spark`) -- the interpreted
+    k x dim HOF fold cost 4.8 s per materialization over 20k rows at
+    sf1.0, the kernel milliseconds.  The DuckDB oracle is the reference."""
+    from pyspark.sql.functions import pandas_udf
 
-    if native:
-        from pyspark.sql.functions import pandas_udf
+    cids_np = np.array([int(cid) for cid, _ in cents], dtype=np.int64)
+    cmat = np.array([[float(x) for x in cv] for _, cv in cents])
+    dim = cmat.shape[1]
 
-        cids_np = np.array([int(cid) for cid, _ in cents], dtype=np.int64)
-        cmat = np.array([[float(x) for x in cv] for _, cv in cents])
-        dim = cmat.shape[1]
+    @pandas_udf("long")
+    def bucket_udf(vs: pd.Series) -> pd.Series:
+        if not len(vs):
+            return pd.Series([], dtype=np.int64)
+        scores = _cos_matrix_seqfold(_vec_matrix(vs, dim), cmat)
+        return pd.Series(_argmax_spark(scores, cids_np))
 
-        @pandas_udf("long")
-        def bucket_udf(vs: pd.Series) -> pd.Series:
-            if not len(vs):
-                return pd.Series([], dtype=np.int64)
-            scores = _cos_matrix_seqfold(_vec_matrix(vs, dim), cmat)
-            return pd.Series(_argmax_spark(scores, cids_np))
-
-        return df.withColumn(bucket_col, bucket_udf(F.col(vec_col)))
-
-    cids = _centroid_ids(cents)
-
-    def _argmax(ca: Column) -> Column:
-        best = F.array_max(ca)
-        return F.array_min(
-            F.zip_with(cids, ca, lambda cid, s: F.when(s == best, cid))
-        )
-
-    # bind the cosine array once: HOF lambdas are interpreted with no CSE,
-    # so referencing it from both array_max and zip_with would re-fold
-    # every centroid dot product twice per row
-    bucket = bind_once(_centroid_cos_array(cents, vec_col), _argmax)
-    return df.withColumn(bucket_col, bucket)
+    return df.withColumn(bucket_col, bucket_udf(F.col(vec_col)))
 
 
 def assign_buckets(
@@ -290,7 +279,6 @@ def train_kmeans(
     vec_col: str = "embedding",
     dim: int = 64,
     round_digits: int = 6,
-    native_max_rows: int = 2_000_000,
 ) -> list[tuple[int, list[float]]]:
     """Lloyd's k-means as a fixed number of DataFrame jobs, fully
     deterministic (seeded by the k lowest ids -- no RNG, so the run is
@@ -308,10 +296,11 @@ def train_kmeans(
     Empty buckets drop out (both engines' GROUP BY agree).  Returns
     driver-side centroids for ``assign_buckets_local``.
 
-    Execution strategy (r7 optimization): inputs up to
-    ``native_max_rows`` vectors are collected ONCE (a k-means trainer
-    ends driver-side anyway -- the centroids ARE a driver value) and the
-    Lloyd rounds run in numpy with the bit-exact sequential cosine fold
+    Execution strategy (r7 optimization): inputs of up to
+    ``_NATIVE_MAX_ROWS`` vectors are collected ONCE by
+    ``dedup._bounded_collect`` (a k-means trainer ends driver-side
+    anyway -- the centroids ARE a driver value) and the Lloyd rounds run
+    in numpy with the bit-exact sequential cosine fold
     (:func:`_cos_matrix_seqfold`), Spark argmax tie semantics
     (:func:`_argmax_spark`) and the identical HALF_UP component rounding
     -- each Spark round previously paid an interpreted k x dim assignment
@@ -322,8 +311,10 @@ def train_kmeans(
     (the DuckDB oracle already sums in a third order).  Larger inputs
     keep the distributed rounds below.
     """
-    if native_max_rows and df.count() <= native_max_rows:
-        pdf = df.select(id_col, vec_col).toPandas()
+    from mariadb_to_graylog_spark.operators.dedup import _bounded_collect
+
+    pdf = _bounded_collect(df.select(id_col, vec_col), _NATIVE_MAX_ROWS)
+    if pdf is not None:
         return _lloyd_native(
             pdf[id_col].tolist(),
             _vec_matrix(pdf[vec_col].tolist(), dim),
@@ -409,80 +400,44 @@ def srp_planes(n_planes: int, dim: int) -> list[list[int]]:
 
 
 def srp_band_values(
-    vec_col: str, planes: list[list[int]], bands: int, rows_per_band: int,
-    native: bool = True,
+    vec_col: str, planes: list[list[int]], bands: int, rows_per_band: int
 ) -> Column:
-    """array<long> of per-band SRP bucket values, as ONE nested-HOF
-    expression: bit_j = sign(v . plane_j) via a transform over a 2D plane
-    literal (a single py4j literal instead of bands*rows dot-expression
-    trees -- plan construction was costing more than execution), then each
-    band packs its ``rows_per_band`` bits into a long.
+    """array<long> of per-band SRP bucket values: bit_j = sign(v . plane_j)
+    (``>= 0``), then each band packs its ``rows_per_band`` bits into a
+    long.  Computed in an Arrow-batched numpy kernel (r7 optimization)
+    with the bit-exact sequential fold of :func:`_cos_matrix_seqfold`'s
+    dot accumulation, so the sign bits and the integer band packing equal
+    the DuckDB oracle's; the interpreted bands*rows x dim fold was the
+    dominant cost of the SRP consumers at sf1.0."""
+    from pyspark.sql.functions import pandas_udf
 
-    ``native`` (default, r7 optimization) computes the same values in an
-    Arrow-batched numpy kernel with the bit-exact sequential fold
-    (:func:`_cos_matrix_seqfold`'s dot accumulation; the >= 0 sign test
-    then yields identical bits, and band packing is integer) -- the
-    interpreted bands*rows x dim fold was the dominant cost of the SRP
-    consumers at sf1.0.  ``native=False`` keeps the JVM expression (the
-    oracle-shaped reference)."""
-    if native:
-        from pyspark.sql.functions import pandas_udf
+    pmat = np.array([[float(x) for x in p] for p in planes])
+    n_planes, dim = pmat.shape
+    pw = np.array([1 << k for k in range(rows_per_band)], dtype=np.int64)
 
-        pmat = np.array([[float(x) for x in p] for p in planes])
-        n_planes, dim = pmat.shape
-        pw = np.array([1 << k for k in range(rows_per_band)], dtype=np.int64)
+    @pandas_udf("array<long>")
+    def srp_udf(vs: pd.Series) -> pd.Series:
+        if not len(vs):
+            return pd.Series([], dtype=object)
+        v64 = _vec_matrix(vs, dim)
+        dots = np.zeros((v64.shape[0], n_planes))
+        for j in range(dim):
+            dots = dots + v64[:, j][:, None] * pmat[None, :, j]
+        bits = (dots >= 0).astype(np.int64)
+        bv = bits[:, : bands * rows_per_band].reshape(
+            v64.shape[0], bands, rows_per_band
+        ) @ pw
+        return pd.Series(list(bv))
 
-        @pandas_udf("array<long>")
-        def srp_udf(vs: pd.Series) -> pd.Series:
-            if not len(vs):
-                return pd.Series([], dtype=object)
-            v64 = _vec_matrix(vs, dim)
-            dots = np.zeros((v64.shape[0], n_planes))
-            for j in range(dim):
-                dots = dots + v64[:, j][:, None] * pmat[None, :, j]
-            bits = (dots >= 0).astype(np.int64)
-            bv = bits[:, : bands * rows_per_band].reshape(
-                v64.shape[0], bands, rows_per_band
-            ) @ pw
-            return pd.Series(list(bv))
-
-        return srp_udf(F.col(vec_col))
-
-    planes2d = F.lit([[float(x) for x in p] for p in planes])
-    bits = F.transform(
-        planes2d,
-        lambda p: (
-            F.aggregate(
-                F.zip_with(F.col(vec_col), p, lambda x, y: x.cast("double") * y),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            >= 0
-        ).cast("long"),
-    )
-    powers = F.lit([1 << k for k in range(rows_per_band)])
-    return F.array(
-        *[
-            F.aggregate(
-                F.zip_with(
-                    F.slice(bits, b * rows_per_band + 1, rows_per_band),
-                    powers,
-                    lambda x, y: x * y,
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
-            )
-            for b in range(bands)
-        ]
-    )
+    return srp_udf(F.col(vec_col))
 
 
 def probe_buckets_local(
     cents: list[tuple[int, list[float]]], vec_col: str, nprobe: int
 ) -> Column:
     """Query-side multi-probe: array of the ``nprobe`` nearest centroid
-    ids (cos desc, ties lowest id), map-side like the argmax fold (and
-    sharing its two-flat-literal shape -- see ``_centroid_cos_array``)."""
+    ids (cos desc, ties lowest id), map-side over two flat literals (see
+    ``_centroid_cos_array``)."""
     cids = _centroid_ids(cents)
     ranked = F.sort_array(
         F.zip_with(
@@ -553,7 +508,6 @@ def train_pq(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_digits: int = 6,
-    native_max_rows: int = 2_000_000,
 ) -> list[list[tuple[int, list[float]]]]:
     """Product-quantization codebooks: split every vector into ``m``
     subspaces of dim/m and train an independent deterministic k-means
@@ -563,16 +517,17 @@ def train_pq(
     that makes billion-vector ANN fit a cluster's RAM.  Returns m
     driver-side codebooks (m x ksub x dim/m floats -- the centroid-collect
     idiom)."""
+    from mariadb_to_graylog_spark.operators.dedup import _bounded_collect
+
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     dsub = dim // m
-    if native_max_rows and df.count() <= native_max_rows:
-        # r7: ONE collect feeds all m sub-trainers (the per-subspace
-        # train_kmeans native paths each paid their own count+collect
-        # action over the slice lineage -- 8 actions at m=4).  Slicing
-        # the widened float64 matrix commutes with the JVM's
+    pdf = _bounded_collect(df.select(id_col, vec_col), _NATIVE_MAX_ROWS)
+    if pdf is not None:
+        # r7: ONE collect feeds all m sub-trainers (per-subspace
+        # train_kmeans calls would each collect the slice lineage).
+        # Slicing the widened float64 matrix commutes with the JVM's
         # slice-then-cast, so the sub-centroids are identical.
-        pdf = df.select(id_col, vec_col).toPandas()
         ids = pdf[id_col].tolist()
         v64 = _vec_matrix(pdf[vec_col].tolist(), dim)
         return [
@@ -929,6 +884,7 @@ def semantic_dedup(
 
 def _embedding_neardup_native(
     df: DataFrame,
+    pdf: pd.DataFrame,
     id_col: str,
     vec_col: str,
     dim: int,
@@ -936,25 +892,28 @@ def _embedding_neardup_native(
     rows_per_band: int,
     threshold: float,
     round_digits: int,
-) -> DataFrame:
+) -> DataFrame | None:
     """Native SRP-LSH near-dup for bounded corpora (r7 optimization): the
     distributed chain paid ~2.8 s generating+distincting 3.4M candidate
     pairs through a bucket self-join and ~2.7 s more joining vectors back
     and folding an interpreted cosine per pair (sf1.0).  Here the (id,
-    vector) table -- 7 MB at sf1.0 -- is collected once; band values,
-    per-band bucket pair emission (identical pair set) and the bit-exact
+    vector) table -- 7 MB at sf1.0 -- is ``pdf``, collected once by the
+    caller's ``_bounded_collect``; band values, per-band bucket pair
+    emission (identical pair set) and the bit-exact
     sequential-fold cosine (:func:`_cos_matrix_seqfold`'s accumulation
     order) all run in numpy, with the verify distributed over pair blocks
     via a broadcast of (vectors, norms, pairs).  Identical rows and
     rounded doubles; Spark's NaN-passes-threshold comparison semantics
-    are preserved.  The caller guards corpus size."""
+    are preserved, and a zero-norm pair scores NULL (Spark's x / 0.0)
+    and is dropped.  Returns None -- the caller then runs the distributed
+    bucket join -- when the bands' buckets would emit more than
+    ``_NATIVE_MAX_PAIRS`` pairs (sum of C(bucket, 2)) on the driver."""
     from mariadb_to_graylog_spark.operators.dedup import _round6_spark
 
     spark = df.sparkSession
     id_type = df.schema[id_col].dataType.simpleString()
     out_schema = f"id_a {id_type}, id_b {id_type}, cos_sim double"
 
-    pdf = df.select(id_col, vec_col).toPandas()
     n = len(pdf)
     if n == 0:
         return spark.createDataFrame([], out_schema)
@@ -979,7 +938,7 @@ def _embedding_neardup_native(
     pw = np.array([1 << k for k in range(rows_per_band)], dtype=np.int64)
     bv = bits.reshape(n, bands, rows_per_band) @ pw
 
-    pa = []
+    buckets, n_emit = [], 0
     for b in range(bands):
         col = bv[:, b]
         srt = np.argsort(col, kind="stable")
@@ -987,6 +946,13 @@ def _embedding_neardup_native(
         starts = np.concatenate(
             [[0], np.flatnonzero(vals[1:] != vals[:-1]) + 1, [n]]
         )
+        sizes = np.diff(starts)
+        n_emit += int((sizes * (sizes - 1) // 2).sum())
+        buckets.append((srt, starts))
+    if n_emit > _NATIVE_MAX_PAIRS:
+        return None
+    pa = []
+    for srt, starts in buckets:
         for s, e in zip(starts[:-1], starts[1:]):
             if e - s >= 2:
                 grp = np.sort(srt[s:e])
@@ -1020,9 +986,12 @@ def _embedding_neardup_native(
                 acc = np.zeros(hi - lo)
                 for j in range(vl.shape[1]):
                     acc = acc + vl[xa, j] * vl[xb, j]
-                raw = acc / (sq[xa] * sq[xb])
-                nanm = np.isnan(raw)
-                sel = np.flatnonzero((raw >= margin) | nanm)
+                den = sq[xa] * sq[xb]
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    raw = acc / den
+                # Spark's x / 0.0 is NULL, which fails the threshold
+                ok = (raw >= margin) | np.isnan(raw)
+                sel = np.flatnonzero(ok & (den != 0))
                 if sel.size == 0:
                     continue
                 keep_a, keep_b, keep_c = [], [], []
@@ -1061,7 +1030,6 @@ def embedding_neardup_lsh(
     rows_per_band: int | None = 8,
     threshold: float = 0.999,
     round_digits: int = 6,
-    native_max_rows: int = 600_000,
 ) -> DataFrame:
     """THE default embedding near-dup path at scale: random-hyperplane
     (SRP) LSH candidates -> exact cosine verified on candidates only.
@@ -1083,17 +1051,29 @@ def embedding_neardup_lsh(
     to ~log2(N/4) so buckets stay O(1) and candidates O(N); exact-copy
     recall is unaffected by more bits (identical vectors share every
     sign), near-miss recall degrades gently (compensate with ``bands``).
+
+    Corpora of up to ``_NATIVE_MAX_EMBED_ROWS`` vectors
+    (``dedup._bounded_collect``) run :func:`_embedding_neardup_native`
+    -- identical rows -- unless their buckets exceed its pair budget.
     """
+    from mariadb_to_graylog_spark.operators.dedup import (
+        _bounded_collect,
+        _bucket_pairs,
+    )
+
+    pdf = _bounded_collect(df.select(id_col, vec_col), _NATIVE_MAX_EMBED_ROWS)
     if rows_per_band is None:
         import math
 
-        n = df.count()
+        n = len(pdf) if pdf is not None else df.count()
         rows_per_band = max(8, math.ceil(math.log2(max(n, 2) / 4)))
-    if native_max_rows and df.count() <= native_max_rows:
-        return _embedding_neardup_native(
-            df, id_col, vec_col, dim, bands, rows_per_band, threshold,
+    if pdf is not None:
+        nat = _embedding_neardup_native(
+            df, pdf, id_col, vec_col, dim, bands, rows_per_band, threshold,
             round_digits,
         )
+        if nat is not None:
+            return nat
     planes = srp_planes(bands * rows_per_band, dim)
     band_vals = srp_band_values(vec_col, planes, bands, rows_per_band)
     buckets = df.select(
@@ -1101,8 +1081,6 @@ def embedding_neardup_lsh(
     )
     # SRP folds run once: AQE reuses the bucket shuffle stage across both
     # self-join sides (see dedup._bucket_pairs for the measurement)
-    from mariadb_to_graylog_spark.operators.dedup import _bucket_pairs
-
     cand = _bucket_pairs(buckets, ["band", "bv"], max_bucket_size=None)
     vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     pairs = (

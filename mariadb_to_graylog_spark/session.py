@@ -22,8 +22,12 @@ merely *sized down* for local[N] testing):
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_ROOT = Path(__file__).resolve().parent.parent
+_WORKER_PATH_KEY = "spark.executorEnv.PYTHONPATH"
 
 
 def get_spark(
@@ -38,6 +42,11 @@ def get_spark(
     ``SPARK_GRAFT_CPUS`` env var or ``*``.  On a real cluster this factory is
     bypassed by ``spark-submit`` conf; nothing here assumes local mode except
     the master URL default.
+
+    Python workers get the package root on their ``PYTHONPATH`` (merged
+    with any ``spark.executorEnv.PYTHONPATH`` in ``extra_conf``), so UDFs
+    and ``mapInPandas`` functions import this package whatever the
+    working directory -- the local-mode analogue of ``--py-files``.
     """
     if cpus is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -66,14 +75,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    worker_path = [str(_PACKAGE_ROOT), conf.pop(_WORKER_PATH_KEY, "")]
+    conf[_WORKER_PATH_KEY] = os.pathsep.join(p for p in worker_path if p)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

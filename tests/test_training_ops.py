@@ -20,6 +20,24 @@ def embeds(spark):
     return spark.read.parquet(f"{SF}/embeddings.parquet").cache()
 
 
+@pytest.fixture
+def force_distributed(monkeypatch):
+    """Context manager under which every bounded native fast path
+    declines (``_bounded_collect`` returns None), so operators built
+    inside it run their distributed twins."""
+    from contextlib import contextmanager
+
+    from mariadb_to_graylog_spark.operators import dedup
+
+    @contextmanager
+    def forced():
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "_bounded_collect", lambda df, cap: None)
+            yield
+
+    return forced
+
+
 def test_exact_dedup_roundtrip(spark, docs):
     from mariadb_to_graylog_spark.operators.dedup import exact_dedup
 
@@ -117,7 +135,9 @@ def test_lsh_verified_subset_and_recall(spark, docs):
     assert recall >= 0.9, f"verified recall {recall}"
 
 
-def test_no_quadratic_join_in_default_neardup_paths(spark, docs, embeds):
+def test_no_quadratic_join_in_default_neardup_paths(
+    spark, docs, embeds, force_distributed
+):
     """The default near-dup operators must be bucket-joins: equi-join keys
     include the LSH band columns, and no cartesian/nested-loop join may
     appear anywhere in the plan."""
@@ -127,14 +147,16 @@ def test_no_quadratic_join_in_default_neardup_paths(spark, docs, embeds):
     )
     from mariadb_to_graylog_spark.operators.similarity import embedding_neardup_lsh
 
+    # embedding path: the bounded-corpus default is the r7 native engine
+    # (MapInPandas over numpy bucket pairing -- same per-band pair set, no
+    # join at all); the bucket-join invariant is asserted on its
+    # beyond-cap distributed twin
+    with force_distributed():
+        embed_dist = embedding_neardup_lsh(embeds, dim=64)
     for df, needle in [
         (lsh_jaccard_verified(docs), "sig"),
         (simhash_pairs_banded(docs), "bv"),
-        # embedding path: the bounded-corpus default is the r7 native
-        # engine (MapInPandas over numpy bucket pairing -- same per-band
-        # pair set, no join at all); the bucket-join invariant is
-        # asserted on its beyond-cap distributed twin below
-        (embedding_neardup_lsh(embeds, dim=64, native_max_rows=0), "bv"),
+        (embed_dist, "bv"),
     ]:
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan and "NestedLoop" not in plan
@@ -152,12 +174,7 @@ def test_no_quadratic_join_in_default_neardup_paths(spark, docs, embeds):
         (r.id_a, r.id_b, r.cos_sim)
         for r in embedding_neardup_lsh(embeds, dim=64).collect()
     }
-    dist = {
-        (r.id_a, r.id_b, r.cos_sim)
-        for r in embedding_neardup_lsh(
-            embeds, dim=64, native_max_rows=0
-        ).collect()
-    }
+    dist = {(r.id_a, r.id_b, r.cos_sim) for r in embed_dist.collect()}
     assert nat == dist
 
 
@@ -264,34 +281,10 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
     assert len(snaps) == 1, snaps
 
 
-def test_lsh_buckets_native_equals_codegen(spark, docs):
-    """The native minhash signature engine must produce byte-identical
-    (id, band, sig-struct) bucket rows to the codegen aggregate path,
-    including NULL-text docs (NULL-field structs) and unicode."""
-    from mariadb_to_graylog_spark.operators.dedup import lsh_buckets
-
-    extra = spark.createDataFrame(
-        [(90001, None), (90002, ""), (90003, "café résumé déjà"), (90004, "ab")],
-        "doc_id long, text string",
-    )
-    both = docs.select("doc_id", "text").unionByName(extra)
-    key = lambda r: (r.id, r.band, tuple(r.sig) if r.sig else None)  # noqa: E731
-    nat = sorted(
-        key(r) for r in lsh_buckets(both, bands=4, rows_per_band=8).collect()
-    )
-    jvm = sorted(
-        key(r)
-        for r in lsh_buckets(
-            both, bands=4, rows_per_band=8, native=False
-        ).collect()
-    )
-    assert nat == jvm
-
-
-def test_lsh_verified_native_equals_join_path(spark, docs):
+def test_lsh_verified_native_equals_join_path(spark, docs, force_distributed):
     """The bounded-corpus native verify (int64 gram codes + broadcast CSR)
     must produce byte-identical (id_a, id_b, jaccard) rows to the
-    join-based verify (forced via native_max_docs=0), including on
+    join-based verify (forced via ``force_distributed``), including on
     unicode text; and the gram-code kernel's set counts must equal
     Spark's char_ngrams set counts."""
     from mariadb_to_graylog_spark.operators.dedup import (
@@ -314,12 +307,11 @@ def test_lsh_verified_native_equals_join_path(spark, docs):
         (r.id_a, r.id_b, r.jaccard)
         for r in lsh_jaccard_verified(df, threshold=0.1).collect()
     }
-    joined = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in lsh_jaccard_verified(
-            df, threshold=0.1, native_max_docs=0
-        ).collect()
-    }
+    with force_distributed():
+        joined = {
+            (r.id_a, r.id_b, r.jaccard)
+            for r in lsh_jaccard_verified(df, threshold=0.1).collect()
+        }
     assert native == joined and native
 
     # kernel vs Spark char_ngrams: same distinct-gram count per text and
@@ -334,10 +326,10 @@ def test_lsh_verified_native_equals_join_path(spark, docs):
         assert _char_ngram_codes_py(text, 3).size == r.n, text
 
 
-def test_connected_components_native_equals_iterative(spark):
+def test_connected_components_native_equals_iterative(spark, force_distributed):
     """The bounded-edge union-find fast path must produce byte-identical
     labels to the distributed label iteration (forced via
-    native_max_edges=0) on chain + clique + self-loop + string-id
+    ``force_distributed``) on chain + clique + self-loop + string-id
     graphs."""
     from mariadb_to_graylog_spark.operators.dedup import connected_components
 
@@ -358,13 +350,199 @@ def test_connected_components_native_equals_iterative(spark):
             (r.id, r.component)
             for r in connected_components(edges).collect()
         }
-        iterative = {
-            (r.id, r.component)
-            for r in connected_components(
-                edges, native_max_edges=0
-            ).collect()
-        }
+        with force_distributed():
+            iterative = {
+                (r.id, r.component)
+                for r in connected_components(edges).collect()
+            }
         assert native == iterative, schema
+
+
+def _excerpt_corpus(spark, docs):
+    """The sf docs plus planted excerpts (a doc's middle third, under a
+    new id) and one empty doc: containment/overlap pairs at every
+    score, and one doc the winnow path must exclude."""
+    sub = docs.filter(F.col("doc_id") % 9 == 0)
+    planted = sub.select(
+        (F.col("doc_id") + 50000).alias("doc_id"),
+        F.expr("substring(text, length(text) div 3, length(text) div 3)").alias(
+            "text"
+        ),
+    )
+    empty = spark.createDataFrame([(99999, "")], "doc_id long, text string")
+    return docs.select("doc_id", "text").unionByName(planted).unionByName(empty)
+
+
+def test_winnow_overlap_native_equals_distributed(spark, docs, force_distributed):
+    """The bincount-over-postings fast path and the distributed hash-bucket
+    join return identical (id_a, id_b, shared, overlap) rows, with and
+    without a hash document-frequency cap."""
+    from mariadb_to_graylog_spark.operators.dedup import winnow_overlap_pairs
+
+    df = _excerpt_corpus(spark, docs)
+    for kw in ({"min_overlap": 0.3}, {"min_overlap": 0.0, "max_hash_df": 2}):
+        native = sorted(tuple(r) for r in winnow_overlap_pairs(df, **kw).collect())
+        with force_distributed():
+            dist = sorted(tuple(r) for r in winnow_overlap_pairs(df, **kw).collect())
+        assert native == dist and native, kw
+
+
+def test_containment_native_equals_distributed(spark, docs, force_distributed):
+    """The numpy rare-gram candidate+verify path and the distributed joins
+    return identical (id_inner, id_outer, n_inner_grams, n_inter,
+    containment) rows."""
+    from mariadb_to_graylog_spark.operators.dedup import containment_pairs
+
+    df = _excerpt_corpus(spark, docs)
+    for kw in ({"n": 8, "threshold": 0.9}, {"n": 4, "rare_cap": 5, "threshold": 0.2}):
+        native = sorted(tuple(r) for r in containment_pairs(df, **kw).collect())
+        with force_distributed():
+            dist = sorted(tuple(r) for r in containment_pairs(df, **kw).collect())
+        assert native == dist and native, kw
+
+
+def test_kmeans_and_pq_native_equal_distributed(spark, embeds, force_distributed):
+    """The numpy Lloyd rounds return the same centroids and codebooks as
+    the distributed rounds (HALF_UP rounding absorbs the summation
+    order)."""
+    from mariadb_to_graylog_spark.operators.similarity import train_kmeans, train_pq
+
+    native_c = train_kmeans(embeds, k=6, iters=3, dim=64)
+    native_pq = train_pq(embeds, m=4, ksub=4, iters=2, dim=64)
+    with force_distributed():
+        dist_c = train_kmeans(embeds, k=6, iters=3, dim=64)
+        dist_pq = train_pq(embeds, m=4, ksub=4, iters=2, dim=64)
+    assert native_c == dist_c and len(native_c) > 1
+    assert native_pq == dist_pq and len(native_pq) == 4
+
+
+def test_embedding_neardup_pair_budget_falls_back(
+    spark, embeds, monkeypatch, force_distributed
+):
+    """All-zero vectors share one SRP bucket in every band: the native
+    path would emit C(n, 2) pairs per band on the driver.  Over the pair
+    budget it declines and the distributed bucket join runs; every path
+    returns the same rows (zero-norm cosines are Spark NULLs, so no
+    zero-vector pair survives)."""
+    from mariadb_to_graylog_spark.operators import similarity as sim
+
+    zeros = spark.createDataFrame(
+        [(90000 + i, [0.0] * 64, -1) for i in range(40)],
+        embeds.schema,
+    )
+    copies = embeds.filter(F.col("vec_id") % 25 == 0).withColumn(
+        "vec_id", F.col("vec_id") + 50000
+    )
+    both = embeds.unionByName(copies).unionByName(zeros)
+
+    def rows(df):
+        return sorted(
+            (r.id_a, r.id_b, None if r.cos_sim != r.cos_sim else r.cos_sim)
+            for r in df.collect()
+        )
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    native = sim.embedding_neardup_lsh(both, dim=64, threshold=0.9)
+    assert "MapInPandas" in plan(native)
+    monkeypatch.setattr(sim, "_NATIVE_MAX_PAIRS", 3 * 40 * 39 // 2 - 1)
+    budgeted = sim.embedding_neardup_lsh(both, dim=64, threshold=0.9)
+    assert "MapInPandas" not in plan(budgeted)
+    with force_distributed():
+        dist = sim.embedding_neardup_lsh(both, dim=64, threshold=0.9)
+    assert rows(native) == rows(budgeted) == rows(dist)
+    assert rows(native)  # the planted copies
+    assert not any(a >= 90000 or b >= 90000 for a, b, _ in rows(native))
+
+
+def _group_jobs(spark, action) -> int:
+    """Spark jobs ``action`` runs, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "lsh_jaccard_verified",
+        "connected_components",
+        "winnow_overlap_pairs",
+        "containment_pairs",
+        "train_kmeans",
+        "pq_train",
+        "embedding_neardup_lsh",
+    ],
+)
+def test_native_decision_is_one_bounded_collect(spark, op):
+    """Each guarded operator decides native-vs-distributed with ONE bounded
+    collect: building its native result runs no more Spark jobs than a
+    bare ``limit(cap + 1).toPandas()`` of its input (AQE may split that
+    reference into more than one job)."""
+    import numpy as np
+
+    from mariadb_to_graylog_spark.operators import dedup
+    from mariadb_to_graylog_spark.operators import similarity as sim
+
+    texts = spark.createDataFrame(
+        [(i, f"doc {i % 7} shares these words and token{i} then {i % 3}") for i in range(60)],
+        "doc_id long, text string",
+    ).repartition(4)
+    rng = np.random.default_rng(0)
+    vecs = spark.createDataFrame(
+        [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(60)],
+        "vec_id long, embedding array<double>",
+    ).repartition(4)
+    edges = spark.createDataFrame(
+        [(i, i + 1 + i % 3) for i in range(500)], "id_a long, id_b long"
+    ).repartition(12)
+    inp, cap, build = {
+        "lsh_jaccard_verified": (
+            texts, dedup._NATIVE_MAX_DOCS, lambda: dedup.lsh_jaccard_verified(texts)
+        ),
+        "connected_components": (
+            edges, dedup._NATIVE_MAX_EDGES, lambda: dedup.connected_components(edges)
+        ),
+        "winnow_overlap_pairs": (
+            texts, dedup._NATIVE_MAX_DOCS, lambda: dedup.winnow_overlap_pairs(texts)
+        ),
+        "containment_pairs": (
+            texts, dedup._NATIVE_MAX_DOCS, lambda: dedup.containment_pairs(texts)
+        ),
+        "train_kmeans": (
+            vecs, sim._NATIVE_MAX_ROWS, lambda: sim.train_kmeans(vecs, k=4, dim=8)
+        ),
+        "pq_train": (
+            vecs, sim._NATIVE_MAX_ROWS, lambda: sim.train_pq(vecs, m=2, ksub=4, dim=8)
+        ),
+        "embedding_neardup_lsh": (
+            vecs,
+            sim._NATIVE_MAX_EMBED_ROWS,
+            lambda: sim.embedding_neardup_lsh(vecs, dim=8, rows_per_band=None),
+        ),
+    }[op]
+    reference = _group_jobs(spark, lambda: inp.limit(cap + 1).toPandas())
+    assert reference >= 1
+    assert _group_jobs(spark, build) <= reference
+
+
+def test_bounded_collect_cap(spark):
+    """``_bounded_collect`` returns every row up to the cap and None past it."""
+    from mariadb_to_graylog_spark.operators.dedup import _bounded_collect
+
+    df = spark.range(10)
+    assert sorted(_bounded_collect(df, 10)["id"]) == list(range(10))
+    assert _bounded_collect(df, 9) is None
+    assert len(_bounded_collect(df.limit(0), 0)) == 0
 
 
 def test_connected_components_string_ids(spark, tmp_path):
