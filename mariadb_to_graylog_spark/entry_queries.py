@@ -702,43 +702,6 @@ FROM c
 """
 
 
-LOG_QUERIES = {
-    "errorlog_entries": q_errorlog_entries,
-    "errorlog_intended": q_errorlog_intended,
-    "errorlog_gelf": q_errorlog_gelf,
-    "routing_counts": q_routing_counts,
-    "severity_histogram": q_severity_histogram,
-    "entry_islands": q_entry_islands,
-    "slowlog_entries": q_slowlog_entries,
-    "offset_limit": q_offset_limit,
-    "resume_hwm": q_resume_hwm,
-    "windowed_counts": q_windowed_counts,
-    "counters": q_counters,
-    "tpch_pricing": q_tpch_pricing,
-    "join_enrich": q_join_enrich,
-    "session_stats": q_session_stats,
-    "event_transitions": q_event_transitions,
-}
-
-LOG_ORACLES = {
-    "errorlog_entries": ORACLE_ERRORLOG_ENTRIES,
-    "errorlog_intended": ORACLE_ERRORLOG_INTENDED,
-    "errorlog_gelf": ORACLE_ERRORLOG_GELF,
-    "routing_counts": ORACLE_ROUTING_COUNTS,
-    "severity_histogram": ORACLE_SEVERITY_HISTOGRAM,
-    "entry_islands": ORACLE_ENTRY_ISLANDS,
-    "slowlog_entries": ORACLE_SLOWLOG_ENTRIES,
-    "offset_limit": ORACLE_OFFSET_LIMIT,
-    "resume_hwm": ORACLE_RESUME_HWM,
-    "windowed_counts": ORACLE_WINDOWED_COUNTS,
-    "counters": ORACLE_COUNTERS,
-    "tpch_pricing": ORACLE_TPCH_PRICING,
-    "join_enrich": ORACLE_JOIN_ENRICH,
-    "session_stats": ORACLE_SESSION_STATS,
-    "event_transitions": ORACLE_EVENT_TRANSITIONS,
-}
-
-
 # ---------------------------------------------------------------------------
 # training-data operators: dedup / similarity / text analysis / multimodal
 # (documents + embeddings tables; duplicates synthesized deterministically)
@@ -3192,6 +3155,7 @@ SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
        COALESCE(h.n_hits, 0) > 0 AS contaminated
 FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
 """
+ORACLE_DECONTAMINATE_BUCKETED = ORACLE_DECONTAMINATE
 
 
 def q_decontaminate_extents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3340,6 +3304,9 @@ def q_decontaminate_coverage_bucketed(spark: SparkSession, sf_dir: str) -> DataF
         "contaminated_tokens",
         "contamination",
     )
+
+
+ORACLE_DECONTAMINATE_COVERAGE_BUCKETED = ORACLE_DECONTAMINATE_COVERAGE
 
 
 def q_trim_contaminated(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6150,210 +6117,6 @@ FROM documents WHERE doc_id % 3 = 2
 """
 
 
-TRAINING_QUERIES = {
-    "dedup_exact": q_dedup_exact,
-    "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-    "dedup_minhash_lsh": q_dedup_minhash_lsh,
-    "dedup_lsh_verified": q_dedup_lsh_verified,
-    "dedup_lsh_estimate": q_dedup_lsh_estimate,
-    "crosslingual_near_dup": q_crosslingual_near_dup,
-    "dedup_groups": q_dedup_groups,
-    "dedup_simhash": q_dedup_simhash,
-    "simhash_pairs": q_simhash_pairs,
-    "simhash_banded": q_simhash_banded,
-    "embed_neardup_lsh": q_embed_neardup_lsh,
-    "knn_bruteforce": q_knn_bruteforce,
-    "knn_ivf": q_knn_ivf,
-    "knn_ivf_trained": q_knn_ivf_trained,
-    "embed_neardup": q_embed_neardup,
-    "lang_id": q_lang_id,
-    "quality_score": q_quality_score,
-    "quality_dup_calibration": q_quality_dup_calibration,
-    "quality_threshold_sweep": q_quality_threshold_sweep,
-    "source_overlap": q_source_overlap,
-    "cdc_chunk_stats": q_cdc_chunk_stats,
-    "token_stats": q_token_stats,
-    "token_stats_bpe": q_token_stats_bpe,
-    "doc_fingerprint": q_doc_fingerprint,
-    "repetition": q_repetition,
-    "pii_redact": q_pii_redact,
-    "sample_det": q_sample_det,
-    "sample_quota": q_sample_quota,
-    "token_rarity": q_token_rarity,
-    "sample_stratified": q_sample_stratified,
-    "winnow_overlap": q_winnow_overlap,
-    "url_extract": q_url_extract,
-    "source_reputation": q_source_reputation,
-    "domain_reputation": q_domain_reputation,
-    "domain_lang_mix": q_domain_lang_mix,
-    "substring_pairs": q_substring_pairs,
-    "substring_run_extents": q_substring_run_extents,
-    "verbatim_coverage": q_verbatim_coverage,
-    "trim_verbatim": q_trim_verbatim,
-    "paragraph_stats": q_paragraph_stats,
-    "paragraph_dedup": q_paragraph_dedup,
-    "paragraph_near_stats": q_paragraph_near_stats,
-    "decontaminate": q_decontaminate,
-    "decontaminate_bucketed": q_decontaminate_bucketed,
-    "decontaminate_extents": q_decontaminate_extents,
-    "decontaminate_coverage": q_decontaminate_coverage,
-    "decontaminate_coverage_bucketed": q_decontaminate_coverage_bucketed,
-    "trim_contaminated": q_trim_contaminated,
-    "trim_loss_by_source": q_trim_loss_by_source,
-    "novelty_by_batch": q_novelty_by_batch,
-    "dedup_rate_sampled": q_dedup_rate_sampled,
-    "unigram_surprisal": q_unigram_surprisal,
-    "incremental_dedup": q_incremental_dedup,
-    "pack_sequences": q_pack_sequences,
-    "source_mixture": q_source_mixture,
-    "dedup_keep_best": q_dedup_keep_best,
-    "dup_cluster_hist": q_dup_cluster_hist,
-    "semantic_dedup": q_semantic_dedup,
-    "training_manifest": q_training_manifest,
-    "knn_pq": q_knn_pq,
-    "knn_ivfpq": q_knn_ivfpq,
-    "token_fertility": q_token_fertility,
-    "key_skew": q_key_skew,
-    "corpus_accounting": q_corpus_accounting,
-    "bloom_prefilter": q_bloom_prefilter,
-    "cluster_source_mix": q_cluster_source_mix,
-    "embedding_drift": q_embedding_drift,
-    "prefix_dup_stats": q_prefix_dup_stats,
-    "padding_waste": q_padding_waste,
-    "data_split": q_data_split,
-    "fuzzy_decontam": q_fuzzy_decontam,
-    "semantic_decontam": q_semantic_decontam,
-    "containment_pairs": q_containment_pairs,
-    "dsir_weights": q_dsir_weights,
-    "paragraph_lang_mix": q_paragraph_lang_mix,
-    "incremental_neardup": q_incremental_neardup,
-    "url_variants": q_url_variants,
-    "image_ahash_groups": q_image_ahash_groups,
-    "html_extract": q_html_extract,
-    "audio_fp_groups": q_audio_fp_groups,
-    "contamination_report": q_contamination_report,
-    "nfc_dedup": q_nfc_dedup,
-    "pack_segments": q_pack_segments,
-    "web_ingest_pipeline": q_web_ingest_pipeline,
-    "json_props": q_json_props,
-    "tfidf_keywords": q_tfidf_keywords,
-    "timeseries_gapfill": q_timeseries_gapfill,
-    "char_entropy": q_char_entropy,
-    "lang_confusion": q_lang_confusion,
-    "dup_cluster_provenance": q_dup_cluster_provenance,
-    "bpe_merges": q_bpe_merges,
-    "bigram_novelty": q_bigram_novelty,
-    "lsh_planner": q_lsh_planner,
-    "vocab_coverage": q_vocab_coverage,
-    "curation_pipeline": q_curation_pipeline,
-    "curation_trim_pipeline": q_curation_trim_pipeline,
-    "token_percentiles": q_token_percentiles,
-    "multimodal_meta": q_multimodal_meta,
-    "frame_sample": q_frame_sample,
-}
-
-TRAINING_ORACLES = {
-    "dedup_exact": ORACLE_DEDUP_EXACT,
-    "dedup_ngram_jaccard": ORACLE_DEDUP_NGRAM_JACCARD,
-    "dedup_minhash_lsh": ORACLE_DEDUP_MINHASH_LSH,
-    "dedup_lsh_verified": ORACLE_DEDUP_LSH_VERIFIED,
-    "dedup_lsh_estimate": ORACLE_DEDUP_LSH_ESTIMATE,
-    "crosslingual_near_dup": ORACLE_CROSSLINGUAL_NEAR_DUP,
-    "dedup_groups": ORACLE_DEDUP_GROUPS,
-    "dedup_simhash": ORACLE_DEDUP_SIMHASH,
-    "simhash_pairs": ORACLE_SIMHASH_PAIRS,
-    "simhash_banded": ORACLE_SIMHASH_BANDED,
-    "embed_neardup_lsh": ORACLE_EMBED_NEARDUP_LSH,
-    "knn_bruteforce": ORACLE_KNN_BRUTEFORCE,
-    "knn_ivf": ORACLE_KNN_IVF,
-    "knn_ivf_trained": ORACLE_KNN_IVF_TRAINED,
-    "embed_neardup": ORACLE_EMBED_NEARDUP,
-    "lang_id": ORACLE_LANG_ID,
-    "quality_score": ORACLE_QUALITY_SCORE,
-    "quality_dup_calibration": ORACLE_QUALITY_DUP_CALIBRATION,
-    "quality_threshold_sweep": ORACLE_QUALITY_THRESHOLD_SWEEP,
-    "source_overlap": ORACLE_SOURCE_OVERLAP,
-    "cdc_chunk_stats": ORACLE_CDC_CHUNK_STATS,
-    "token_stats": ORACLE_TOKEN_STATS,
-    "token_stats_bpe": ORACLE_TOKEN_STATS_BPE,
-    "doc_fingerprint": ORACLE_DOC_FINGERPRINT,
-    "repetition": ORACLE_REPETITION,
-    "pii_redact": ORACLE_PII_REDACT,
-    "sample_det": ORACLE_SAMPLE_DET,
-    "sample_quota": ORACLE_SAMPLE_QUOTA,
-    "token_rarity": ORACLE_TOKEN_RARITY,
-    "sample_stratified": ORACLE_SAMPLE_STRATIFIED,
-    "winnow_overlap": ORACLE_WINNOW_OVERLAP,
-    "url_extract": ORACLE_URL_EXTRACT,
-    "source_reputation": ORACLE_SOURCE_REPUTATION,
-    "domain_reputation": ORACLE_DOMAIN_REPUTATION,
-    "domain_lang_mix": ORACLE_DOMAIN_LANG_MIX,
-    "substring_pairs": ORACLE_SUBSTRING_PAIRS,
-    "substring_run_extents": ORACLE_SUBSTRING_RUN_EXTENTS,
-    "verbatim_coverage": ORACLE_VERBATIM_COVERAGE,
-    "trim_verbatim": ORACLE_TRIM_VERBATIM,
-    "paragraph_stats": ORACLE_PARAGRAPH_STATS,
-    "paragraph_dedup": ORACLE_PARAGRAPH_DEDUP,
-    "paragraph_near_stats": ORACLE_PARAGRAPH_NEAR_STATS,
-    "decontaminate": ORACLE_DECONTAMINATE,
-    "decontaminate_bucketed": ORACLE_DECONTAMINATE,
-    "decontaminate_extents": ORACLE_DECONTAMINATE_EXTENTS,
-    "decontaminate_coverage": ORACLE_DECONTAMINATE_COVERAGE,
-    "decontaminate_coverage_bucketed": ORACLE_DECONTAMINATE_COVERAGE,
-    "trim_contaminated": ORACLE_TRIM_CONTAMINATED,
-    "trim_loss_by_source": ORACLE_TRIM_LOSS_BY_SOURCE,
-    "novelty_by_batch": ORACLE_NOVELTY_BY_BATCH,
-    "dedup_rate_sampled": ORACLE_DEDUP_RATE_SAMPLED,
-    "unigram_surprisal": ORACLE_UNIGRAM_SURPRISAL,
-    "incremental_dedup": ORACLE_INCREMENTAL_DEDUP,
-    "pack_sequences": ORACLE_PACK_SEQUENCES,
-    "source_mixture": ORACLE_SOURCE_MIXTURE,
-    "dedup_keep_best": ORACLE_DEDUP_KEEP_BEST,
-    "dup_cluster_hist": ORACLE_DUP_CLUSTER_HIST,
-    "semantic_dedup": ORACLE_SEMANTIC_DEDUP,
-    "training_manifest": ORACLE_TRAINING_MANIFEST,
-    "knn_pq": ORACLE_KNN_PQ,
-    "knn_ivfpq": ORACLE_KNN_IVFPQ,
-    "token_fertility": ORACLE_TOKEN_FERTILITY,
-    "key_skew": ORACLE_KEY_SKEW,
-    "corpus_accounting": ORACLE_CORPUS_ACCOUNTING,
-    "bloom_prefilter": ORACLE_BLOOM_PREFILTER,
-    "cluster_source_mix": ORACLE_CLUSTER_SOURCE_MIX,
-    "embedding_drift": ORACLE_EMBEDDING_DRIFT,
-    "prefix_dup_stats": ORACLE_PREFIX_DUP_STATS,
-    "padding_waste": ORACLE_PADDING_WASTE,
-    "data_split": ORACLE_DATA_SPLIT,
-    "fuzzy_decontam": ORACLE_FUZZY_DECONTAM,
-    "semantic_decontam": ORACLE_SEMANTIC_DECONTAM,
-    "containment_pairs": ORACLE_CONTAINMENT_PAIRS,
-    "dsir_weights": ORACLE_DSIR_WEIGHTS,
-    "paragraph_lang_mix": ORACLE_PARAGRAPH_LANG_MIX,
-    "incremental_neardup": ORACLE_INCREMENTAL_NEARDUP,
-    "url_variants": ORACLE_URL_VARIANTS,
-    "image_ahash_groups": ORACLE_IMAGE_AHASH_GROUPS,
-    "html_extract": ORACLE_HTML_EXTRACT,
-    "audio_fp_groups": ORACLE_AUDIO_FP_GROUPS,
-    "contamination_report": ORACLE_CONTAMINATION_REPORT,
-    "nfc_dedup": ORACLE_NFC_DEDUP,
-    "pack_segments": ORACLE_PACK_SEGMENTS,
-    "web_ingest_pipeline": ORACLE_WEB_INGEST_PIPELINE,
-    "json_props": ORACLE_JSON_PROPS,
-    "tfidf_keywords": ORACLE_TFIDF_KEYWORDS,
-    "timeseries_gapfill": ORACLE_TIMESERIES_GAPFILL,
-    "char_entropy": ORACLE_CHAR_ENTROPY,
-    "lang_confusion": ORACLE_LANG_CONFUSION,
-    "dup_cluster_provenance": ORACLE_DUP_CLUSTER_PROVENANCE,
-    "bpe_merges": ORACLE_BPE_MERGES,
-    "bigram_novelty": ORACLE_BIGRAM_NOVELTY,
-    "lsh_planner": ORACLE_LSH_PLANNER,
-    "vocab_coverage": ORACLE_VOCAB_COVERAGE,
-    "curation_pipeline": ORACLE_CURATION_PIPELINE,
-    "curation_trim_pipeline": ORACLE_CURATION_TRIM_PIPELINE,
-    "token_percentiles": ORACLE_TOKEN_PERCENTILES,
-    "multimodal_meta": ORACLE_MULTIMODAL_META,
-    "frame_sample": ORACLE_FRAME_SAMPLE,
-}
-
 # --------------------------------------------------------------------------
 # Driver-correctness window rotation.
 #
@@ -6461,6 +6224,17 @@ def _rotate_for_driver(queries: dict, priority: list) -> dict:
     return {**head, **tail}
 
 
-_MERGED_QUERIES = {**LOG_QUERIES, **TRAINING_QUERIES}
-ALL_QUERIES = _rotate_for_driver(_MERGED_QUERIES, _DRIVER_PRIORITY)
-ALL_ORACLES = {**LOG_ORACLES, **TRAINING_ORACLES}
+# One declaration per query: ``q_<name>`` is the Spark side and
+# ``ORACLE_<NAME>`` its DuckDB twin; both registries are read off the module
+# namespace, so a query cannot be registered without its oracle.
+ALL_QUERIES = _rotate_for_driver(
+    {k[2:]: v for k, v in globals().items() if k.startswith("q_")},
+    _DRIVER_PRIORITY,
+)
+ALL_ORACLES = {
+    k[7:].lower(): v for k, v in globals().items() if k.startswith("ORACLE_")
+}
+assert set(ALL_QUERIES) == set(ALL_ORACLES), (
+    "queries without an oracle / oracles without a query: "
+    f"{sorted(set(ALL_QUERIES) ^ set(ALL_ORACLES))}"
+)

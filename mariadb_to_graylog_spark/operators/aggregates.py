@@ -2,11 +2,13 @@
 
 The reference's only aggregation is its in-memory request counters
 (lib_consumer/request_counters.py:39-67).  The north-rule adds per-sink
-routed counts and per-source severity histograms; both are plain hash
-aggregations -- partial (map-side) + final aggregation come free from
+routed counts and per-source severity histograms, both read off one plain
+hash aggregation -- partial (map-side) + final aggregation come free from
 Catalyst, so no explicit salting is needed here even for hot keys: the
-cardinality of (sink) and (source, severity) is tiny and the partial agg
-absorbs the skew before the shuffle.
+cardinality of (sink, source, severity) is tiny and the partial agg
+absorbs the skew before the shuffle.  The job's row totals come from an
+``observe()`` on the write action (jobs/run_pipeline.py), not a separate
+aggregate.
 """
 
 from __future__ import annotations
@@ -15,16 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def sink_counts(routed: DataFrame) -> DataFrame:
-    return routed.groupBy("sink").agg(F.count(F.lit(1)).alias("n"))
-
-
-def severity_histogram(routed: DataFrame, source_col: str = "source") -> DataFrame:
-    return routed.groupBy(source_col, "severity").agg(F.count(F.lit(1)).alias("n"))
-
-
 def combined_counts(routed: DataFrame) -> DataFrame:
-    """One-pass (sink, source, severity) counts: sink_counts and the
+    """One-pass (sink, source, severity) counts: per-sink counts and the
     severity histogram both derive from this single aggregate, so a full
     metrics pass over routed events costs ONE shuffle of a tiny keyspace --
     no caching of the fat routed rows needed (at 100 TB, persisting routed
@@ -34,11 +28,3 @@ def combined_counts(routed: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("n")
     )
 
-
-def run_counters(routed: DataFrame) -> DataFrame:
-    """Global counters: rows routed / dropped (A1 analogue, one row)."""
-    return routed.agg(
-        F.count(F.lit(1)).alias("rows_total"),
-        F.sum((F.col("sink") != "dropped").cast("long")).alias("rows_routed"),
-        F.sum((F.col("sink") == "dropped").cast("long")).alias("rows_dropped"),
-    )

@@ -11,22 +11,83 @@ Two physical strategies, same result (tested equal):
 * ``add_entry_ids`` -- one window ``sum() over (partition by conv_id order
   by turn_idx)``.  Correct and minimal-shuffle, but a single hot
   conversation serializes into one task.
-* ``add_entry_ids_scalable`` -- two-phase distributed prefix sum: each
-  conversation is split into fixed ``turn_idx`` blocks; block-local running
-  counts are computed in parallel, per-block totals are scanned with a
-  (tiny) second window, and the per-block offsets are joined back.  A
-  conversation with 10^8 turns becomes ``10^8 / block_size`` independent
-  tasks instead of one.  This is the 100 TB path for Zipf-skewed
-  conversation length (the north-rule's "salted-key repartitioning to
-  defuse hot-conversation skew").
+* ``add_entry_ids_scalable`` -- two-phase distributed prefix sum
+  (:func:`scan_layer`): each conversation is split into fixed
+  ``turn_idx`` blocks; block-local running counts are computed in
+  parallel, per-block totals are scanned with a second window over the
+  much smaller block relation, and the per-block carries are joined
+  back.  A conversation with 10^8 turns becomes ``10^8 / block_size``
+  independent tasks instead of one.  This is the 100 TB path for
+  Zipf-skewed conversation length (the north-rule's "salted-key
+  repartitioning to defuse hot-conversation skew").  The slow-log block
+  classifier (operators/slowlog.py) chains the same kernel.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 DEFAULT_BLOCK_SIZE = 1 << 16
+
+
+def scan_layer(
+    df: DataFrame,
+    specs: list[tuple[str, Column, str, bool]],
+    conv_col: str,
+    order_col: str,
+    block_col: str = "_blk",
+) -> DataFrame:
+    """One layer of distributed prefix scans over (conv, order): each spec
+    (name, value, kind 'sum'|'max', exclusive) becomes a running aggregate
+    computed as block-local window + per-block carry, over the existing
+    ``block_col`` column.
+
+    The carries relation has one row per (conv, block) -- rows/block_size
+    for a hot conversation, but at least one per conversation, so it is
+    NOT small on many-conversation input and its join strategy is left to
+    AQE.  Multiple specs share one groupBy.
+    """
+    w_incl = (
+        Window.partitionBy(conv_col, block_col)
+        .orderBy(order_col)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    w_excl = (
+        Window.partitionBy(conv_col, block_col)
+        .orderBy(order_col)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    w_carry = (
+        Window.partitionBy(conv_col)
+        .orderBy(block_col)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    aggs, carry_cols = [], []
+    for name, value, kind, exclusive in specs:
+        df = df.withColumn(f"_v_{name}", value)
+        fn = F.sum if kind == "sum" else F.max
+        df = df.withColumn(
+            f"_loc_{name}", fn(f"_v_{name}").over(w_excl if exclusive else w_incl)
+        )
+        aggs.append(fn(f"_v_{name}").alias(f"_tot_{name}"))
+        carry_cols.append(fn(f"_tot_{name}").over(w_carry).alias(f"_carry_{name}"))
+    totals = df.groupBy(conv_col, block_col).agg(*aggs)
+    carries = totals.select(conv_col, block_col, *carry_cols)
+    df = df.join(carries, [conv_col, block_col], "left")
+    for name, _, kind, _ in specs:
+        if kind == "sum":
+            combined = F.coalesce(f"_loc_{name}", F.lit(0)) + F.coalesce(
+                f"_carry_{name}", F.lit(0)
+            )
+        else:
+            # greatest() skips NULLs: null local (no value yet in block)
+            # falls back to the carry, and vice versa
+            combined = F.greatest(f"_loc_{name}", f"_carry_{name}")
+        df = df.withColumn(name, combined).drop(
+            f"_v_{name}", f"_loc_{name}", f"_carry_{name}"
+        )
+    return df
 
 
 def add_entry_ids(
@@ -52,36 +113,13 @@ def add_entry_ids_scalable(
 ) -> DataFrame:
     """Distributed prefix sum over (conv_id, turn_idx) -- see module doc."""
     blocked = df.withColumn("_block", F.floor(F.col(order_col) / F.lit(block_size)))
-
-    w_local = (
-        Window.partitionBy(conv_col, "_block")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    blocked = blocked.withColumn(
-        "_local_cum", F.sum(F.col(start_col).cast("long")).over(w_local)
-    )
-
-    # Per-block totals: tiny relation (rows / block_size), scanned with an
-    # exclusive prefix window per conversation.
-    totals = blocked.groupBy(conv_col, "_block").agg(
-        F.sum(F.col(start_col).cast("long")).alias("_block_total")
-    )
-    w_blocks = (
-        Window.partitionBy(conv_col)
-        .orderBy("_block")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.select(
+    return scan_layer(
+        blocked,
+        [("entry_id", F.col(start_col).cast("long"), "sum", False)],
         conv_col,
-        "_block",
-        F.coalesce(F.sum("_block_total").over(w_blocks), F.lit(0)).alias("_block_offset"),
-    )
-
-    joined = blocked.join(offsets, on=[conv_col, "_block"], how="inner")
-    return joined.withColumn(
-        "entry_id", F.col("_block_offset") + F.col("_local_cum")
-    ).drop("_block", "_local_cum", "_block_offset")
+        order_col,
+        block_col="_block",
+    ).drop("_block")
 
 
 def with_entry_ids(

@@ -442,7 +442,7 @@ def cdc_chunks_pandas(window: int = 8, boundary_mod: int = 64):
     """Arrow-batched numpy twin of ``cdc_chunks``: identical chunk
     strings, the rolling hash vectorized to ``window`` numpy ops per
     document instead of len x window interpreted lambda steps -- the
-    default chunker in ``cdc_chunk_stats`` (the HOF expression remains
+    chunker of ``cdc_chunk_stats`` (the HOF expression remains
     the oracle reference; equality asserted in tests)."""
     from pyspark.sql.functions import pandas_udf
 
@@ -462,7 +462,6 @@ def cdc_chunk_stats(
     min_docs: int = 2,
     exact: bool = True,
     rsd: float = 0.02,
-    chunker: str = "pandas",
 ) -> DataFrame:
     """Chunk-level duplication profile over content-defined chunks:
 
@@ -476,17 +475,11 @@ def cdc_chunk_stats(
     sketch, same as the paragraph twin.  Docs whose normalized text is
     empty contribute no rows.
 
-    ``chunker="pandas"`` (default) runs the Arrow-batched numpy chunker
-    (the interpreted per-char HOF fold measured ~4x the wall at ladder
-    scale); ``"hof"`` selects the pure-expression twin -- the oracle
-    reference, asserted chunk-identical in tests."""
-    if chunker not in ("pandas", "hof"):
-        raise ValueError(f"chunker must be 'pandas' or 'hof', got {chunker!r}")
-    chunk_col = (
-        cdc_chunks_pandas(window, boundary_mod)(F.col(text_col))
-        if chunker == "pandas"
-        else cdc_chunks(F.col(text_col), window, boundary_mod)
-    )
+    Chunks come from the Arrow-batched numpy chunker
+    (:func:`cdc_chunks_pandas`; the interpreted per-char HOF fold
+    :func:`cdc_chunks` measured ~4x the wall at ladder scale and stays as
+    the reference, asserted chunk-identical in tests)."""
+    chunk_col = cdc_chunks_pandas(window, boundary_mod)(F.col(text_col))
     ch = df.select(
         F.col(id_col).alias("doc_id"),
         F.explode(chunk_col).alias("ch"),
@@ -1522,30 +1515,9 @@ def connected_components(
     max_iters: int = 50,
     checkpoint_dir: str | None = None,
     jump_after: int = 4,
-    algorithm: str = "label",
 ) -> DataFrame:
     """(id, component) for every node in the edge list, component = MIN id
-    reachable.  ``algorithm`` selects the iteration scheme behind the same
-    contract (identical output, tested equal):
-
-    * ``"label"`` (default) -- min-label propagation with adaptive pointer
-      jumping, described below;
-    * ``"star"`` -- alternating LARGE-STAR / SMALL-STAR contraction (the
-      Kiveris et al. "Connected Components in MapReduce and Beyond"
-      scheme): each round rewires every node's strictly-larger neighbors
-      (large-star), then its smaller neighbors plus itself (small-star),
-      to the neighborhood minimum.  The EDGE SET itself contracts toward
-      one star per component, so round cost SHRINKS as the graph
-      collapses (label propagation re-joins the full edge list every
-      round); convergence is O(log^2 n) rounds on any graph with no
-      pointer-jump special case, and the heuristic edge-sum convergence
-      probe is backed by an EXACTNESS CERTIFICATE (every original edge's
-      endpoints must share a label) before anything is returned.
-      Measured head-to-head in
-      BENCH/DEDUP.md (tools/bench_dedup_scale.py --cc-compare); label
-      propagation stays the default on dedup-shaped (shallow) graphs.
-
-    The label scheme, per round:
+    reachable, by min-label propagation with adaptive pointer jumping:
 
     * each round: ONE shuffle join (labels into the symmetric edge list),
       ONE groupBy-min over (neighbor messages UNION own label) -- the
@@ -1597,8 +1569,8 @@ def connected_components(
 
     Edge lists that :func:`_bounded_collect` admits (``_NATIVE_MAX_EDGES``)
     with no NULL endpoint skip the iteration for driver-side union-find
-    (:func:`_cc_native`, identical labels) when ``algorithm="label"`` and
-    no ``checkpoint_dir`` is given.
+    (:func:`_cc_native`, identical labels) when no ``checkpoint_dir`` is
+    given.
     """
     if checkpoint_dir is not None:
         import uuid as _uuid
@@ -1635,9 +1607,7 @@ def connected_components(
     integral = isinstance(
         id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
     ) or (isinstance(id_type, T.DecimalType) and id_type.scale == 0)
-    if algorithm not in ("label", "star"):
-        raise ValueError(f"algorithm must be 'label' or 'star', got {algorithm!r}")
-    if checkpoint_dir is None and algorithm == "label":
+    if checkpoint_dir is None:
         # bounded-edge fast path (see _cc_native): collect the edge list
         # (_bounded_collect), union-find on the driver.  NULL endpoints
         # (SQL join semantics never connect them) and the
@@ -1709,96 +1679,6 @@ def connected_components(
                 )
             )
 
-        if algorithm == "star":
-            E = _ckpt(
-                edges.filter(F.col("id_a") != F.col("id_b"))
-                .select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-                .distinct()
-            )
-
-            def _star(e: DataFrame, large: bool) -> DataFrame:
-                # symmetric neighborhoods; m = min(N(u) + {u}); large-star
-                # rewires strictly-larger neighbors to m, small-star the
-                # smaller ones plus u itself (self-loops dropped)
-                s = e.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
-                    e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-                )
-                j = s.join(s.groupBy("u").agg(F.min("v").alias("_mn")), "u")
-                m = F.least(F.col("_mn"), F.col("u"))
-                if large:
-                    out = j.filter(F.col("v") > F.col("u")).select(
-                        F.col("v").alias("a"), m.alias("b")
-                    )
-                else:
-                    out = j.filter(F.col("v") < F.col("u")).select(
-                        F.col("v").alias("a"), m.alias("b")
-                    ).union(j.select(F.col("u").alias("a"), m.alias("b")))
-                return out.filter(F.col("a") != F.col("b")).distinct()
-
-            # convergence = the (count, sum a, sum b) triple is stationary:
-            # both stars replace endpoints by neighborhood minima, so the
-            # edge multiset only contracts; at the star fixpoint a
-            # large+small round is the identity and the triple freezes
-            _esig = lambda d: d.agg(  # noqa: E731
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("a").cast("decimal(38,0)")).alias("sa"),
-                F.sum(F.col("b").cast("decimal(38,0)")).alias("sb"),
-            ).first()
-            prev_e = _esig(E)
-            for _ in range(max_iters):
-                E = _ckpt(_star(_star(E, True), False))
-                cur_e = _esig(E)
-                if cur_e == prev_e:
-                    labels = (
-                        E.select(F.col("a").alias("id"), F.col("b").alias("label"))
-                        .union(
-                            E.select(F.col("b").alias("id"), F.col("b").alias("label"))
-                        )
-                        .groupBy("id")
-                        .agg(F.min("label").alias("label"))
-                    )
-                    # exactness CERTIFICATE: the triple probe is
-                    # necessary-but-heuristic (a multiset coincidence
-                    # could freeze it early), so before returning verify
-                    # the true CC invariant -- both endpoints of every
-                    # ORIGINAL edge carry the same label.  One join, paid
-                    # only at claimed convergence; on failure keep
-                    # iterating instead of returning silently-partial
-                    # components (the worst dedup failure mode).
-                    la = labels.select(
-                        F.col("id").alias("id_a"), F.col("label").alias("_la")
-                    )
-                    lb = labels.select(
-                        F.col("id").alias("id_b"), F.col("label").alias("_lb")
-                    )
-                    inconsistent = (
-                        edges.join(la, "id_a")
-                        .join(lb, "id_b")
-                        .filter(F.col("_la") != F.col("_lb"))
-                        .limit(1)
-                        .count()
-                    )
-                    if inconsistent:
-                        prev_e = cur_e
-                        continue
-                    # nodes whose only edges were self-pairs vanished with
-                    # the self-loop filter; restore them as singletons so
-                    # both algorithms label every node in the edge list
-                    all_nodes = (
-                        edges.select(F.col("id_a").alias("id"))
-                        .union(edges.select(F.col("id_b").alias("id")))
-                        .distinct()
-                    )
-                    labels = all_nodes.join(labels, "id", "left").select(
-                        "id", F.coalesce("label", F.col("id")).alias("label")
-                    )
-                    return _finish(
-                        _ckpt(labels).withColumnRenamed("label", "component")
-                    )
-                prev_e = cur_e
-            raise RuntimeError(
-                f"connected_components(star) did not converge in {max_iters} rounds"
-            )
         sym = (
             edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
             .union(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
@@ -2243,17 +2123,15 @@ def winnow_overlap_pairs(
     select_every: int = 4,
     min_overlap: float = 0.5,
     max_hash_df: int | None = None,
-    use_pandas: bool = True,
 ) -> DataFrame:
     """Containment/overlap candidate pairs from winnowing sketches
     (textstats.winnow_fingerprint): explode each document's selected
     rolling-hash sketch, bucket-join on the hash, count shared hashes per
     pair, and score ``overlap = shared / min(|sketch_a|, |sketch_b|)``.
 
-    ``use_pandas`` (default) computes the sketch with the Arrow-batched
-    numpy twin (~10x the interpreted-HOF fold's throughput, identical
-    integers -- tested equal and oracle-checked); False keeps the pure
-    JVM-expression path.
+    The sketch comes from the Arrow-batched numpy twin of
+    ``winnow_fingerprint`` (~10x the interpreted-HOF fold's throughput,
+    identical integers -- tested equal and oracle-checked).
 
     The min-denominator makes this a CONTAINMENT score: a short document
     pasted into a long one shares most of the short side's sketch, so the
@@ -2287,14 +2165,10 @@ def winnow_overlap_pairs(
     """
     from mariadb_to_graylog_spark.operators.textstats import (
         normalize_text,
-        winnow_fingerprint,
         winnow_fingerprint_pandas,
     )
 
-    if use_pandas:
-        sketch = winnow_fingerprint_pandas(window, select_every)(F.col(text_col))
-    else:
-        sketch = winnow_fingerprint(F.col(text_col), window, select_every)
+    sketch = winnow_fingerprint_pandas(window, select_every)(F.col(text_col))
     # id type preserved (like every sibling pair operator): a cast-to-long
     # here silently nulled string ids and dropped every pair
     sk = df.select(

@@ -151,7 +151,13 @@ def _cos_matrix_seqfold(v64: "np.ndarray", cmat: "np.ndarray") -> "np.ndarray":
     ``0.0 + x_0*y_0 + x_1*y_1 + ...`` is reproduced by accumulating one
     dimension at a time (vectorized across rows), so every double is
     bit-identical to the JVM/DuckDB fold -- numpy's pairwise-summed
-    ``dot`` would NOT be."""
+    ``dot`` would NOT be.
+
+    A zero denominator (a zero-norm vector or centroid) is SQL NULL in
+    both engines (``x / 0.0``), so it scores ``-inf``: every argmax skips
+    it, and an all-NULL row falls to the lowest cid, as under the
+    oracle's ``ORDER BY cs DESC, cid`` (NULLs last).  A NaN input still
+    scores NaN."""
     n, dim = v64.shape
     k = cmat.shape[0]
     dots = np.zeros((n, k))
@@ -163,7 +169,9 @@ def _cos_matrix_seqfold(v64: "np.ndarray", cmat: "np.ndarray") -> "np.ndarray":
     nb = np.zeros(k)
     for j in range(dim):
         nb = nb + cmat[:, j] * cmat[:, j]
-    return dots / (np.sqrt(na)[:, None] * np.sqrt(nb)[None, :])
+    den = np.sqrt(na)[:, None] * np.sqrt(nb)[None, :]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(den == 0.0, -np.inf, dots / den)
 
 
 def _argmax_spark(scores: "np.ndarray", cids: "np.ndarray") -> "np.ndarray":

@@ -27,10 +27,8 @@ Reference semantics preserved:
   falsy at flush, :947-948).
 * META metric extraction (P9) is *declared but unimplemented* in the
   reference (_metrics at :86-106 stays empty; TODO.md:9); this engine
-  implements the intended extraction for all 18 fields, in two equivalent
-  flavors: JVM-side ``regexp_extract`` columns (default) and an
-  Arrow-vectorized pandas UDF (``extract_metrics_udf``) -- tested equal,
-  benchmarked in bench.py.
+  implements the intended extraction for all 18 fields as JVM-side
+  ``regexp_extract`` columns (no Python UDF on the batch path).
 
 Headers before the first entry are dropped (reference state ``None``,
 :937-939).  A ``'# '`` comment line appearing before any entry would crash
@@ -40,12 +38,10 @@ drop such lines, divergence documented here.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from mariadb_to_graylog_spark.operators.assembly import scan_layer
 from mariadb_to_graylog_spark.operators.fingerprint import fingerprint_col
 
 # field -> (regex over a META line, cast type); '' group => no match => NULL.
@@ -156,63 +152,6 @@ def classify_slow_log_lines(
     )
 
 
-def _scan_layer(
-    df: DataFrame,
-    specs: list[tuple[str, Column, str, bool]],
-    conv_col: str,
-    order_col: str,
-    block_col: str = "_blk",
-) -> DataFrame:
-    """One layer of distributed prefix scans over (conv, order): each spec
-    (name, value, kind 'sum'|'max', exclusive) becomes a running aggregate
-    computed as block-local window + per-block carry.
-
-    The carries relation has rows/block_size rows and is BROADCAST back,
-    so the big relation is shuffled/sorted on (conv, block) once for the
-    whole layer chain and never again.  Multiple specs share one groupBy.
-    """
-    w_incl = (
-        Window.partitionBy(conv_col, block_col)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_excl = (
-        Window.partitionBy(conv_col, block_col)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_carry = (
-        Window.partitionBy(conv_col)
-        .orderBy(block_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    aggs, carry_cols = [], []
-    for name, value, kind, exclusive in specs:
-        df = df.withColumn(f"_v_{name}", value)
-        fn = F.sum if kind == "sum" else F.max
-        df = df.withColumn(
-            f"_loc_{name}", fn(f"_v_{name}").over(w_excl if exclusive else w_incl)
-        )
-        aggs.append(fn(f"_v_{name}").alias(f"_tot_{name}"))
-        carry_cols.append(fn(f"_tot_{name}").over(w_carry).alias(f"_carry_{name}"))
-    totals = df.groupBy(conv_col, block_col).agg(*aggs)
-    carries = totals.select(conv_col, block_col, *carry_cols)
-    df = df.join(F.broadcast(carries), [conv_col, block_col], "left")
-    for name, _, kind, _ in specs:
-        if kind == "sum":
-            combined = F.coalesce(f"_loc_{name}", F.lit(0)) + F.coalesce(
-                f"_carry_{name}", F.lit(0)
-            )
-        else:
-            # greatest() skips NULLs: null local (no value yet in block)
-            # falls back to the carry, and vice versa
-            combined = F.greatest(f"_loc_{name}", f"_carry_{name}")
-        df = df.withColumn(name, combined).drop(
-            f"_v_{name}", f"_loc_{name}", f"_carry_{name}"
-        )
-    return df
-
-
 def classify_slow_log_lines_scalable(
     df: DataFrame,
     conv_col: str = "conv_id",
@@ -247,7 +186,8 @@ def classify_slow_log_lines_scalable(
     # across blocks whose rows were all blank-filtered or absent from a
     # turn_idx gap, misclassifying the next block's first rows as a
     # conversation start); null at conversation start.  The edge relation
-    # is one row per (conv, block) -- tiny, broadcast.
+    # is one row per (conv, block) -- at least one row per conversation,
+    # so its join strategy is left to AQE.
     w_local = Window.partitionBy(conv_col, "_blk").orderBy(order_col)
     w_edge = Window.partitionBy(conv_col).orderBy("_blk")
     edges = (
@@ -258,14 +198,14 @@ def classify_slow_log_lines_scalable(
             F.lag("_last_hash").over(w_edge).alias("_edge_hash"),
         )
     )
-    out = out.join(F.broadcast(edges), [conv_col, "_blk"], "left")
+    out = out.join(edges, [conv_col, "_blk"], "left")
     prev_hash = F.coalesce(F.lag("_is_hash").over(w_local), F.col("_edge_hash"))
     run_start = F.col("_is_hash") & F.coalesce(~prev_hash, F.lit(True))
     out = out.withColumn("_run_start", run_start).drop("_edge_hash")
 
     # layer 1: run-start turn (inclusive max) + previous Time turn
     # (exclusive max)
-    out = _scan_layer(
+    out = scan_layer(
         out,
         [
             ("_run_start_turn", F.when(F.col("_run_start"), F.col(order_col)), "max", False),
@@ -284,7 +224,7 @@ def classify_slow_log_lines_scalable(
     )
 
     # layer 2: entry ids (sum) + turn of the current entry's start (max)
-    out = _scan_layer(
+    out = scan_layer(
         out,
         [
             ("entry_id", F.col("is_entry_start").cast("long"), "sum", False),
@@ -299,13 +239,13 @@ def classify_slow_log_lines_scalable(
     ).withColumn("is_sql", ~F.col("is_meta"))
 
     # layer 3: running SQL-line count
-    out = _scan_layer(
+    out = scan_layer(
         out, [("_sql_cum", F.col("is_sql").cast("long"), "sum", False)],
         conv_col, order_col,
     )
     # layer 4: the entry's base SQL count (running max of the count AT
     # entry starts -- monotone, so max == most recent)
-    out = _scan_layer(
+    out = scan_layer(
         out,
         [("_entry_base", F.when(F.col("is_entry_start"), F.col("_sql_cum")), "max", False)],
         conv_col, order_col,
@@ -329,40 +269,11 @@ def _meta_extract_cols(line: Column) -> list[Column]:
     return cols
 
 
-def extract_metrics_udf(df: DataFrame, line_col: str = "line") -> DataFrame:
-    """Arrow-vectorized alternative to the JVM regexp columns: one pandas
-    batch pass, ``Series.str.extract`` per field (P9's intended grok)."""
-    from pyspark.sql import types as T
-
-    fields = list(META_FIELD_PATTERNS.items())
-    _typ = {"string": T.StringType(), "long": T.LongType(), "double": T.DoubleType()}
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField(f"_m_{n}", _typ[t], True) for n, (_, t) in fields]
-    )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            s = pdf[line_col]
-            for name, (pat, typ) in fields:
-                v = s.str.extract(pat, expand=False)
-                if typ == "long":
-                    pdf[f"_m_{name}"] = pd.to_numeric(v, errors="coerce").astype("Int64")
-                elif typ == "double":
-                    pdf[f"_m_{name}"] = pd.to_numeric(v, errors="coerce")
-                else:
-                    pdf[f"_m_{name}"] = v
-            yield pdf
-
-    return df.mapInPandas(extract, schema=schema)
-
-
 def assemble_slow_entries(
     classified: DataFrame,
     conv_col: str = "conv_id",
     order_col: str = "turn_idx",
     emit_trailing: bool = False,
-    use_pandas_udf: bool = False,
 ) -> DataFrame:
     """Group classified lines into slow-log entries (P7-P10)."""
     df = classified
@@ -400,19 +311,9 @@ def assemble_slow_entries(
         "_time_line_ts", F.when(F.col("is_entry_start"), F.coalesce(t_f2, t_iso))
     )
 
-    if use_pandas_udf:
-        meta_in = df.withColumn(
-            "_meta_line", F.when(F.col("is_meta"), F.col("line"))
-        )
-        extracted = extract_metrics_udf(meta_in, line_col="_meta_line")
-        metric_aggs = [
-            F.max(f"_m_{n}").alias(n) for n in METRIC_COLS
-        ]
-        df = extracted
-    else:
-        meta_line = F.when(F.col("is_meta"), F.col("line"))
-        df = df.select("*", *_meta_extract_cols(meta_line))
-        metric_aggs = [F.max(f"_m_{n}").alias(n) for n in METRIC_COLS]
+    meta_line = F.when(F.col("is_meta"), F.col("line"))
+    df = df.select("*", *_meta_extract_cols(meta_line))
+    metric_aggs = [F.max(f"_m_{n}").alias(n) for n in METRIC_COLS]
 
     sql_struct = F.when(
         F.col("is_sql") & ~F.col("_skip"),
@@ -473,7 +374,6 @@ def parse_slow_log(
     order_col: str = "turn_idx",
     text_col: str = "text",
     emit_trailing: bool = False,
-    use_pandas_udf: bool = False,
     scalable: bool = False,
     block_size: int = 1 << 16,
 ) -> DataFrame:
@@ -486,6 +386,4 @@ def parse_slow_log(
         )
     else:
         classified = classify_slow_log_lines(df, conv_col, order_col, text_col)
-    return assemble_slow_entries(
-        classified, conv_col, order_col, emit_trailing, use_pandas_udf
-    )
+    return assemble_slow_entries(classified, conv_col, order_col, emit_trailing)

@@ -40,11 +40,6 @@ from mariadb_to_graylog_spark.functions.gelf import (
     gelf_json_strict,
     with_gelf_level,
 )
-from mariadb_to_graylog_spark.operators.aggregates import (
-    run_counters,
-    severity_histogram,
-    sink_counts,
-)
 from mariadb_to_graylog_spark.operators.assembly import assemble_error_entries
 from mariadb_to_graylog_spark.operators.errorlog import (
     SHORT_MESSAGE_LENGTH,
@@ -85,7 +80,6 @@ class PipelineConfig:
     scalable: bool = False  # block-local prefix-sum entry ids
     share_scan: str = "recompute"  # 'recompute' | 'persist' (see split_dialects)
     router: RouterConfig = field(default_factory=RouterConfig)
-    use_pandas_udf_metrics: bool = False
 
 
 def _slow_signature(text_col: str = "text"):
@@ -168,7 +162,6 @@ def slow_events(transcripts: DataFrame, cfg: PipelineConfig) -> DataFrame:
     entries = parse_slow_log(
         transcripts,
         emit_trailing=cfg.emit_trailing,
-        use_pandas_udf=cfg.use_pandas_udf_metrics,
         scalable=cfg.scalable,
     )
     return slow_entries_to_events(entries, cfg)
@@ -230,22 +223,3 @@ def build_routed(transcripts: DataFrame, cfg: PipelineConfig | None = None) -> D
     enriched = enrich(events, cfg)
     return route(enriched, cfg=cfg.router)
 
-
-@dataclass
-class PipelineResult:
-    routed: DataFrame
-    sink_counts: DataFrame
-    severity_histogram: DataFrame
-    counters: DataFrame
-
-
-def run_pipeline(
-    transcripts: DataFrame, cfg: PipelineConfig | None = None
-) -> PipelineResult:
-    routed = build_routed(transcripts, cfg)
-    return PipelineResult(
-        routed=routed,
-        sink_counts=sink_counts(routed),
-        severity_histogram=severity_histogram(routed, "source"),
-        counters=run_counters(routed),
-    )

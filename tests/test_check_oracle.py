@@ -131,3 +131,21 @@ def test_row_count_mismatch_reason(monkeypatch, tmp_path, capsys):
     rc, log = _run_main(monkeypatch, tmp_path, queries, oracles, ["rows"])
     assert rc == 1
     assert "rows 2 != 1" in log.read_text()
+
+
+# sha256 of repr(sorted(oracle_sql().items())): every DuckDB twin the
+# driver checks against, byte for byte.  A deliberate oracle change must
+# update this digest in the same commit.
+ORACLE_SQL_SHA256 = "98fd07bd8e40cdcef38367c48eb3f2f82494391ffa1efbfff0ed767045d686bb"
+
+
+def test_driver_contract_pinned():
+    import hashlib
+
+    import __spark_entry__ as entry
+
+    oracles = entry.oracle_sql()
+    digest = hashlib.sha256(repr(sorted(oracles.items())).encode()).hexdigest()
+    assert digest == ORACLE_SQL_SHA256
+    assert set(entry.queries()) == set(oracles)
+    assert len(oracles) == 114

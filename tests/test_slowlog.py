@@ -54,12 +54,9 @@ def spark_slow_entries(spark, lines, **kw):
 
 
 @pytest.mark.parametrize("emit_trailing", [False, True])
-@pytest.mark.parametrize("use_pandas_udf", [False, True])
-def test_corpus_matches_reference_fsm(spark, emit_trailing, use_pandas_udf):
+def test_corpus_matches_reference_fsm(spark, emit_trailing):
     expected = simulate_slow_log(CORPUS, emit_trailing=emit_trailing)
-    got = spark_slow_entries(
-        spark, CORPUS, emit_trailing=emit_trailing, use_pandas_udf=use_pandas_udf
-    )
+    got = spark_slow_entries(spark, CORPUS, emit_trailing=emit_trailing)
     assert len(got) == len(expected)
     for row, exp in zip(got, expected):
         assert row.query_text_raw == exp["query_text"]
@@ -239,6 +236,26 @@ def test_scalable_classifier_carries_hash_flag_across_empty_blocks(
     # and the semantic point itself: turn 8 is META, not SQL
     meta = {r[0]: r[3] for r in got}
     assert meta[8] is True
+
+
+def test_scalable_classifier_leaves_join_strategy_to_aqe(spark):
+    """The block-edge and carry relations hold at least one row per
+    conversation, so they are not small on many-conversation input: with
+    broadcasting switched off, the scalable classifier's plan must carry
+    no forced BroadcastExchange."""
+    from mariadb_to_graylog_spark.operators.slowlog import (
+        classify_slow_log_lines_scalable,
+    )
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        df = classify_slow_log_lines_scalable(make_conv(spark, CORPUS), block_size=4)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert "BroadcastExchange" not in plan
 
 
 def test_scalable_full_parse_on_datagen_corpus(spark, transcripts):

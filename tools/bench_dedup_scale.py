@@ -527,126 +527,15 @@ def run_level(spark, n_docs: int) -> dict:
     return out
 
 
-def generate_graph(spark, shape: str, n: int):
-    """Deterministic edge lists for the CC algorithm comparison.
-
-    * ``chain``  -- one path of n nodes (diameter n-1: the adversarial
-      case for plain label propagation, the showcase for pointer jumping
-      and star contraction);
-    * ``blobs``  -- n nodes in 100-node blobs, ~3 pseudo-random in-blob
-      edges per node (dense clusters, diameter ~2-3);
-    * ``dups``   -- duplicate-pair shape: (2i, 2i+1) edges only (what a
-      verified near-dup edge list actually looks like: tiny shallow
-      components).
-    """
-    from pyspark.sql import functions as F
-
-    if shape == "chain":
-        return spark.range(n - 1).select(
-            F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
-        )
-    if shape == "blobs":
-        e = spark.range(n).select(
-            "id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.lit(3)),
-                    lambda j: (F.col("id") - F.col("id") % 100)
-                    + (
-                        F.conv(
-                            F.substring(
-                                F.md5(
-                                    F.concat(
-                                        F.col("id").cast("string"),
-                                        F.lit("-"),
-                                        j.cast("string"),
-                                    )
-                                ),
-                                1,
-                                8,
-                            ),
-                            16,
-                            10,
-                        ).cast("long")
-                        % 100
-                    ),
-                )
-            ).alias("id_b"),
-        )
-        return e.filter(F.col("id") != F.col("id_b")).select(
-            F.col("id").alias("id_a"), "id_b"
-        )
-    if shape == "dups":
-        return spark.range(n // 2).select(
-            (F.col("id") * 2).alias("id_a"), (F.col("id") * 2 + 1).alias("id_b")
-        )
-    raise ValueError(shape)
-
-
-def run_cc_compare(spark, sizes: dict[str, tuple[int, int]]) -> list[dict]:
-    """Wall-time both connected_components algorithms per shape/size.
-    Edges are materialized to parquet first so graph generation is not
-    in the measurement; one UNTIMED throwaway CC run (both algorithms on
-    a small chain) absorbs JVM/codegen warmup before the first measured
-    cell, then each (shape, size, algorithm) cell is one measured run."""
-    from mariadb_to_graylog_spark.operators import dedup as dd
-
-    warm = spark.range(999).selectExpr("id AS id_a", "id + 1 AS id_b")
-    for alg in ("label", "star"):
-        dd.connected_components(warm, max_iters=80, algorithm=alg).count()
-
-    rows = []
-    for shape, (lo, hi) in sizes.items():
-        for n in (lo, hi):
-            path = f"/tmp/spark_graft_bench/cc_{shape}_{n}"
-            if not (Path(path) / "_SUCCESS").exists():
-                generate_graph(spark, shape, n).write.mode("overwrite").parquet(path)
-            edges = spark.read.parquet(path).repartition(
-                spark.sparkContext.defaultParallelism
-            )
-            for alg in ("label", "star"):
-                sec, comps = timed(
-                    lambda: dd.connected_components(
-                        edges, max_iters=80, algorithm=alg
-                    )
-                    .select("component")
-                    .distinct()
-                    .count()
-                )
-                rows.append(
-                    {
-                        "shape": shape,
-                        "n_nodes": n,
-                        "algorithm": alg,
-                        "sec": sec,
-                        "n_components": comps,
-                    }
-                )
-                print(json.dumps(rows[-1]), flush=True)
-    return rows
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--n", type=int, default=25_000)
     ap.add_argument("--cpus", type=int, default=None)
-    ap.add_argument(
-        "--cc-compare",
-        action="store_true",
-        help="run the label-vs-star connected-components comparison only",
-    )
     args = ap.parse_args()
 
     from bench import bench_spark
 
     spark = bench_spark(args.cpus, app="dedup-scale")
-    if args.cc_compare:
-        rows = run_cc_compare(
-            spark,
-            {"chain": (20_000, 80_000), "blobs": (50_000, 200_000), "dups": (50_000, 200_000)},
-        )
-        print(json.dumps({"cc_compare": rows}))
-        return 0
     lo = run_level(spark, args.n)
     hi = run_level(spark, args.n * 4)
     vlo = run_embedding_level(spark, args.n)
