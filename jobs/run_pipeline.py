@@ -173,9 +173,12 @@ def main(argv: list[str] | None = None) -> int:
     from mariadb_to_graylog_spark.operators.aggregates import combined_counts
     from mariadb_to_graylog_spark.operators.routing import RouterConfig, write_fanout
     from mariadb_to_graylog_spark.plans.pipeline import PipelineConfig, build_routed
+    from mariadb_to_graylog_spark.session import get_or_create
     from mariadb_to_graylog_spark.sources import transcripts as src
 
-    spark = SparkSession.builder.appName(args.label).getOrCreate()
+    # a vanilla session, so spark-submit / spark-defaults conf applies --
+    # plus the package root on the Python workers' path
+    spark = get_or_create(SparkSession.builder.appName(args.label))
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # permissive parser semantics: malformed input -> NULL/continuation,
     # never a runtime error (Spark 4 defaults ANSI on; the reference never

@@ -1,19 +1,19 @@
-"""Dimension tables for broadcast-join enrichment.
+"""Constant lookups for enrichment, as column expressions.
 
 The reference's only lookup is the severity -> GELF level if-chain at
 lib_consumer/gelf_message.py:36-47 ("ERROR"->"3", "WARNING"->"4",
-"NOTE"->"6", else "UNKNOWN").  Here that mapping -- and the role/tool
-enrichment dims mandated by the north-star -- are small DataFrames joined
-with an explicit ``F.broadcast`` hint so the lookup never shuffles the fact
-side, no matter how large it is.
+"NOTE"->"6", else "UNKNOWN").  That mapping and the role/tool dims are
+row constants; ``lookup`` turns them into the same if-chain as a CASE
+column, so enrichment adds no join, broadcast or Spark job to a plan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
-# Exactly lib_consumer/gelf_message.py:40-45; UNKNOWN is applied as a
-# post-join coalesce (gelf_message.py:47) so unmatched levels survive.
+# Exactly lib_consumer/gelf_message.py:40-45; UNKNOWN is the fallback
+# (gelf_message.py:47), applied by functions/gelf.gelf_level.
 SEVERITY_ROWS = [("ERROR", "3"), ("WARNING", "4"), ("NOTE", "6")]
 
 ROLE_ROWS = [
@@ -33,15 +33,12 @@ TOOL_ROWS = [
 ]
 
 
-def severity_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(SEVERITY_ROWS, "severity string, gelf_level string")
-
-
-def role_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        ROLE_ROWS, "role string, role_group string, default_source string"
-    )
-
-
-def tool_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(TOOL_ROWS, "tool string, tool_kind string, sink_hint string")
+def lookup(key: Column, rows: list[tuple[str, ...]], field: int) -> Column:
+    """``CASE WHEN key = row[0] THEN row[field] ... END``: NULL for an
+    unmatched or NULL key, as a left join would give, even under ANSI mode
+    (where a map ``element_at`` raises on a missing key)."""
+    first, *rest = rows
+    out = F.when(key == first[0], F.lit(first[field]))
+    for row in rest:
+        out = out.when(key == row[0], F.lit(row[field]))
+    return out

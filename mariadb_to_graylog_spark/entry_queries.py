@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mariadb_to_graylog_spark.functions.gelf import gelf_json_compat, with_gelf_level
+from mariadb_to_graylog_spark.functions.gelf import gelf_json_compat, gelf_level
 from mariadb_to_graylog_spark.operators.assembly import (
     assemble_error_entries,
     with_entry_ids,
@@ -201,17 +201,11 @@ def _gelf_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = synth_error_transcripts(spark, sf_dir)
     parsed = parse_error_log_lines(t)
     entries = assemble_error_entries(parsed, mode="strict")
-    entries = with_gelf_level(entries)
-    return entries.withColumn(
-        "gelf_json",
-        gelf_json_compat(
-            F.lit(HOST),
-            F.col("short_message"),
-            F.col("ts_epoch"),
-            F.col("gelf_level"),
-            F.col("message"),
-        ),
+    level = gelf_level(F.col("severity"))
+    gelf = gelf_json_compat(
+        F.lit(HOST), F.col("short_message"), F.col("ts_epoch"), level, F.col("message")
     )
+    return entries.withColumns({"gelf_level": level, "gelf_json": gelf})
 
 
 def q_errorlog_gelf(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -13,29 +13,24 @@ Two serializers are provided:
 * ``gelf_json_strict`` -- ``to_json`` over the same struct: valid JSON
   (escapes ``\\n`` etc.), the mode a real downstream consumer wants.
 
-Severity -> GELF level (P12) is a broadcast lookup join against
-``dims.severity_dim`` with an ``UNKNOWN`` coalesce fallback
-(lib_consumer/gelf_message.py:36-47): the dim never shuffles the fact side.
+Severity -> GELF level (P12) is ``gelf_level``: the reference's if-chain
+(lib_consumer/gelf_message.py:36-47) as a CASE expression over
+``dims.SEVERITY_ROWS`` with an ``UNKNOWN`` fallback -- a column, not a join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from mariadb_to_graylog_spark.dims import severity_dim
+from mariadb_to_graylog_spark.dims import SEVERITY_ROWS, lookup
 
 GELF_VERSION = "1.1"  # mariadb-log-consumer.py:119
 
 
-def with_gelf_level(df: DataFrame, severity_col: str = "severity") -> DataFrame:
-    """Broadcast-join severity -> gelf_level; unmatched -> 'UNKNOWN'."""
-    spark = df.sparkSession
-    dim = F.broadcast(severity_dim(spark).withColumnRenamed("severity", "_sev_key"))
-    joined = df.join(dim, df[severity_col] == dim["_sev_key"], "left")
-    return joined.drop("_sev_key").withColumn(
-        "gelf_level", F.coalesce(F.col("gelf_level"), F.lit("UNKNOWN"))
-    )
+def gelf_level(severity: Column) -> Column:
+    """Severity -> GELF level; unmatched or NULL -> 'UNKNOWN'."""
+    return lookup(severity, SEVERITY_ROWS, 1).otherwise(F.lit("UNKNOWN"))
 
 
 def _esc(c: Column) -> Column:

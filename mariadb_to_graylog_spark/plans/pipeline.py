@@ -5,8 +5,8 @@ One declarative DataFrame plan mirroring the reference's consuming loop
 (a conversation containing any ``'# Time:'`` line is a slow log -- the
 reference is told the dialect per file via ``--log-type``, :330-337; here
 it is detected per conversation), each branch parses and assembles entries,
-both are unioned into one GELF event stream, enriched via broadcast dims,
-routed to sinks, and aggregated.
+both are unioned into one GELF event stream, enriched by ``dims.lookup``
+expressions, routed to sinks, and aggregated.
 
 Scale notes
 -----------
@@ -14,9 +14,10 @@ Scale notes
   entry-assembly window and the per-entry groupBy all reuse that
   partitioning (Catalyst's EnsureRequirements sees HashPartitioning(conv)
   satisfies clustering on (conv, entry_id)).
-* All three dim joins carry an explicit ``F.broadcast`` hint.
-* Hot conversations: ``scalable=True`` switches error-path entry-ids to the
-  block-local distributed prefix sum (operators/assembly.py).
+* Enrichment joins nothing (CASE lookups): a pass runs two Spark jobs,
+  the shared input shuffle and the result stage.
+* Hot conversations: ``scalable=True`` switches both dialects to their
+  block-scan twins (operators/assembly.py, operators/slowlog.py).
 * Aggregations are low-cardinality hash aggs -- partial map-side combine
   absorbs skew before the shuffle.
 * GELF serialization for slow entries: the reference never emits GELF on
@@ -34,11 +35,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from mariadb_to_graylog_spark.dims import role_dim, tool_dim
+from mariadb_to_graylog_spark.dims import ROLE_ROWS, TOOL_ROWS, lookup
 from mariadb_to_graylog_spark.functions.gelf import (
     gelf_json_compat,
     gelf_json_strict,
-    with_gelf_level,
+    gelf_level,
 )
 from mariadb_to_graylog_spark.operators.assembly import assemble_error_entries
 from mariadb_to_graylog_spark.operators.errorlog import (
@@ -99,12 +100,9 @@ def split_dialects(
     (conv_id, turn_idx) sort -> chained windows, with no further shuffles
     or sorts until the per-entry aggregate.
 
-    ``share_scan='persist'`` additionally caches the flagged DataFrame so
-    the scan+shuffle+sort+dialect-window runs once for both branches
-    (instead of once per branch -- AQE's stage dedup does not fire across
-    these union arms).  Recompute is the 100 TB default: the branch
-    pipelines are embarrassingly parallel and re-scanning columnar input
-    is usually cheaper than caching the full fact table.
+    Both branches share that exchange (AQE plans the second union arm's
+    input as a ``ReusedExchange``), so ``share_scan='persist'`` buys
+    nothing; it stays only until the benchmark workloads stop passing it.
     """
     prepared = transcripts.repartition("conv_id")
     # orderBy + unbounded-both frame computes the same whole-partition max
@@ -198,21 +196,25 @@ def slow_entries_to_events(entries: DataFrame, cfg: PipelineConfig) -> DataFrame
 
 
 def enrich(events: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Broadcast dim joins (P12 + north-star role/tool dims) + GELF column."""
-    spark = events.sparkSession
-    out = with_gelf_level(events)
-    out = out.join(F.broadcast(role_dim(spark)), "role", "left")
-    out = out.join(F.broadcast(tool_dim(spark)), "tool", "left")
-
+    """Dim lookups (P12 + north-star role/tool dims) + GELF column in one
+    projection; ``tool, role`` lead the routed column order."""
+    role, tool = F.col("role"), F.col("tool")
+    level = gelf_level(F.col("severity"))
     serializer = gelf_json_compat if cfg.serializer == "compat" else gelf_json_strict
     gelf = serializer(
-        F.lit(cfg.hostname),
-        F.col("short_message"),
-        F.col("ts_epoch"),
-        F.col("gelf_level"),
-        F.col("text"),
+        F.lit(cfg.hostname), F.col("short_message"), F.col("ts_epoch"), level, F.col("text")
     )
-    return out.withColumn("gelf_json", gelf)
+    return events.select(
+        tool,
+        role,
+        *[c for c in events.columns if c not in ("role", "tool")],
+        level.alias("gelf_level"),
+        lookup(role, ROLE_ROWS, 1).alias("role_group"),
+        lookup(role, ROLE_ROWS, 2).alias("default_source"),
+        lookup(tool, TOOL_ROWS, 1).alias("tool_kind"),
+        lookup(tool, TOOL_ROWS, 2).alias("sink_hint"),
+        gelf.alias("gelf_json"),
+    )
 
 
 def build_routed(transcripts: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:

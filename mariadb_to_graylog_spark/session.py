@@ -4,8 +4,7 @@ Scale notes (the settings below are chosen for a 1000-executor cluster and
 merely *sized down* for local[N] testing):
 
 * AQE on: runtime coalescing + skew-join splitting covers the long tail of
-  skew that static planning can't see (hot conversations are additionally
-  salted explicitly in plans/pipeline.py).
+  skew that static planning can't see.
 * Arrow on: every pandas UDF crosses the JVM<->Python boundary in columnar
   Arrow batches, never row-at-a-time (the reference forks a subprocess per
   slow-log entry, mariadb-log-consumer.py:864-865 -- the anti-pattern this
@@ -24,6 +23,7 @@ from __future__ import annotations
 import os
 from pathlib import Path
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 _PACKAGE_ROOT = Path(__file__).resolve().parent.parent
@@ -43,10 +43,8 @@ def get_spark(
     bypassed by ``spark-submit`` conf; nothing here assumes local mode except
     the master URL default.
 
-    Python workers get the package root on their ``PYTHONPATH`` (merged
-    with any ``spark.executorEnv.PYTHONPATH`` in ``extra_conf``), so UDFs
-    and ``mapInPandas`` functions import this package whatever the
-    working directory -- the local-mode analogue of ``--py-files``.
+    Python workers get the package root on their ``PYTHONPATH`` (see
+    ``get_or_create``).
     """
     if cpus is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -75,11 +73,23 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )
-    conf = dict(extra_conf or {})
-    worker_path = [str(_PACKAGE_ROOT), conf.pop(_WORKER_PATH_KEY, "")]
-    conf[_WORKER_PATH_KEY] = os.pathsep.join(p for p in worker_path if p)
-    for k, v in conf.items():
+    for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = get_or_create(builder)
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def get_or_create(builder: SparkSession.Builder) -> SparkSession:
+    """``builder.getOrCreate()`` with the package root first on the Python
+    workers' ``PYTHONPATH`` (the local-mode ``--py-files``), merged with --
+    never replacing -- any value the builder, ``spark-submit --conf`` or
+    spark-defaults.conf set.  Reading the launcher's value needs the JVM,
+    so the gateway starts here with the builder's options (driver memory
+    is fixed at launch) or attaches to spark-submit's."""
+    SparkContext._ensure_initialized(conf=SparkConf().setAll(builder._options.items()))
+    key = _WORKER_PATH_KEY
+    configured = os.pathsep.join([builder._options.get(key, ""), SparkConf().get(key, "")])
+    paths = [str(_PACKAGE_ROOT), *configured.split(os.pathsep)]
+    merged = os.pathsep.join(dict.fromkeys(p for p in paths if p))
+    return builder.config(key, merged).getOrCreate()

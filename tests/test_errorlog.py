@@ -10,7 +10,7 @@ from conftest import make_conv
 from reference_sim import gelf_to_string, simulate_error_log
 from mariadb_to_graylog_spark.operators.assembly import assemble_error_entries
 from mariadb_to_graylog_spark.operators.errorlog import parse_error_log_lines
-from mariadb_to_graylog_spark.functions.gelf import gelf_json_compat, with_gelf_level
+from mariadb_to_graylog_spark.functions.gelf import gelf_json_compat, gelf_level
 
 CORPUS = [
     "2019-11-01 16:10:48 0 [Note] WSREP: Read nil XID from storage engines, skipping position init",
@@ -40,7 +40,7 @@ def spark_error_entries(spark, lines, mode="strict", host="sparkhost", scalable=
     df = make_conv(spark, lines)
     parsed = parse_error_log_lines(df)
     entries = assemble_error_entries(parsed, mode=mode, scalable=scalable)
-    entries = with_gelf_level(entries)
+    entries = entries.withColumn("gelf_level", gelf_level(F.col("severity")))
     entries = entries.withColumn(
         "gelf_json",
         gelf_json_compat(

@@ -4,9 +4,15 @@ in-process listeners, and the reference-format eventlog export."""
 
 from __future__ import annotations
 
+import os
+import re
 import socket
+import subprocess
+import sys
 import threading
+import time
 from http.server import BaseHTTPRequestHandler, HTTPServer
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -188,3 +194,47 @@ def test_job_eventlog_export(spark, transcripts, tmp_path):
     assert all(":" in l and l.split(":")[0].isdigit() for l in lines)
     coord, source = last_coordinate(evt)
     assert coord >= 0 and source.startswith("conv")
+
+
+def test_job_cli_workers_import_package_from_any_cwd(transcripts, tmp_path):
+    """The CLI run as a script from a foreign working directory with
+    PYTHONPATH unset: the live-send ``foreachPartition`` workers must
+    still import this package, and every routed event reach UDP."""
+    got: list[bytes] = []
+    sock = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
+    sock.bind(("127.0.0.1", 0))
+    sock.settimeout(0.2)
+    stop = threading.Event()
+
+    def listen():
+        while not stop.is_set():
+            try:
+                got.append(sock.recvfrom(65536)[0])
+            except socket.timeout:
+                continue
+
+    t = threading.Thread(target=listen, daemon=True)
+    t.start()
+
+    src_path = str(tmp_path / "transcripts")
+    transcripts.write.parquet(src_path)
+    script = Path(__file__).resolve().parent.parent / "jobs" / "run_pipeline.py"
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [
+            sys.executable, str(script),
+            "--input", src_path, "--output", str(tmp_path / "sinks"),
+            "--limit", "200", "--no-tcp", "--no-http",
+            "--graylog-host", "127.0.0.1",
+            "--graylog-port-udp", str(sock.getsockname()[1]),
+        ],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    time.sleep(1)  # drain datagrams still in flight
+    stop.set()
+    t.join(2)
+    sock.close()
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    n_routed = int(re.search(r"routed (\d+) events", proc.stdout).group(1))
+    assert n_routed > 0
+    assert len(got) == n_routed

@@ -8,6 +8,7 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import group_jobs
 from mariadb_to_graylog_spark.operators.aggregates import combined_counts
 from mariadb_to_graylog_spark.operators.routing import RouterConfig
 from mariadb_to_graylog_spark.plans.pipeline import PipelineConfig, build_routed
@@ -65,11 +66,89 @@ def test_parallelism_invariance(spark, transcripts):
 
 
 def test_enrichment_columns(spark, transcripts):
+    from mariadb_to_graylog_spark.dims import ROLE_ROWS, TOOL_ROWS
+    from mariadb_to_graylog_spark.plans.pipeline import EVENT_COLS, enrich
+
     routed = build_routed(transcripts)
     row = routed.filter(F.col("role") == "assistant").first()
     assert row.role_group == "agent"
     cols = set(routed.columns)
     assert {"gelf_level", "role_group", "default_source", "tool_kind", "sink_hint"} <= cols
+
+    # every dim key maps to its row's values; an unknown or NULL key gives
+    # NULL dim columns, exactly as a left join on the rows would
+    roles = {k: (a, b) for k, a, b in ROLE_ROWS} | {"nobody": (None, None), None: (None, None)}
+    tools = {k: (a, b) for k, a, b in TOOL_ROWS} | {"hammer": (None, None), None: (None, None)}
+    keys = spark.createDataFrame(
+        [(r, t) for r in roles for t in tools], "role string, tool string"
+    )
+    one_event = routed.select(*EVENT_COLS).drop("role", "tool").limit(1)
+    got = enrich(one_event.crossJoin(keys), PipelineConfig()).collect()
+    assert len(got) == len(roles) * len(tools)
+    for r in got:
+        assert (r.role_group, r.default_source) == roles[r.role]
+        assert (r.tool_kind, r.sink_hint) == tools[r.tool]
+
+
+# the routed schema is a contract -- names, order, types and nullability;
+# downstream sink tables and readers see exactly these columns
+ROUTED_SCHEMA = [
+    ("tool", "string", True),
+    ("role", "string", True),
+    ("source", "string", False),
+    ("conv_id", "string", True),
+    ("entry_id", "bigint", True),
+    ("start_turn_idx", "int", True),
+    ("ts", "timestamp", True),
+    ("ts_epoch", "bigint", True),
+    ("severity_raw", "string", True),
+    ("severity", "string", True),
+    ("short_message", "string", True),
+    ("text", "string", True),
+    ("thread_id", "bigint", True),
+    ("query_time", "double", True),
+    ("lock_time", "double", True),
+    ("rows_sent", "bigint", True),
+    ("rows_examined", "bigint", True),
+    ("query_fingerprint", "string", True),
+    ("gelf_level", "string", False),
+    ("role_group", "string", True),
+    ("default_source", "string", True),
+    ("tool_kind", "string", True),
+    ("sink_hint", "string", True),
+    ("gelf_json", "string", False),
+    ("sink", "string", False),
+]
+
+
+@pytest.fixture(scope="module")
+def parquet_transcripts(spark, transcripts, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("pipeline") / "transcripts")
+    transcripts.write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_routed_schema_pinned(parquet_transcripts):
+    schema = build_routed(parquet_transcripts).schema
+    got = [(f.name, f.dataType.simpleString(), f.nullable) for f in schema.fields]
+    assert got == ROUTED_SCHEMA
+
+
+def test_routed_plan_has_no_join(spark, parquet_transcripts):
+    """Enrichment is column expressions: a noop pass over the routed plan
+    runs the input shuffle (reused by both dialect arms) and the result
+    stage -- no dim broadcast, no join of any kind."""
+    import re
+
+    routed = build_routed(parquet_transcripts)
+    n_jobs = group_jobs(
+        spark, lambda: routed.write.format("noop").mode("overwrite").save()
+    )
+    assert n_jobs <= 2
+    plan = routed._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan
+    nodes = re.findall(r"(?m)^[\s:|+\-*()\d]*([A-Za-z]+)", plan)
+    assert not [n for n in nodes if n.endswith("Join") or n == "CartesianProduct"]
 
 
 def test_gelf_strict_serializer_is_valid_json(spark, transcripts):

@@ -7,6 +7,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import group_jobs
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -456,21 +458,6 @@ def test_embedding_neardup_pair_budget_falls_back(
     assert not any(a >= 90000 or b >= 90000 for a, b, _ in rows(native))
 
 
-def _group_jobs(spark, action) -> int:
-    """Spark jobs ``action`` runs, counted through a job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize(
     "op",
     [
@@ -530,9 +517,9 @@ def test_native_decision_is_one_bounded_collect(spark, op):
             lambda: sim.embedding_neardup_lsh(vecs, dim=8, rows_per_band=None),
         ),
     }[op]
-    reference = _group_jobs(spark, lambda: inp.limit(cap + 1).toPandas())
+    reference = group_jobs(spark, lambda: inp.limit(cap + 1).toPandas())
     assert reference >= 1
-    assert _group_jobs(spark, build) <= reference
+    assert group_jobs(spark, build) <= reference
 
 
 def test_bounded_collect_cap(spark):
