@@ -305,71 +305,6 @@ def paragraph_near_stats(
     return out
 
 
-def drop_near_duplicate_paragraphs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_docs: int = 2,
-    shingle_n: int = 4,
-    bands: int = 4,
-    rows_per_band: int = 8,
-    n: int = 3,
-    threshold: float = 0.6,
-    max_bucket_size: int | None = None,
-    exact: bool = True,
-    rsd: float = 0.02,
-    persist_units: bool = False,
-    cache_out: list | None = None,
-) -> DataFrame:
-    """``drop_duplicate_paragraphs`` under the NEAR-duplicate
-    classification of ``paragraph_near_stats``: (doc_id, clean_text,
-    n_dropped) with every paragraph whose one-hop neighborhood spans >=
-    ``min_docs`` distinct documents removed, original order preserved,
-    pure-boilerplate docs returned as empty husks (caller filters).
-    Join side is the frequency table filtered to flagged hashes only, so
-    paragraph text crosses exactly one shuffle (reassembly)."""
-    paras = explode_paragraphs(df, id_col, text_col).withColumn("h", F.md5("para"))
-    freq = near_paragraph_frequency(
-        paras,
-        shingle_n=shingle_n,
-        bands=bands,
-        rows_per_band=rows_per_band,
-        n=n,
-        threshold=threshold,
-        max_bucket_size=max_bucket_size,
-        exact=exact,
-        rsd=rsd,
-        persist_units=persist_units,
-        cache_out=cache_out,
-    )
-    flagged = freq.filter(F.col("n_near_docs") >= min_docs).select(
-        "h", F.lit(1).alias("_dup")
-    )
-    out = (
-        paras.join(flagged, "h", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(
-                            F.when(
-                                F.col("_dup").isNull(),
-                                F.struct("para_idx", "para"),
-                            )
-                        )
-                    ),
-                    lambda s: s["para"],
-                ),
-                "\n\n",
-            ).alias("clean_text"),
-            F.sum(F.col("_dup").isNotNull().cast("long")).alias("n_dropped"),
-        )
-    )
-    out.units_cache = freq.units_cache  # see near_paragraph_frequency
-    return out
-
-
 def drop_duplicate_paragraphs(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -67,8 +67,9 @@ def write_fanout(
 
     Each partition directory (``sink=udp`` ...) is the moral equivalent of
     one Graylog endpoint's Iceberg table.  ``dropped`` rows are excluded --
-    the reference loses them silently; we keep them out of sink tables but
-    they remain visible in the aggregates (A2) for observability.
+    the reference loses them silently.  The sink tables, and so the
+    ``combined_counts`` (A2) the job CLI computes over them, hold none;
+    their number is the ``rows_dropped`` observation the CLI prints.
     """
     df = routed.filter(F.col("sink") != "dropped")
     if repartition_output:

@@ -69,6 +69,89 @@ META_FIELD_PATTERNS: dict[str, tuple[str, str]] = {
 METRIC_COLS = list(META_FIELD_PATTERNS)
 
 
+# ---------------------------------------------------------------------------
+# the per-line slow-log grammar: the one definition read by the window
+# classifier, its block-scan twin and the cross-batch FSM
+# (streaming/stateful.py)
+# ---------------------------------------------------------------------------
+
+
+def slow_lines(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """rstripped non-empty ``line`` (empty lines are FSM no-ops, :901-902)
+    plus its ``_is_hash`` (``'# '``) and ``_is_time`` (``'# Time:'``)
+    prefix flags."""
+    line = F.regexp_replace(F.col(text_col), r"\s+$", "")
+    out = df.withColumn("line", line).filter(F.col("line") != "")
+    is_hash = F.substring("line", 1, 2) == "# "
+    is_time = F.substring("line", 2, 6) == " Time:"  # line[1:7] == ' Time:'
+    return out.withColumn("_is_hash", is_hash).withColumn("_is_time", is_hash & is_time)
+
+
+def is_use_line(line: Column) -> Column:
+    """skipped when it is SQL line 0 (:873-880)"""
+    return F.substring(line, 1, 4) == "use "
+
+
+def is_set_timestamp_line(line: Column) -> Column:
+    """skipped, and its value harvested, when it is SQL line 1 (:882-895)"""
+    return F.substring(line, 1, 14) == "SET timestamp="
+
+
+def set_timestamp_value(line: Column) -> Column:
+    """P8: the exact ``line[14:len-1]`` slice; try_cast so a garbage or
+    overflowing value is NULL, not an ANSI error."""
+    return F.when(
+        is_set_timestamp_line(line),
+        F.substring(line, 15, F.length(line) - F.lit(15)).try_cast("long"),
+    )
+
+
+def time_line_epoch(line: Column) -> Column:
+    """Intended ``'# Time:'`` parse -> epoch seconds: ``yymmdd H:mm:ss``
+    (pivot 69) or an ISO datetime with a fraction; NULL otherwise."""
+    t_raw = F.regexp_extract(line, r"^# Time:\s+(.*\S)\s*$", 1)
+    yy = F.regexp_extract(t_raw, r"^(\d{2})(\d{2})(\d{2})\s", 1).try_cast("int")
+    t_f2 = F.unix_seconds(F.try_to_timestamp(
+        F.concat(
+            F.when(yy <= 68, yy + 2000).otherwise(yy + 1900).cast("string"),
+            F.lit("-"),
+            F.regexp_extract(t_raw, r"^(\d{2})(\d{2})(\d{2})\s", 2),
+            F.lit("-"),
+            F.regexp_extract(t_raw, r"^(\d{2})(\d{2})(\d{2})\s", 3),
+            F.lit(" "),
+            F.regexp_extract(t_raw, r"^\d{6}\s+(\d{1,2}:\d{2}:\d{2})$", 1),
+        ),
+        F.lit("yyyy-MM-dd H:mm:ss"),
+    ))
+    t_iso = F.unix_seconds(
+        F.try_to_timestamp(t_raw, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
+    )
+    return F.coalesce(t_f2, t_iso)
+
+
+def meta_value(line: Column, name: str) -> Column:
+    """One META field of one line, typed; an entry's value is the max over
+    its META lines."""
+    pat, typ = META_FIELD_PATTERNS[name]
+    v = F.regexp_extract(line, pat, 1)
+    # try_cast: regex-validated but overflow-able digits must not ANSI-abort
+    return F.when(v != "", v).try_cast(typ)
+
+
+def entry_tail_cols(kept_count: Column) -> list[Column]:
+    """The per-entry columns derived from ``query_text``, ``set_timestamp``
+    and ``time_line_ts``.  ``query_text_raw`` is byte-equal to the
+    reference's accumulated string, which starts with '\\n' (the first
+    append is ''+'\\n'+line, :821-826); ``query_text`` is the clean join."""
+    return [
+        F.when(kept_count > 0, F.concat(F.lit("\n"), F.col("query_text")))
+        .otherwise(F.lit(""))
+        .alias("query_text_raw"),
+        F.coalesce("set_timestamp", "time_line_ts").alias("ts_epoch"),
+        fingerprint_col(F.col("query_text")).alias("query_fingerprint"),
+    ]
+
+
 def classify_slow_log_lines(
     df: DataFrame, conv_col: str = "conv_id", order_col: str = "turn_idx",
     text_col: str = "text",
@@ -92,12 +175,7 @@ def classify_slow_log_lines(
     * SQL position within entry        -> global running SQL count minus
       its value at the entry start.
     """
-    line = F.regexp_replace(F.col(text_col), r"\s+$", "")
-    out = df.withColumn("line", line).filter(F.col("line") != "")
-
-    is_hash = F.substring("line", 1, 2) == "# "
-    is_time = F.substring("line", 2, 6) == " Time:"  # line[1:7] == ' Time:'
-    out = out.withColumn("_is_hash", is_hash).withColumn("_is_time", is_hash & is_time)
+    out = slow_lines(df, text_col)
 
     w = Window.partitionBy(conv_col).orderBy(order_col)
     w_cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -172,12 +250,7 @@ def classify_slow_log_lines_scalable(
     edge join) -> run/time turns -> entry ids + last entry start ->
     sql position base.
     """
-    line = F.regexp_replace(F.col(text_col), r"\s+$", "")
-    out = df.withColumn("line", line).filter(F.col("line") != "")
-
-    is_hash = F.substring("line", 1, 2) == "# "
-    is_time = F.substring("line", 2, 6) == " Time:"
-    out = out.withColumn("_is_hash", is_hash).withColumn("_is_time", is_hash & is_time)
+    out = slow_lines(df, text_col)
     out = out.withColumn("_blk", F.floor(F.col(order_col) / F.lit(block_size)))
 
     # previous row's _is_hash: block-local lag, with the boundary fallback
@@ -260,15 +333,6 @@ def classify_slow_log_lines_scalable(
     )
 
 
-def _meta_extract_cols(line: Column) -> list[Column]:
-    cols = []
-    for name, (pat, typ) in META_FIELD_PATTERNS.items():
-        v = F.regexp_extract(line, pat, 1)
-        # try_cast: regex-validated but overflow-able digits must not ANSI-abort
-        cols.append(F.when(v != "", v).try_cast(typ).alias(f"_m_{name}"))
-    return cols
-
-
 def assemble_slow_entries(
     classified: DataFrame,
     conv_col: str = "conv_id",
@@ -278,41 +342,22 @@ def assemble_slow_entries(
     """Group classified lines into slow-log entries (P7-P10)."""
     df = classified
 
-    # SET timestamp harvest (P8): exact line[14:len-1] slice semantics
-    set_ts = F.when(
-        (F.col("sql_pos") == 1) & (F.substring("line", 1, 14) == "SET timestamp="),
-        F.substring(F.col("line"), 15, F.length("line") - F.lit(15)).try_cast("long"),
+    line = F.col("line")
+    sql_pos = F.col("sql_pos")
+    skip = ((sql_pos == 0) & is_use_line(line)) | (
+        (sql_pos == 1) & is_set_timestamp_line(line)
     )
-    skip = (
-        ((F.col("sql_pos") == 0) & (F.substring("line", 1, 4) == "use "))
-        | ((F.col("sql_pos") == 1) & (F.substring("line", 1, 14) == "SET timestamp="))
-    )
-    df = df.withColumn("_set_ts", set_ts).withColumn("_skip", skip)
-
-    # intended '# Time:' parse: 'yymmdd H:mm:ss' (pivot 69) or ISO datetime
-    t_raw = F.regexp_extract("line", r"^# Time:\s+(.*\S)\s*$", 1)
-    yy = F.regexp_extract(t_raw, r"^(\d{2})(\d{2})(\d{2})\s", 1).try_cast("int")
-    t_f2 = F.unix_seconds(F.try_to_timestamp(
-        F.concat(
-            F.when(yy <= 68, yy + 2000).otherwise(yy + 1900).cast("string"),
-            F.lit("-"),
-            F.regexp_extract(t_raw, r"^(\d{2})(\d{2})(\d{2})\s", 2),
-            F.lit("-"),
-            F.regexp_extract(t_raw, r"^(\d{2})(\d{2})(\d{2})\s", 3),
-            F.lit(" "),
-            F.regexp_extract(t_raw, r"^\d{6}\s+(\d{1,2}:\d{2}:\d{2})$", 1),
-        ),
-        F.lit("yyyy-MM-dd H:mm:ss"),
-    ))
-    t_iso = F.unix_seconds(
-        F.try_to_timestamp(t_raw, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
-    )
-    df = df.withColumn(
-        "_time_line_ts", F.when(F.col("is_entry_start"), F.coalesce(t_f2, t_iso))
+    df = df.select(
+        "*",
+        F.when(sql_pos == 1, set_timestamp_value(line)).alias("_set_ts"),
+        skip.alias("_skip"),
+        F.when(F.col("is_entry_start"), time_line_epoch(line)).alias("_time_line_ts"),
     )
 
     meta_line = F.when(F.col("is_meta"), F.col("line"))
-    df = df.select("*", *_meta_extract_cols(meta_line))
+    df = df.select(
+        "*", *(meta_value(meta_line, n).alias(f"_m_{n}") for n in METRIC_COLS)
+    )
     metric_aggs = [F.max(f"_m_{n}").alias(n) for n in METRIC_COLS]
 
     sql_struct = F.when(
@@ -354,18 +399,9 @@ def assemble_slow_entries(
     # at flush, :947-948)
     agg = agg.filter(F.col("_sql_line_count") >= 1)
 
-    # query_text_raw is byte-equal to the reference's accumulated string,
-    # which starts with '\n' (the first append is ''+'\n'+line, :821-826);
-    # query_text is the clean join.
-    agg = agg.withColumn(
-        "query_text_raw",
-        F.when(
-            F.col("_kept_count") > 0, F.concat(F.lit("\n"), F.col("query_text"))
-        ).otherwise(F.lit("")),
+    return agg.select("*", *entry_tail_cols(F.col("_kept_count"))).drop(
+        "_sql_line_count", "_kept_count"
     )
-    agg = agg.withColumn("ts_epoch", F.coalesce("set_timestamp", "time_line_ts"))
-    agg = agg.withColumn("query_fingerprint", fingerprint_col(F.col("query_text")))
-    return agg.drop("_sql_line_count", "_kept_count")
 
 
 def parse_slow_log(

@@ -132,14 +132,15 @@ def resume_filter(transcripts: DataFrame, lineage: DataFrame | None) -> DataFram
     """Keep only turns past each conversation's checkpointed high-water mark.
 
     The reference's seek-to-offset (SRC2).  The lineage side aggregates to
-    one row per conversation and is broadcast when small; unseen
-    conversations pass through whole (left join + coalesce(-1)).
+    one row per conversation -- as many rows as conversations ever seen,
+    so the join strategy is left to AQE and ``autoBroadcastJoinThreshold``;
+    unseen conversations pass through whole (left join + coalesce(-1)).
     """
     if lineage is None:
         return transcripts
     marks = lineage.groupBy("conv_id").agg(F.max("max_turn_idx").alias("_hwm"))
     return (
-        transcripts.join(F.broadcast(marks), "conv_id", "left")
+        transcripts.join(marks, "conv_id", "left")
         .filter(F.col("turn_idx") > F.coalesce(F.col("_hwm"), F.lit(-1)))
         .drop("_hwm")
     )

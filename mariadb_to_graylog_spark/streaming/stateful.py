@@ -15,107 +15,73 @@ with ``applyInPandasWithState``:
   :771-772; an unbounded stream has no EOF, a quiet period is its moral
   equivalent).
 
-``_parse_error_line`` is the pure-Python twin of
-``operators/errorlog.parse_error_log_lines`` (same tokenization, zfill
-quirks, %y pivot, ASCII whitespace classes) -- tested equal against the
-Spark parse in tests/test_streaming_stateful.py, and the assembled output
-is tested byte-identical to batch ``assemble_error_entries`` with one
-conversation split across three micro-batches.
+The line grammar has one definition, the batch column expressions.  Each
+line is parsed row-locally BEFORE the state call (error dialect:
+``operators/errorlog.parse_error_log_lines``; slow dialect: the per-line
+helpers of ``operators/slowlog.py``), so the callbacks hold only the
+cross-batch FSM registers and the open entry.  The slow-log entry's
+metrics, ``query_text_raw``, ``ts_epoch`` and fingerprint are computed
+AFTER the state call from its META/kept lines with the same helpers the
+batch aggregate uses.
 
 BOTH dialects are covered: ``assemble_entries_stateful`` (error log) and
 ``assemble_slow_entries_stateful`` (the slow-log FSM with its registers in
-state, column-equal to batch ``parse_slow_log`` including metrics and
-fingerprints).  Exhaustive split-point + random-corpus property tests
-drive the callbacks against a fake GroupState without Spark
+state); both are tested column-equal to batch ``assemble_error_entries`` /
+``parse_slow_log`` with one conversation split across three micro-batches
+(tests/test_streaming_stateful.py).  Exhaustive split-point and
+random-corpus property tests drive the callbacks against a fake GroupState
 (tests/test_stateful_exhaustive.py); the CLI reaches this via
 ``--stateful-assembly`` (jobs/run_pipeline.py).
 """
 
 from __future__ import annotations
 
-import calendar
-import re
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-SHORT_MESSAGE_LENGTH = 20
+from mariadb_to_graylog_spark.operators.errorlog import parse_error_log_lines
+from mariadb_to_graylog_spark.operators.slowlog import (
+    METRIC_COLS,
+    entry_tail_cols,
+    is_set_timestamp_line,
+    is_use_line,
+    meta_value,
+    set_timestamp_value,
+    slow_lines,
+    time_line_epoch,
+)
 
-# ASCII classes mirror the Spark/Java \s semantics (errorlog.py divergence
-# notes: NBSP etc. intentionally NOT whitespace here either)
-_RSTRIP = re.compile(r"\s+$", re.ASCII)
-_LSTRIP = re.compile(r"^\s+", re.ASCII)
-_WS = re.compile(r"\s+", re.ASCII)
-_F1_DATE = re.compile(r"^\d{4}-\d{1,2}-\d{1,2}$", re.ASCII)
-_F2_DATE = re.compile(r"^(\d{2})(\d{2})(\d{2})$", re.ASCII)
-_TIME_PART = re.compile(r"^\d{0,2}$", re.ASCII)
-
-
-def _zfill2(s: str) -> str:
-    return s if len(s) >= 2 else s.zfill(2)
-
-
-def _epoch_utc(y: int, mo: int, d: int, h: int, mi: int, s: int) -> int | None:
-    try:
-        import datetime as _dt
-
-        return calendar.timegm(_dt.datetime(y, mo, d, h, mi, s).timetuple())
-    except ValueError:
-        return None
+_HEAD_COLS = ["conv_id", "turn_idx", "ts", "role", "tool"]
 
 
-def _parse_error_line(text: str) -> dict[str, Any]:
-    """Python twin of parse_error_log_lines for ONE line."""
-    line = _RSTRIP.sub("", text or "")
-    lstripped = _LSTRIP.sub("", line)
-    tok5 = _WS.split(lstripped, maxsplit=4) if lstripped else [""]
-    w = [tok5[i] if i < len(tok5) else "" for i in range(4)]
+def _names(schema: str) -> list[str]:
+    return [field.split()[0] for field in schema.split(", ")]
 
-    tparts = w[1].split(":")
-    time_ok = len(tparts) >= 3 and all(_TIME_PART.match(p) for p in tparts[:3])
-    hh = mm = ss = None
-    if time_ok:
-        hh, mm, ss = (int(_zfill2(p)) for p in tparts[:3])
-        if not (0 <= hh <= 23 and 0 <= mm <= 59 and 0 <= ss <= 59):
-            time_ok = False
 
-    ts_f1 = ts_f2 = None
-    if time_ok and _F1_DATE.match(w[0]):
-        y, mo, d = (int(x) for x in w[0].split("-"))
-        ts_f1 = _epoch_utc(y, mo, d, hh, mm, ss)
-    m2 = _F2_DATE.match(w[0]) if time_ok else None
-    if m2:
-        yy = int(m2.group(1))
-        year = yy + 2000 if yy <= 68 else yy + 1900
-        ts_f2 = _epoch_utc(year, int(m2.group(2)), int(m2.group(3)), hh, mm, ss)
+def _ts_us(ts) -> int | None:
+    # naive round-trip: Arrow delivers session-tz-naive timestamps and
+    # interprets naive ones back the same way
+    return int(ts.value // 1000) if isinstance(ts, pd.Timestamp) else None
 
-    is_f1 = ts_f1 is not None
-    ts_epoch = ts_f1 if is_f1 else ts_f2
-    well_formed = ts_epoch is not None
-    if well_formed:
-        if is_f1:
-            message = tok5[4] if len(tok5) > 4 else ""
-            thread_raw, level_raw = w[2], w[3]
-        else:
-            tok4 = _WS.split(lstripped, maxsplit=3)
-            message = tok4[3] if len(tok4) > 3 else ""
-            thread_raw, level_raw = None, w[2]
-        severity = level_raw.translate(str.maketrans("", "", "[]")).upper()
-        short_message = f"{level_raw} {message[:SHORT_MESSAGE_LENGTH]}"
-    else:
-        message = _LSTRIP.sub("", _RSTRIP.sub("", line))
-        thread_raw = level_raw = severity = short_message = None
-    return {
-        "is_entry_start": well_formed,
-        "ts_epoch": ts_epoch,
-        "thread_raw": thread_raw,
-        "level_raw": level_raw,
-        "severity": severity,
-        "short_message": short_message,
-        "message": message,
-    }
 
+def _long(v) -> int | None:
+    """A nullable long read off a pandas row: pandas hands a long column
+    that holds NULLs over as float64 (NaN), or as Decimal when it was
+    shipped as a decimal to keep all 64 bits."""
+    return None if pd.isna(v) else int(v)
+
+
+# ---------------------------------------------------------------------------
+# error-log dialect
+# ---------------------------------------------------------------------------
+
+_PARSED_COLS = [
+    "is_entry_start", "ts_epoch", "thread_raw", "level_raw", "severity",
+    "short_message", "message",
+]
 
 OUTPUT_SCHEMA = (
     "conv_id string, entry_id long, start_turn_idx int, ts timestamp, "
@@ -130,21 +96,24 @@ STATE_SCHEMA = (
     "severity string, short_message string, lines array<string>"
 )
 
-_OUT_COLS = [
-    "conv_id", "entry_id", "start_turn_idx", "ts", "role", "tool",
-    "ts_epoch", "thread_raw", "level_raw", "severity", "short_message",
-    "message",
-]
+_OUT_COLS = _names(OUTPUT_SCHEMA)
+
+
+def error_line_values(transcripts: DataFrame) -> DataFrame:
+    """The rows the error callback reads: the batch per-line parse."""
+    return parse_error_log_lines(transcripts).select(*_HEAD_COLS, *_PARSED_COLS)
 
 
 def _entry_row(conv_id: str, entry_id: int, st: tuple, mode: str) -> dict:
-    message = st[10][0] if mode == "strict" else "\n".join(st[10])
+    # intended: array_join semantics of the batch aggregate (NULLs skipped)
+    message = (
+        st[10][0] if mode == "strict"
+        else "\n".join(m for m in st[10] if m is not None)
+    )
     return {
         "conv_id": conv_id,
         "entry_id": entry_id,
         "start_turn_idx": st[1],
-        # naive round-trip: Arrow delivers session-tz-naive timestamps and
-        # interprets naive ones back the same way
         "ts": pd.Timestamp(st[2], unit="us") if st[2] is not None else None,
         "role": st[3],
         "tool": st[4],
@@ -158,9 +127,9 @@ def _entry_row(conv_id: str, entry_id: int, st: tuple, mode: str) -> dict:
 
 
 def make_assembler(mode: str = "intended", flush_after_ms: int = 1000):
-    """applyInPandasWithState callback; ``mode`` as in
-    assemble_error_entries (strict = head line only, intended = multiline
-    append)."""
+    """applyInPandasWithState callback over ``error_line_values`` rows;
+    ``mode`` as in assemble_error_entries (strict = head line only,
+    intended = multiline append)."""
     if mode not in ("strict", "intended"):
         raise ValueError(f"unknown mode {mode!r}")
 
@@ -198,8 +167,7 @@ def make_assembler(mode: str = "intended", flush_after_ms: int = 1000):
         rows.sort(key=lambda r: r.turn_idx)
 
         for r in rows:
-            p = _parse_error_line(r.text)
-            if p["is_entry_start"]:
+            if r.is_entry_start:
                 # counter-only state (post-timeout-flush) has st[10] == []:
                 # its st[0] already counts the flushed entry, so no +1
                 flushed_here = st is not None and bool(st[10])
@@ -208,17 +176,14 @@ def make_assembler(mode: str = "intended", flush_after_ms: int = 1000):
                 n_emitted = (
                     st[0] + (1 if flushed_here else 0) if st is not None else 0
                 )
-                ts_us = (
-                    int(r.ts.value // 1000) if isinstance(r.ts, pd.Timestamp) else None
-                )
                 st = (
-                    n_emitted, int(r.turn_idx), ts_us, r.role, r.tool,
-                    p["ts_epoch"], p["thread_raw"], p["level_raw"],
-                    p["severity"], p["short_message"], [p["message"]],
+                    n_emitted, int(r.turn_idx), _ts_us(r.ts), r.role, r.tool,
+                    _long(r.ts_epoch), r.thread_raw, r.level_raw,
+                    r.severity, r.short_message, [r.message],
                 )
             elif st is not None and st[10]:
                 if mode == "intended":
-                    st = st[:10] + (st[10] + [p["message"]],)
+                    st = st[:10] + (st[10] + [r.message],)
                 # strict: continuation text dropped (reference :733)
 
         if st is not None:
@@ -230,85 +195,39 @@ def make_assembler(mode: str = "intended", flush_after_ms: int = 1000):
     return assemble
 
 
+def assemble_entries_stateful(
+    transcripts,  # streaming DataFrame with transcript schema
+    mode: str = "intended",
+    flush_after_ms: int = 1000,
+):
+    """Streaming entry assembly with cross-batch state.  Emits each entry
+    when its successor's first line arrives; flushes the trailing open
+    entry after ``flush_after_ms`` of silence on the conversation."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    fn = make_assembler(mode, flush_after_ms)
+    return error_line_values(transcripts).groupBy("conv_id").applyInPandasWithState(
+        fn,
+        outputStructType=OUTPUT_SCHEMA,
+        stateStructType=STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    )
+
+
 # ---------------------------------------------------------------------------
 # slow-log dialect: the reference FSM with cross-batch state
 # ---------------------------------------------------------------------------
 
-_F2_TIME = re.compile(r"^# Time:\s+(.*\S)\s*$", re.ASCII)
-_F2_HEAD = re.compile(r"^(\d{2})(\d{2})(\d{2})\s", re.ASCII)
-_F2_CLOCK = re.compile(r"^\d{6}\s+(\d{1,2}):(\d{2}):(\d{2})$", re.ASCII)
-_ISO = re.compile(
-    r"^(\d{4})-(\d{2})-(\d{2})T(\d{2}):(\d{2}):(\d{2})\.(\d{6})$", re.ASCII
-)
-_I64_MAX = (1 << 63) - 1
-
-
-def _parse_time_line(line: str) -> int | None:
-    """'# Time:' payload -> epoch: 'yymmdd H:mm:ss' (pivot 69) or ISO with
-    micros (truncated), mirroring assemble_slow_entries' expressions."""
-    m = _F2_TIME.match(line)
-    if not m:
-        return None
-    raw = m.group(1)
-    h = _F2_HEAD.match(raw)
-    c = _F2_CLOCK.match(raw)
-    if h and c:
-        yy = int(h.group(1))
-        year = yy + 2000 if yy <= 68 else yy + 1900
-        return _epoch_utc(
-            year, int(h.group(2)), int(h.group(3)),
-            int(c.group(1)), int(c.group(2)), int(c.group(3)),
-        )
-    i = _ISO.match(raw)
-    if i:
-        return _epoch_utc(*(int(i.group(j)) for j in range(1, 7)))
-    return None
-
-
-def _slow_metrics(meta_lines: list[str]) -> dict:
-    """max() per field over the entry's META lines, typed like the batch
-    aggregate (try_cast overflow -> NULL)."""
-    out: dict = {}
-    for name, (pat, typ) in META_FIELD_PATTERNS.items():
-        vals = []
-        for ln in meta_lines:
-            m = re.search(pat, ln)
-            if m and m.group(1) != "":
-                v = m.group(1)
-                if typ == "long":
-                    iv = int(v)
-                    if iv > _I64_MAX:
-                        continue  # try_cast overflow -> NULL
-                    vals.append(iv)
-                elif typ == "double":
-                    vals.append(float(v))
-                else:
-                    vals.append(v)
-        out[name] = max(vals) if vals else None
-    return out
-
-
-from mariadb_to_graylog_spark.operators.slowlog import (  # noqa: E402
-    META_FIELD_PATTERNS,
-)
-
-SLOW_OUTPUT_SCHEMA = (
+# the raw entries the callback emits; the rest of the output is derived
+# from their lines after the state call
+SLOW_ENTRY_SCHEMA = (
     "conv_id string, entry_id long, start_turn_idx int, ts timestamp, "
     "role string, tool string, set_timestamp long, time_line_ts long, "
-    "query_text string, "
-    + ", ".join(
-        f"{n} {'bigint' if t == 'long' else t}"
-        for n, (_, t) in META_FIELD_PATTERNS.items()
-    )
-    + ", query_text_raw string, ts_epoch long, query_fingerprint string"
+    "kept_lines array<string>, meta_lines array<string>"
 )
 
-_SLOW_COLS = (
-    ["conv_id", "entry_id", "start_turn_idx", "ts", "role", "tool",
-     "set_timestamp", "time_line_ts", "query_text"]
-    + list(META_FIELD_PATTERNS)
-    + ["query_text_raw", "ts_epoch", "query_fingerprint"]
-)
+_SLOW_ENTRY_COLS = _names(SLOW_ENTRY_SCHEMA)
 
 SLOW_STATE_SCHEMA = (
     "prev_type string, entry_count long, open boolean, start_turn int, "
@@ -317,12 +236,46 @@ SLOW_STATE_SCHEMA = (
     "meta_lines array<string>"
 )
 
+_SLOW_STATE_KEYS = _names(SLOW_STATE_SCHEMA)
+
+
+def slow_line_values(transcripts: DataFrame) -> DataFrame:
+    """The rows the slow callback reads: each non-empty ``line`` with its
+    prefix flags and its ``'# Time:'`` / ``SET timestamp=`` values
+    (``time_ts``, ``set_ts``), all from the batch helpers.  ``set_ts``
+    travels as a decimal: pandas turns a long column holding NULLs into
+    float64, which loses digits past 2**53.  No name has a leading
+    underscore, which ``itertuples`` would rename."""
+    line = F.col("line")
+    return slow_lines(transcripts).select(
+        *_HEAD_COLS, "line",
+        F.col("_is_hash").alias("is_hash"),
+        F.col("_is_time").alias("is_time"),
+        is_use_line(line).alias("is_use"),
+        is_set_timestamp_line(line).alias("is_set"),
+        set_timestamp_value(line).cast("decimal(20,0)").alias("set_ts"),
+        F.when(F.col("_is_time"), time_line_epoch(line)).alias("time_ts"),
+    )
+
+
+def slow_entry_columns(entries: DataFrame) -> DataFrame:
+    """Raw entries (SLOW_ENTRY_SCHEMA) -> the batch ``parse_slow_log``
+    columns: metrics are the max of ``meta_value`` over the META lines,
+    the tail is ``entry_tail_cols``."""
+    out = entries.select(
+        *_SLOW_ENTRY_COLS[:-2],  # all but kept_lines, meta_lines
+        F.array_join("kept_lines", "\n").alias("query_text"),
+        *(
+            F.array_max(F.transform("meta_lines", lambda ln: meta_value(ln, n))).alias(n)
+            for n in METRIC_COLS
+        ),
+        F.size("kept_lines").alias("_kept_count"),
+    )
+    return out.select("*", *entry_tail_cols(F.col("_kept_count"))).drop("_kept_count")
+
 
 def _slow_entry_row(conv_id: str, st: dict) -> dict:
-    from mariadb_to_graylog_spark.operators.fingerprint import fingerprint_py
-
-    query_text = "\n".join(st["kept_lines"])
-    row = {
+    return {
         "conv_id": conv_id,
         "entry_id": st["entry_count"],
         "start_turn_idx": st["start_turn"],
@@ -331,18 +284,24 @@ def _slow_entry_row(conv_id: str, st: dict) -> dict:
         "tool": st["tool"],
         "set_timestamp": st["set_ts"],
         "time_line_ts": st["time_ts"],
-        "query_text": query_text,
-        **_slow_metrics(st["meta_lines"]),
-        "query_text_raw": ("\n" + query_text) if st["kept_lines"] else "",
-        "ts_epoch": st["set_ts"] if st["set_ts"] is not None else st["time_ts"],
-        "query_fingerprint": fingerprint_py(query_text),
+        "kept_lines": st["kept_lines"],
+        "meta_lines": st["meta_lines"],
     }
-    return row
+
+
+def _slow_frame(out: list[dict]) -> pd.DataFrame:
+    # object dtype: a long column with None would otherwise become
+    # float64 and round values past 2**53; ``ts`` stays datetime64 so
+    # Arrow reads it in the session timezone, as it was delivered
+    frame = pd.DataFrame(out, columns=_SLOW_ENTRY_COLS, dtype=object)
+    frame["ts"] = pd.to_datetime(frame["ts"])
+    return frame
 
 
 def make_slow_assembler(emit_trailing: bool = False, flush_after_ms: int = 1000):
     """applyInPandasWithState callback running the reference slow-log FSM
-    (mariadb-log-consumer.py:897-954) with cross-batch registers.  Entry
+    (mariadb-log-consumer.py:897-954) with cross-batch registers over
+    ``slow_line_values`` rows; it emits SLOW_ENTRY_SCHEMA rows.  Entry
     ids count every entry START (zero-SQL entries occupy an id but are
     never emitted), matching the batch classifier's numbering.  With
     ``emit_trailing=False`` (the reference default) the timeout only
@@ -358,19 +317,10 @@ def make_slow_assembler(emit_trailing: bool = False, flush_after_ms: int = 1000)
         }
 
     def _to_tuple(d: dict) -> tuple:
-        return (
-            d["prev_type"], d["entry_count"], d["open"], d["start_turn"],
-            d["ts_us"], d["role"], d["tool"], d["sql_count"],
-            d["kept_lines"], d["set_ts"], d["time_ts"], d["meta_lines"],
-        )
+        return tuple(d[k] for k in _SLOW_STATE_KEYS)
 
     def _from_tuple(t: tuple) -> dict:
-        keys = [
-            "prev_type", "entry_count", "open", "start_turn", "ts_us",
-            "role", "tool", "sql_count", "kept_lines", "set_ts", "time_ts",
-            "meta_lines",
-        ]
-        d = dict(zip(keys, t))
+        d = dict(zip(_SLOW_STATE_KEYS, t))
         d["kept_lines"] = list(d["kept_lines"] or [])
         d["meta_lines"] = list(d["meta_lines"] or [])
         return d
@@ -395,7 +345,7 @@ def make_slow_assembler(emit_trailing: bool = False, flush_after_ms: int = 1000)
             )
             state.update(_to_tuple(st))
             if out:
-                yield pd.DataFrame(out, columns=_SLOW_COLS)
+                yield _slow_frame(out)
             return
 
         st = _from_tuple(state.get) if state.exists else _open_state()
@@ -405,13 +355,10 @@ def make_slow_assembler(emit_trailing: bool = False, flush_after_ms: int = 1000)
         rows.sort(key=lambda r: r.turn_idx)
 
         for r in rows:
-            line = _RSTRIP.sub("", r.text or "")
-            if not line:
-                continue
             is_new_entry = False
-            if line[0:2] == "# ":
+            if r.is_hash:
                 if st["prev_type"] is None or st["prev_type"] == "SQL":
-                    if line[1:7] == " Time:":
+                    if r.is_time:
                         is_new_entry = True
                         line_type = "META"
                     else:
@@ -424,41 +371,31 @@ def make_slow_assembler(emit_trailing: bool = False, flush_after_ms: int = 1000)
             if is_new_entry:
                 if st["open"] and st["sql_count"] >= 1:
                     out.append(_slow_entry_row(conv_id, st))
-                ts_us = (
-                    int(r.ts.value // 1000)
-                    if isinstance(r.ts, pd.Timestamp) else None
-                )
                 st.update(
                     open=True, entry_count=st["entry_count"] + 1,
-                    start_turn=int(r.turn_idx), ts_us=ts_us, role=r.role,
-                    tool=r.tool, sql_count=0, kept_lines=[], set_ts=None,
-                    time_ts=_parse_time_line(line),
-                    meta_lines=[line],
+                    start_turn=int(r.turn_idx), ts_us=_ts_us(r.ts),
+                    role=r.role, tool=r.tool, sql_count=0, kept_lines=[],
+                    set_ts=None, time_ts=_long(r.time_ts),
+                    meta_lines=[r.line],
                 )
             elif st["open"]:
                 if line_type == "META":
-                    st["meta_lines"] = st["meta_lines"] + [line]
+                    st["meta_lines"] = st["meta_lines"] + [r.line]
                 elif line_type == "SQL":
                     pos = st["sql_count"]
-                    if pos == 0 and line[0:4] == "use ":
+                    if pos == 0 and r.is_use:
                         pass  # skipped (position-0 only)
-                    elif pos == 1 and line[0:14] == "SET timestamp=":
-                        try:
-                            st["set_ts"] = int(line[14 : len(line) - 1])
-                        except ValueError:
-                            st["set_ts"] = None
-                        else:
-                            if st["set_ts"] > _I64_MAX:
-                                st["set_ts"] = None
+                    elif pos == 1 and r.is_set:
+                        st["set_ts"] = _long(r.set_ts)
                     else:
-                        st["kept_lines"] = st["kept_lines"] + [line]
+                        st["kept_lines"] = st["kept_lines"] + [r.line]
                     st["sql_count"] += 1
             st["prev_type"] = line_type
 
         state.update(_to_tuple(st))
         state.setTimeoutDuration(flush_after_ms)
         if out:
-            yield pd.DataFrame(out, columns=_SLOW_COLS)
+            yield _slow_frame(out)
 
     return assemble
 
@@ -474,30 +411,11 @@ def assemble_slow_entries_stateful(
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     fn = make_slow_assembler(emit_trailing, flush_after_ms)
-    return transcripts.groupBy("conv_id").applyInPandasWithState(
+    entries = slow_line_values(transcripts).groupBy("conv_id").applyInPandasWithState(
         fn,
-        outputStructType=SLOW_OUTPUT_SCHEMA,
+        outputStructType=SLOW_ENTRY_SCHEMA,
         stateStructType=SLOW_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )
-
-
-def assemble_entries_stateful(
-    transcripts,  # streaming DataFrame with transcript schema
-    mode: str = "intended",
-    flush_after_ms: int = 1000,
-):
-    """Streaming entry assembly with cross-batch state.  Emits each entry
-    when its successor's first line arrives; flushes the trailing open
-    entry after ``flush_after_ms`` of silence on the conversation."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    fn = make_assembler(mode, flush_after_ms)
-    return transcripts.groupBy("conv_id").applyInPandasWithState(
-        fn,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
+    return slow_entry_columns(entries)

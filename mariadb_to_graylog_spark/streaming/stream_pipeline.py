@@ -10,9 +10,12 @@ Entry assembly is a *cross-row, order-sensitive* computation, so the
 streaming flavor runs the batch plan inside ``foreachBatch``: each
 micro-batch is a closed set of whole conversations-so-far deltas.  For
 true cross-batch entries (a conversation's continuation lines arriving in
-a later batch) use ``streaming/stateful.assemble_entries_stateful`` --
-per-conversation ``applyInPandasWithState`` buffering, tested
-byte-identical to batch assembly across a 3-batch split.
+a later batch) use ``start_stateful_pipeline_stream``
+(``streaming/stateful.py``): the batch line parses run row-locally on the
+stream and per-conversation ``applyInPandasWithState`` keeps only the
+FSM registers and the open entry, tested byte-identical to batch assembly
+across a 3-batch split.  ``windowed_severity_counts`` counts the same
+parse's entry starts.
 
 Delivery semantics, honestly:
 
@@ -35,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from mariadb_to_graylog_spark.datagen import TRANSCRIPT_SCHEMA
+from mariadb_to_graylog_spark.operators.errorlog import parse_error_log_lines
 from mariadb_to_graylog_spark.plans.pipeline import PipelineConfig, build_routed
 from mariadb_to_graylog_spark.sinks.clients import SinkConfig, make_partition_sender
 from mariadb_to_graylog_spark.sources.eventlog_compat import EventlogCompat
@@ -163,18 +167,14 @@ def start_stateful_pipeline_stream(
 def windowed_severity_counts(
     transcripts: DataFrame, window: str = "5 minutes", watermark: str = "10 minutes"
 ) -> DataFrame:
-    """Native streaming aggregation (no foreachBatch): per-window severity
-    counts over entry-start lines, with late-data watermarking -- the
-    streaming analogue of A2's histogram."""
-    line = F.regexp_replace(F.col("text"), r"\s+$", "")
-    sev = F.upper(
-        F.translate(F.regexp_extract(line, r"\[(\w+)\]", 1), "[]", "")
-    )
-    starts = transcripts.filter(
-        line.rlike(r"^\d{4}-\d{1,2}-\d{1,2}\s") | line.rlike(r"^\d{6}\s")
-    )
+    """Native streaming aggregation (no foreachBatch): per-window counts of
+    entry-start lines by severity, both as the batch
+    ``parse_error_log_lines`` decides them (the parse is row-local, so it
+    runs on a stream), with late-data watermarking -- the streaming
+    analogue of A2's histogram."""
+    starts = parse_error_log_lines(transcripts).filter(F.col("is_entry_start"))
     return (
         starts.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), sev.alias("severity"))
+        .groupBy(F.window("ts", window), "severity")
         .agg(F.count(F.lit(1)).alias("n"))
     )

@@ -132,6 +132,31 @@ def simulate_error_log(
     return out
 
 
+def slow_line_values(lines: list[str]) -> list[dict]:
+    """Per non-empty line, the values the cross-batch slow-log FSM reads
+    (streaming/stateful.slow_line_values), with the reference's own
+    slicing (:873-895,915-931).  The reference never parses the
+    ``# Time:`` line (P9 is declared but unimplemented), so ``time_ts``
+    is None."""
+    out = []
+    for i, raw in enumerate(lines):
+        line = raw.rstrip()
+        if not line:
+            continue
+        is_set = line[0:14] == "SET timestamp="
+        out.append({
+            "turn_idx": i,
+            "line": line,
+            "is_hash": line[0:2] == "# ",
+            "is_time": line[0:7] == "# Time:",
+            "is_use": line[0:4] == "use ",
+            "is_set": is_set,
+            "set_ts": int(line[14 : len(line) - 1]) if is_set else None,
+            "time_ts": None,
+        })
+    return out
+
+
 def simulate_slow_log(
     lines: list[str], emit_trailing: bool = False
 ) -> list[dict]:

@@ -198,6 +198,25 @@ def test_lineage_and_resume(spark, transcripts, tmp_path):
     assert not (k1 & k2) or n_straddle == 0
 
 
+def test_resume_filter_join_follows_broadcast_threshold(spark, transcripts):
+    """The lineage marks hold one row per conversation ever seen, so
+    resume_filter forces no broadcast: with autoBroadcastJoinThreshold=-1
+    the executed plan has no BroadcastExchange."""
+    lineage = spark.createDataFrame(
+        [("c0", 3), ("c1", 1)], "conv_id string, max_turn_idx int"
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        df = resume_filter(transcripts, lineage)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert "BroadcastExchange" not in plan
+
+
 def test_scalable_pipeline_equals_default(spark, transcripts):
     a = build_routed(transcripts, PipelineConfig(scalable=False))
     b = build_routed(transcripts, PipelineConfig(scalable=True))

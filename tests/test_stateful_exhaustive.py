@@ -1,9 +1,13 @@
 """Exhaustive split-point tests for the cross-batch assemblers: the FSM
 state round-trip must be correct no matter WHERE the micro-batch boundary
 falls.  Runs the applyInPandasWithState callbacks directly against a fake
-GroupState (no Spark session), comparing to the pure-Python
-reference-semantics simulator for every single split position and a set of
-random multi-way splits."""
+GroupState, comparing to the pure-Python reference-semantics simulator for
+every single split position and a set of random multi-way splits.
+
+The callbacks read pre-parsed rows: the fixed corpora are parsed once with
+the Spark line parses the streams run (``error_line_values`` /
+``slow_line_values``); the property test takes its per-line values from
+``reference_sim.slow_line_values`` so it needs no Spark call per example."""
 
 from __future__ import annotations
 
@@ -11,6 +15,7 @@ import math
 import random
 
 import pandas as pd
+import pytest
 
 
 def _norm(v):
@@ -23,8 +28,10 @@ def _norm(v):
         return int(v)
     return v
 
-from reference_sim import simulate_error_log, simulate_slow_log
+from conftest import make_conv
+from reference_sim import simulate_error_log, simulate_slow_log, slow_line_values
 from test_slowlog import CORPUS as SLOW_CORPUS
+from mariadb_to_graylog_spark.streaming import stateful
 from mariadb_to_graylog_spark.streaming.stateful import (
     make_assembler,
     make_slow_assembler,
@@ -40,6 +47,16 @@ ERROR_CORPUS = [
     "2019-11-01 16:10:55 5 [Warning] last entry",
     "trailing continuation",
 ]
+
+
+@pytest.fixture(scope="module")
+def slow_rows(spark):
+    return stateful.slow_line_values(make_conv(spark, SLOW_CORPUS)).toPandas()
+
+
+@pytest.fixture(scope="module")
+def error_rows(spark):
+    return stateful.error_line_values(make_conv(spark, ERROR_CORPUS)).toPandas()
 
 
 class FakeState:
@@ -67,81 +84,71 @@ class FakeState:
         pass
 
 
-def _pdf(lines, turn_offset):
-    return pd.DataFrame(
-        {
-            "conv_id": ["c"] * len(lines),
-            "turn_idx": [turn_offset + i for i in range(len(lines))],
-            "role": ["user"] * len(lines),
-            "text": lines,
-            "tool": [None] * len(lines),
-            "ts": [pd.Timestamp("2024-01-01")] * len(lines),
-        }
-    )
-
-
-def _run_chunks(fn, chunks):
+def _run_chunks(fn, rows: pd.DataFrame, cuts: list[int]):
+    """Feed ``rows`` as micro-batches cut at the turn_idx values ``cuts``;
+    a batch with no rows for the key does not call the callback."""
     state = FakeState()
-    rows: list[dict] = []
-    off = 0
-    for chunk in chunks:
-        for frame in fn(("c",), iter([_pdf(chunk, off)]), state):
-            rows.extend(frame.to_dict("records"))
-        off += len(chunk)
+    out: list[dict] = []
+    bounds = [0, *cuts, math.inf]
+    for lo, hi in zip(bounds, bounds[1:]):
+        chunk = rows[(rows.turn_idx >= lo) & (rows.turn_idx < hi)]
+        if len(chunk):
+            for frame in fn(("c",), iter([chunk]), state):
+                out.extend(frame.to_dict("records"))
     # stream-end: the processing-time timeout fires with no new data
     if state.exists:
         state.hasTimedOut = True
         for frame in fn(("c",), iter([]), state):
-            rows.extend(frame.to_dict("records"))
-    return rows
+            out.extend(frame.to_dict("records"))
+    return out
 
 
-def _all_splits(corpus):
-    yield [corpus]  # single batch
-    for i in range(1, len(corpus)):  # every 2-way split point
-        yield [corpus[:i], corpus[i:]]
+def _all_splits(n: int):
+    yield []  # single batch
+    for i in range(1, n):  # every 2-way split point
+        yield [i]
     rng = random.Random(7)
     for _ in range(20):  # random 3-4 way splits
-        cuts = sorted(rng.sample(range(1, len(corpus)), rng.choice([2, 3])))
-        parts, prev = [], 0
-        for c in cuts + [len(corpus)]:
-            parts.append(corpus[prev:c])
-            prev = c
-        yield parts
+        yield sorted(rng.sample(range(1, n), rng.choice([2, 3])))
 
 
-def test_slow_fsm_every_split_point_matches_simulator():
+def _query_text(entry: dict) -> str:
+    # the reference accumulates '' + '\n' + line per kept line (:821-826)
+    return "".join("\n" + ln for ln in entry["kept_lines"])
+
+
+def test_slow_fsm_every_split_point_matches_simulator(slow_rows):
     expected = simulate_slow_log(SLOW_CORPUS, emit_trailing=True)
-    for chunks in _all_splits(SLOW_CORPUS):
+    for cuts in _all_splits(len(SLOW_CORPUS)):
         fn = make_slow_assembler(emit_trailing=True)
-        got = _run_chunks(fn, chunks)
-        assert [r["query_text_raw"] for r in got] == [
+        got = _run_chunks(fn, slow_rows, cuts)
+        assert [_query_text(r) for r in got] == [
             e["query_text"] for e in expected
-        ], chunks
+        ], cuts
         assert [_norm(r["set_timestamp"]) for r in got] == [
             e["set_timestamp"] for e in expected
-        ], chunks
+        ], cuts
 
 
-def test_slow_fsm_trailing_drop_every_split_point():
+def test_slow_fsm_trailing_drop_every_split_point(slow_rows):
     expected = simulate_slow_log(SLOW_CORPUS, emit_trailing=False)
-    for chunks in _all_splits(SLOW_CORPUS):
-        got = _run_chunks(make_slow_assembler(emit_trailing=False), chunks)
-        assert [r["query_text_raw"] for r in got] == [
+    for cuts in _all_splits(len(SLOW_CORPUS)):
+        got = _run_chunks(make_slow_assembler(emit_trailing=False), slow_rows, cuts)
+        assert [_query_text(r) for r in got] == [
             e["query_text"] for e in expected
-        ], chunks
+        ], cuts
 
 
-def test_error_strict_every_split_point_matches_simulator():
+def test_error_strict_every_split_point_matches_simulator(error_rows):
     expected = simulate_error_log(ERROR_CORPUS)
-    for chunks in _all_splits(ERROR_CORPUS):
-        got = _run_chunks(make_assembler(mode="strict"), chunks)
+    for cuts in _all_splits(len(ERROR_CORPUS)):
+        got = _run_chunks(make_assembler(mode="strict"), error_rows, cuts)
         assert [r["short_message"] for r in got] == [
             e["short_message"] for e in expected
-        ], chunks
+        ], cuts
         assert [str(_norm(r["ts_epoch"])) for r in got] == [
             e["timestamp"] for e in expected
-        ], chunks
+        ], cuts
 
 
 from hypothesis import given, settings  # noqa: E402
@@ -162,6 +169,15 @@ _LINE_KINDS = st.one_of(
 )
 
 
+def _reference_rows(lines: list[str]) -> pd.DataFrame:
+    rows = pd.DataFrame(
+        slow_line_values(lines),
+        columns=["turn_idx", "line", "is_hash", "is_time", "is_use",
+                 "is_set", "set_ts", "time_ts"],
+    )
+    return rows.assign(conv_id="c", ts=pd.Timestamp("2024-01-01"), role="user", tool=None)
+
+
 @settings(max_examples=200, deadline=None)
 @given(
     st.lists(_LINE_KINDS, min_size=0, max_size=24),
@@ -173,13 +189,14 @@ def test_slow_fsm_random_corpora_random_splits(lines, seed, emit_trailing):
     stateful FSM emits exactly the simulator's entries."""
     expected = simulate_slow_log(lines, emit_trailing=emit_trailing)
     rng = random.Random(seed)
-    chunks, i = [], 0
+    cuts, i = [], 0
     while i < len(lines):
-        j = rng.randint(i + 1, len(lines))
-        chunks.append(lines[i:j])
-        i = j
-    got = _run_chunks(make_slow_assembler(emit_trailing=emit_trailing), chunks)
-    assert [r["query_text_raw"] for r in got] == [e["query_text"] for e in expected]
+        i = rng.randint(i + 1, len(lines))
+        cuts.append(i)
+    got = _run_chunks(
+        make_slow_assembler(emit_trailing=emit_trailing), _reference_rows(lines), cuts
+    )
+    assert [_query_text(r) for r in got] == [e["query_text"] for e in expected]
     assert [_norm(r["set_timestamp"]) for r in got] == [
         e["set_timestamp"] for e in expected
     ]

@@ -1,8 +1,8 @@
 """Cross-batch streaming entry assembly (applyInPandasWithState): the
-Python line-parse twin must equal the Spark parse field-for-field, and one
-conversation split across THREE micro-batches must assemble byte-identical
-entries to batch mode (the round-1 boundary documented in
-stream_pipeline.py:9-15, now closed)."""
+stateful callbacks read the batch column parses, so one conversation split
+across THREE micro-batches must assemble byte-identical entries to batch
+mode -- for the edge-line and Unicode corpora too, where a Python parse
+twin used to drift from the Spark one."""
 
 from __future__ import annotations
 
@@ -10,14 +10,10 @@ import time
 from datetime import datetime, timezone
 
 import pytest
-from pyspark.sql import functions as F
 
 from mariadb_to_graylog_spark.operators.assembly import assemble_error_entries
 from mariadb_to_graylog_spark.operators.errorlog import parse_error_log_lines
-from mariadb_to_graylog_spark.streaming.stateful import (
-    _parse_error_line,
-    assemble_entries_stateful,
-)
+from mariadb_to_graylog_spark.streaming.stateful import assemble_entries_stateful
 
 LINES = [
     "2019-11-01 16:10:48 0 [Note] InnoDB: Using Linux native AIO",
@@ -40,6 +36,27 @@ EDGE_LINES = LINES + [
     "680101 00:00:00 [Note] pivot 68 -> 2068",
     "2019-1-2 3:4:5 9 [Note] single digit everything",
     "2019-11-01 16:10:48",  # bare timestamp, no level/message
+    None,  # NULL text: a continuation the intended join skips
+    "  2019-11-01 16:11:00 3 [Note] indented entry start",
+]
+
+# one slow entry on which a Python parse twin disagreed with the batch
+# column parse (Java regex classes are ASCII, Python's are Unicode; the
+# ISO '# Time:' fraction is not always 6 digits), then two plain entries
+SLOW_UNICODE = [
+    "# Time: 2023-10-30T12:40:21.123",
+    "# User@Host: app[app] @ localhost [127.0.0.1]",
+    "# Thread_id: \u0664\u0662  Schema:\xa0shop  QC_hit: N\xf6",
+    "# Query_time: 0.5  Lock_time: 0.0  Rows_sent: 1\uff10  Rows_examined: 2",
+    "use shop;",
+    "SET timestamp=9007199254740993;",  # 2**53 + 1: exact only as a long
+    "SELECT 1;",
+    "# Time: 231030 12:40:25",
+    "# Thread_id: 7  Schema: s  QC_hit: Yes",
+    "SELECT 2;",
+    "# Time: 231030 12:41:00",
+    "# Rows_sent: 3",
+    "SELECT 3;",
 ]
 
 
@@ -55,32 +72,59 @@ def _conv_df(spark, lines, conv_id="conv-x", turn_offset=0):
     )
 
 
-def test_python_parse_twin_equals_spark_parse(spark):
-    df = _conv_df(spark, EDGE_LINES)
-    got = {
-        r.turn_idx: r
-        for r in parse_error_log_lines(df).select(
-            "turn_idx", "is_entry_start", "ts_epoch", "thread_raw",
-            "level_raw", "severity", "short_message", "message",
-        ).collect()
-    }
-    for i, ln in enumerate(EDGE_LINES):
-        p = _parse_error_line(ln)
-        r = got[i]
-        assert p["is_entry_start"] == r.is_entry_start, (i, ln)
-        assert p["ts_epoch"] == r.ts_epoch, (i, ln)
-        assert p["thread_raw"] == r.thread_raw, (i, ln)
-        assert p["level_raw"] == r.level_raw, (i, ln)
-        assert p["severity"] == r.severity, (i, ln)
-        assert p["short_message"] == r.short_message, (i, ln)
-        assert p["message"] == r.message, (i, ln)
+def _write_batches(spark, src, convs):
+    """Three micro-batches: ``convs`` maps conv_id -> (lines, (cut1, cut2));
+    batch i holds every conversation's i-th slice.  One parquet FILE per
+    batch (a batch split across part-files would become several
+    out-of-order micro-batches under maxFilesPerTrigger=1)."""
+    for i in range(3):
+        parts = []
+        for conv_id, (lines, cuts) in convs.items():
+            lo = (0, *cuts)[i]
+            hi = (*cuts, len(lines))[i]
+            parts.append(_conv_df(spark, lines[lo:hi], conv_id, lo))
+        batch = parts[0]
+        for p in parts[1:]:
+            batch = batch.union(p)
+        batch.coalesce(1).write.mode("append" if i else "overwrite").parquet(src)
+        time.sleep(1.1)  # distinct mod times -> deterministic file order
+
+
+def _read_stream(spark, src):
+    from mariadb_to_graylog_spark.datagen import TRANSCRIPT_SCHEMA
+
+    return (
+        spark.readStream.schema(TRANSCRIPT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .option("latestFirst", "false")
+        .parquet(src)
+    )
+
+
+def _drain(spark, q, name, n):
+    """Poll the memory sink for ``n`` rows: processAllAvailable() never
+    returns under ProcessingTimeTimeout (expired-state cleanup keeps
+    scheduling batches); trailing entries arrive via the timeout flush."""
+    deadline = time.time() + 120
+    while time.time() < deadline:
+        if q.exception() is not None:
+            raise AssertionError(q.exception())
+        if spark.sql(f"select count(*) from {name}").first()[0] >= n:
+            break
+        time.sleep(1)
+    q.stop()
+    return [
+        r.asDict()
+        for r in spark.sql(f"select * from {name}")
+        .orderBy("conv_id", "entry_id")
+        .collect()
+    ]
 
 
 def test_stateful_pipeline_stream_matches_batch_routing(spark, tmp_path):
     """The CLI-reachable stateful streaming pipeline (assemble -> enrich ->
     route -> file sink): routed GELF set equals the batch error branch over
     the same conversation split across three micro-batches."""
-    from mariadb_to_graylog_spark.datagen import TRANSCRIPT_SCHEMA
     from mariadb_to_graylog_spark.operators.routing import route
     from mariadb_to_graylog_spark.plans.pipeline import (
         PipelineConfig,
@@ -92,22 +136,10 @@ def test_stateful_pipeline_stream_matches_batch_routing(spark, tmp_path):
     )
 
     src = str(tmp_path / "src_routed")
-    chunks = [LINES[0:3], LINES[3:6], LINES[6:9]]
-    off = 0
-    for i, chunk in enumerate(chunks):
-        _conv_df(spark, chunk, turn_offset=off).coalesce(1).write.mode(
-            "append" if i else "overwrite"
-        ).parquet(src)
-        off += len(chunk)
-        time.sleep(1.1)
+    _write_batches(spark, src, {"conv-x": (LINES, (3, 6))})
 
     cfg = PipelineConfig(mode="intended")
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
+    stream = _read_stream(spark, src)
     sink_base = str(tmp_path / "routed_sinks")
     q = start_stateful_pipeline_stream(
         stream, sink_base, str(tmp_path / "ckpt_routed"),
@@ -150,125 +182,63 @@ def test_stateful_pipeline_stream_matches_batch_routing(spark, tmp_path):
 
 @pytest.mark.parametrize("emit_trailing", [False, True])
 def test_cross_batch_slowlog_equals_batch(spark, tmp_path, emit_trailing):
-    """Slow-log FSM with cross-batch registers: the corpus split across
+    """Slow-log FSM with cross-batch registers: each corpus split across
     THREE micro-batches (boundaries INSIDE entries: mid-meta, mid-SQL)
     must equal batch parse_slow_log column-for-column, including metrics,
-    timestamps and fingerprints."""
+    timestamps and fingerprints, with the same column names and types."""
     from test_slowlog import CORPUS
 
-    from mariadb_to_graylog_spark.datagen import TRANSCRIPT_SCHEMA
     from mariadb_to_graylog_spark.operators.slowlog import parse_slow_log
     from mariadb_to_graylog_spark.streaming.stateful import (
         assemble_slow_entries_stateful,
     )
 
+    convs = {"conv-x": (CORPUS, (9, 17)), "conv-u": (SLOW_UNICODE, (3, 9))}
     src = str(tmp_path / f"slow_{emit_trailing}")
-    chunks = [CORPUS[0:9], CORPUS[9:17], CORPUS[17:]]  # mid-entry splits
-    off = 0
-    for i, chunk in enumerate(chunks):
-        _conv_df(spark, chunk, turn_offset=off).coalesce(1).write.mode(
-            "append" if i else "overwrite"
-        ).parquet(src)
-        off += len(chunk)
-        time.sleep(1.1)
+    _write_batches(spark, src, convs)
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
     entries = assemble_slow_entries_stateful(
-        stream, emit_trailing=emit_trailing, flush_after_ms=200
+        _read_stream(spark, src), emit_trailing=emit_trailing, flush_after_ms=200
     )
     name = f"slow_stateful_{emit_trailing}"
     q = (
         entries.writeStream.format("memory")
         .queryName(name).outputMode("append").start()
     )
-    expected = [
-        r.asDict()
-        for r in parse_slow_log(_conv_df(spark, CORPUS), emit_trailing=emit_trailing)
-        .orderBy("entry_id")
-        .collect()
-    ]
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        if q.exception() is not None:
-            raise AssertionError(q.exception())
-        if spark.sql(f"select count(*) from {name}").first()[0] >= len(expected):
-            break
-        time.sleep(1)
-    q.stop()
-    got = [
-        r.asDict()
-        for r in spark.sql(f"select * from {name}").orderBy("entry_id").collect()
-    ]
-    assert len(got) == len(expected) == (4 if emit_trailing else 3)
+    full = _conv_df(spark, CORPUS).union(_conv_df(spark, SLOW_UNICODE, "conv-u"))
+    batch = parse_slow_log(full, emit_trailing=emit_trailing)
+    assert entries.dtypes == batch.dtypes
+    expected = [r.asDict() for r in batch.orderBy("conv_id", "entry_id").collect()]
+    got = _drain(spark, q, name, len(expected))
+    # every entry but the trailing one per conversation, unless emitted
+    assert len(expected) == (7 if emit_trailing else 5)
+    assert len(got) == len(expected)
     for g, e in zip(got, expected):
         for col in e:
-            assert g[col] == e[col], (col, g[col], e[col])
+            assert g[col] == e[col], (e["conv_id"], e["entry_id"], col, g[col], e[col])
 
 
 @pytest.mark.parametrize("mode", ["intended", "strict"])
 def test_cross_batch_assembly_equals_batch(spark, tmp_path, mode):
-    from mariadb_to_graylog_spark.datagen import TRANSCRIPT_SCHEMA
-
+    convs = {"conv-x": (LINES, (3, 6)), "conv-e": (EDGE_LINES, (4, 10))}
     src = str(tmp_path / f"src_{mode}")
-    # one conversation split across THREE files = three micro-batches
-    chunks = [LINES[0:3], LINES[3:6], LINES[6:9]]
-    off = 0
-    for i, chunk in enumerate(chunks):
-        # one FILE per chunk (a chunk split across part-files would become
-        # several out-of-order micro-batches under maxFilesPerTrigger=1)
-        _conv_df(spark, chunk, turn_offset=off).coalesce(1).write.mode(
-            "append" if i else "overwrite"
-        ).parquet(src)
-        off += len(chunk)
-        time.sleep(1.1)  # distinct mod times -> deterministic file order
+    _write_batches(spark, src, convs)
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
+    entries = assemble_entries_stateful(
+        _read_stream(spark, src), mode=mode, flush_after_ms=200
     )
-    entries = assemble_entries_stateful(stream, mode=mode, flush_after_ms=200)
-    q = (
-        entries.writeStream.format("memory")
-        .queryName(f"stateful_{mode}")
-        .outputMode("append")
-        .start()
-    )
-    # NOTE: processAllAvailable() never returns under ProcessingTimeTimeout
-    # (expired-state cleanup keeps scheduling batches), so poll the sink:
-    # 3 complete entries arrive with the data batches, the 4th (trailing)
-    # via the timeout flush.
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        if q.exception() is not None:
-            raise AssertionError(q.exception())
-        n = spark.sql(f"select count(*) from stateful_{mode}").first()[0]
-        if n >= 4:
-            break
-        time.sleep(1)
-    q.stop()
-
-    got = [
-        r.asDict()
-        for r in spark.sql(f"select * from stateful_{mode}")
-        .filter(F.col("conv_id") == "conv-x")
-        .orderBy("entry_id")
-        .collect()
-    ]
-    full = _conv_df(spark, LINES)
+    name = f"stateful_{mode}"
+    q = entries.writeStream.format("memory").queryName(name).outputMode("append").start()
+    full = _conv_df(spark, LINES).union(_conv_df(spark, EDGE_LINES, "conv-e"))
     expected = [
         r.asDict()
         for r in assemble_error_entries(parse_error_log_lines(full), mode=mode)
-        .orderBy("entry_id")
+        .orderBy("conv_id", "entry_id")
         .collect()
     ]
-    assert len(got) == len(expected) == 4
+    got = _drain(spark, q, name, len(expected))
+    assert sum(e["conv_id"] == "conv-x" for e in expected) == 4
+    assert len(got) == len(expected)
     for g, e in zip(got, expected):
         assert g == e, (g, e)
 
@@ -278,18 +248,12 @@ def test_entry_ids_continue_after_timeout_flush(spark, tmp_path):
     timeout-flushed continues the entry_id sequence (counter-only state row
     survives the flush); state.remove() would restart ids at 1 and mint
     duplicate (conv_id, entry_id) keys."""
-    from mariadb_to_graylog_spark.datagen import TRANSCRIPT_SCHEMA
-
     src = str(tmp_path / "src_resume")
     _conv_df(spark, LINES[0:6]).coalesce(1).write.mode("overwrite").parquet(src)
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
+    entries = assemble_entries_stateful(
+        _read_stream(spark, src), mode="intended", flush_after_ms=200
     )
-    entries = assemble_entries_stateful(stream, mode="intended", flush_after_ms=200)
     q = (
         entries.writeStream.format("memory")
         .queryName("stateful_resume")

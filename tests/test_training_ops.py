@@ -1292,39 +1292,35 @@ def test_paragraph_near_ops_expose_units_cache(spark):
     exposes the handle as result.units_cache, unpersisting it clears the
     cache, and the default (off -- measured slower at bench scale, see
     near_paragraph_frequency) leaves the handle None and results equal."""
-    from mariadb_to_graylog_spark.operators.paragraphs import (
-        drop_near_duplicate_paragraphs,
-        paragraph_near_stats,
-    )
+    from mariadb_to_graylog_spark.operators.paragraphs import paragraph_near_stats
 
     d = spark.createDataFrame(
         [(1, "alpha body\n\nshared footer"), (2, "beta body\n\nshared footer")],
         "doc_id long, text string",
     )
-    for fn in (paragraph_near_stats, drop_near_duplicate_paragraphs):
-        out = fn(d, persist_units=True)
-        rows = sorted(tuple(r) for r in out.collect())
-        assert out.units_cache.storageLevel.useMemory
-        out.units_cache.unpersist()
-        assert not out.units_cache.storageLevel.useMemory
-        plain = fn(d)
-        assert plain.units_cache is None
-        assert sorted(tuple(r) for r in plain.collect()) == rows
-        # chain-safe handle: the units_cache ATTRIBUTE dies on the first
-        # chained transformation, so cache_out=[] receives the handle
-        # explicitly and it survives arbitrary chaining of the result
-        handles = []
-        out2 = fn(d, persist_units=True, cache_out=handles)
-        chained = out2.filter(F.lit(True))
-        assert not hasattr(chained, "units_cache")  # the attribute is gone
-        assert len(handles) == 1 and handles[0].storageLevel.useMemory
-        chained.collect()
-        handles[0].unpersist()
-        assert not handles[0].storageLevel.useMemory
-        # default off: nothing appended
-        empty = []
-        fn(d, cache_out=empty).collect()
-        assert empty == []
+    out = paragraph_near_stats(d, persist_units=True)
+    rows = sorted(tuple(r) for r in out.collect())
+    assert out.units_cache.storageLevel.useMemory
+    out.units_cache.unpersist()
+    assert not out.units_cache.storageLevel.useMemory
+    plain = paragraph_near_stats(d)
+    assert plain.units_cache is None
+    assert sorted(tuple(r) for r in plain.collect()) == rows
+    # chain-safe handle: the units_cache ATTRIBUTE dies on the first
+    # chained transformation, so cache_out=[] receives the handle
+    # explicitly and it survives arbitrary chaining of the result
+    handles = []
+    out2 = paragraph_near_stats(d, persist_units=True, cache_out=handles)
+    chained = out2.filter(F.lit(True))
+    assert not hasattr(chained, "units_cache")  # the attribute is gone
+    assert len(handles) == 1 and handles[0].storageLevel.useMemory
+    chained.collect()
+    handles[0].unpersist()
+    assert not handles[0].storageLevel.useMemory
+    # default off: nothing appended
+    empty = []
+    paragraph_near_stats(d, cache_out=empty).collect()
+    assert empty == []
 
 
 def test_contamination_flag_udf_reuses_supplied_broadcast(spark):
@@ -1976,10 +1972,8 @@ def test_paragraph_near_dedup_templated_boilerplate(spark):
     per-doc variation: every footer instance is md5-UNIQUE, so exact
     paragraph_stats sees zero duplication -- the near path must flag the
     footer in every doc (one-hop LSH-verified neighborhood spans all
-    docs) while leaving the unique bodies alone, and the near cleaner
-    must strip exactly the footers."""
+    docs) while leaving the unique bodies alone."""
     from mariadb_to_graylog_spark.operators.paragraphs import (
-        drop_near_duplicate_paragraphs,
         paragraph_near_stats,
         paragraph_stats,
     )
@@ -2007,11 +2001,6 @@ def test_paragraph_near_dedup_templated_boilerplate(spark):
         assert near[i].n_near_dup_paras == 1, f"doc {i} footer not flagged"
         assert near[i].near_dup_ratio == 0.5
         assert 0.0 < near[i].near_boilerplate_frac < 1.0
-
-    clean = {r.doc_id: r for r in drop_near_duplicate_paragraphs(d, threshold=0.6).collect()}
-    for i in range(1, 5):
-        assert clean[i].clean_text == bodies[i - 1]
-        assert clean[i].n_dropped == 1
 
 
 def test_crosslingual_near_dup_catches_confusable_copies(spark, docs):
@@ -2418,8 +2407,19 @@ def test_streaming_windowed_counts(spark, transcripts, tmp_path):
         windowed_severity_counts,
     )
 
+    from conftest import make_conv
+
+    from mariadb_to_graylog_spark.operators.errorlog import parse_error_log_lines
+
+    # an invalid calendar date is no entry start; an indented one is
+    edge = make_conv(spark, [
+        "2019-13-40 10:00:00 1 [Note] invalid calendar date",
+        "   2019-11-01 16:10:48 0 [Warning] indented entry start",
+        "201030 12:40:21 [ERROR] format 2 start",
+    ])
+    data = transcripts.union(edge)
     src = str(tmp_path / "src2")
-    transcripts.write.parquet(src)
+    data.write.parquet(src)
     stream = read_transcript_stream(spark, src, max_files_per_trigger=100)
     agg = windowed_severity_counts(stream)
     q = (
@@ -2430,8 +2430,16 @@ def test_streaming_windowed_counts(spark, transcripts, tmp_path):
     )
     q.processAllAvailable()
     q.stop()
-    rows = spark.sql("SELECT * FROM sevcounts").collect()
-    assert sum(r.n for r in rows) > 0
+    key = lambda r: (r.window.start, r.window.end, r.severity, r.n)  # noqa: E731
+    got = sorted(map(key, spark.sql("SELECT * FROM sevcounts").collect()))
+    expected = sorted(map(key, (
+        parse_error_log_lines(data)
+        .filter("is_entry_start")
+        .groupBy(F.window("ts", "5 minutes"), "severity")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    )))
+    assert got == expected and sum(r[3] for r in got) > 0
 
 
 def test_quality_threshold_sweep_monotone(spark):
