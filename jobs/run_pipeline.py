@@ -219,9 +219,20 @@ def main(argv: list[str] | None = None) -> int:
         )
         stream = read_transcript_stream(spark, args.input)
         if args.stateful_assembly:
+            from pyspark import SparkConf
+
             from mariadb_to_graylog_spark.streaming.stream_pipeline import (
                 start_stateful_pipeline_stream,
             )
+
+            # AQE does not coalesce a stateful operator's partitions, so a
+            # vanilla session's 200 would make every micro-batch (empty
+            # timeout-only ones too) run 200 state tasks.  Without a
+            # launcher value, size them to the workers; a restart keeps
+            # the count its checkpoint recorded, as Spark requires.
+            key = "spark.sql.shuffle.partitions"
+            if not SparkConf().contains(key):
+                spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
 
             q = start_stateful_pipeline_stream(
                 stream,

@@ -27,8 +27,14 @@ Reference semantics preserved:
   falsy at flush, :947-948).
 * META metric extraction (P9) is *declared but unimplemented* in the
   reference (_metrics at :86-106 stays empty; TODO.md:9); this engine
-  implements the intended extraction for all 18 fields as JVM-side
-  ``regexp_extract`` columns (no Python UDF on the batch path).
+  implements the intended extraction for all 17 fields of
+  ``META_FIELD_PATTERNS`` as JVM-side ``regexp_extract`` columns (no
+  Python UDF on the batch path).  They are taken after the per-entry
+  aggregate, over the entry's collected META lines only.
+
+One entry tail for batch and stream: ``assemble_slow_entries`` aggregates
+each entry into the raw-entry shape the cross-batch FSM emits
+(streaming/stateful.py) and both hand it to ``slow_entry_columns``.
 
 Headers before the first entry are dropped (reference state ``None``,
 :937-939).  A ``'# '`` comment line appearing before any entry would crash
@@ -76,15 +82,22 @@ METRIC_COLS = list(META_FIELD_PATTERNS)
 # ---------------------------------------------------------------------------
 
 
+def is_time_line(line: Column) -> Column:
+    """The ``'# Time:'`` prefix of an entry-start candidate: line[0:2] ==
+    '# ' and line[1:7] == ' Time:'.  Trailing whitespace never reaches a
+    matching prefix, so the flag reads the same before and after rstrip."""
+    return F.substring(line, 1, 7) == "# Time:"
+
+
 def slow_lines(df: DataFrame, text_col: str = "text") -> DataFrame:
     """rstripped non-empty ``line`` (empty lines are FSM no-ops, :901-902)
-    plus its ``_is_hash`` (``'# '``) and ``_is_time`` (``'# Time:'``)
+    plus its ``_is_hash`` (``'# '``) and ``_is_time`` (``is_time_line``)
     prefix flags."""
     line = F.regexp_replace(F.col(text_col), r"\s+$", "")
     out = df.withColumn("line", line).filter(F.col("line") != "")
     is_hash = F.substring("line", 1, 2) == "# "
-    is_time = F.substring("line", 2, 6) == " Time:"  # line[1:7] == ' Time:'
-    return out.withColumn("_is_hash", is_hash).withColumn("_is_time", is_hash & is_time)
+    is_time = is_time_line(F.col("line"))
+    return out.withColumn("_is_hash", is_hash).withColumn("_is_time", is_time)
 
 
 def is_use_line(line: Column) -> Column:
@@ -138,26 +151,43 @@ def meta_value(line: Column, name: str) -> Column:
     return F.when(v != "", v).try_cast(typ)
 
 
-def entry_tail_cols(kept_count: Column) -> list[Column]:
-    """The per-entry columns derived from ``query_text``, ``set_timestamp``
-    and ``time_line_ts``.  ``query_text_raw`` is byte-equal to the
-    reference's accumulated string, which starts with '\\n' (the first
-    append is ''+'\\n'+line, :821-826); ``query_text`` is the clean join."""
-    return [
-        F.when(kept_count > 0, F.concat(F.lit("\n"), F.col("query_text")))
+def slow_entry_columns(entries: DataFrame) -> DataFrame:
+    """Raw entries -- head columns, ``set_timestamp``, ``time_line_ts``,
+    ``kept_lines`` and ``meta_lines`` (streaming/stateful.SLOW_ENTRY_SCHEMA)
+    -- to the ``parse_slow_log`` columns.  Batch assembly and the
+    cross-batch stream both end here.
+
+    Each metric is the max of ``meta_value`` over the META lines.
+    ``query_text_raw`` is byte-equal to the reference's accumulated string,
+    which starts with '\\n' (the first append is ''+'\\n'+line,
+    :821-826); ``query_text`` is the clean join."""
+    head = [c for c in entries.columns if c not in ("kept_lines", "meta_lines")]
+    out = entries.select(
+        *head,
+        F.array_join("kept_lines", "\n").alias("query_text"),
+        *(
+            F.array_max(F.transform("meta_lines", lambda ln: meta_value(ln, n))).alias(n)
+            for n in METRIC_COLS
+        ),
+        F.size("kept_lines").alias("_kept_count"),
+    )
+    query_text = F.col("query_text")
+    return out.select(
+        "*",
+        F.when(F.col("_kept_count") > 0, F.concat(F.lit("\n"), query_text))
         .otherwise(F.lit(""))
         .alias("query_text_raw"),
         F.coalesce("set_timestamp", "time_line_ts").alias("ts_epoch"),
-        fingerprint_col(F.col("query_text")).alias("query_fingerprint"),
-    ]
+        fingerprint_col(query_text).alias("query_fingerprint"),
+    ).drop("_kept_count")
 
 
 def classify_slow_log_lines(
     df: DataFrame, conv_col: str = "conv_id", order_col: str = "turn_idx",
     text_col: str = "text",
 ) -> DataFrame:
-    """Line classification (P6): adds ``line, is_meta, is_sql, entry_id,
-    sql_pos`` columns.  Empty lines are removed (FSM no-ops).
+    """Line classification (P6): adds ``line, is_entry_start, entry_id,
+    is_meta, is_sql`` columns.  Empty lines are removed (FSM no-ops).
 
     Physical shape: every window below shares ONE spec -- partitionBy
     conv_id, orderBy turn_idx -- so the whole classification costs a single
@@ -171,9 +201,10 @@ def classify_slow_log_lines(
     * first-Time-of-run (entry start)  -> 'the last Time line seen lies
       before my run's start turn';
     * same-run-as-entry-start (META)   -> 'the last entry start lies at or
-      after my run's start turn';
-    * SQL position within entry        -> global running SQL count minus
-      its value at the entry start.
+      after my run's start turn'.
+
+    A SQL line's position within its entry is not numbered here: the
+    entry aggregate sorts the SQL lines into an array and reads indexes.
     """
     out = slow_lines(df, text_col)
 
@@ -214,19 +245,9 @@ def classify_slow_log_lines(
         F.col("_is_hash") & (last_entry_start_turn >= F.col("_run_start_turn")),
     )
     out = out.withColumn("is_sql", ~F.col("is_meta"))
-
-    # 0-based SQL-section line number (query_line), counting skipped lines
-    sql_cum = F.sum(F.col("is_sql").cast("long")).over(w_cum)
-    out = out.withColumn("_sql_cum", sql_cum)
-    entry_base = F.max(
-        F.when(F.col("is_entry_start"), F.col("_sql_cum"))
-    ).over(w_cum)
-    out = out.withColumn(
-        "sql_pos", F.when(F.col("is_sql"), F.col("_sql_cum") - entry_base - 1)
-    )
     return (
         out.filter(F.col("entry_id") > 0)
-        .drop("_is_hash", "_is_time", "_run_start_turn", "_sql_cum")
+        .drop("_is_hash", "_is_time", "_run_start_turn")
     )
 
 
@@ -245,10 +266,9 @@ def classify_slow_log_lines_scalable(
     assembly.add_entry_ids_scalable; tested equal to the window classifier
     with block_size forced tiny to stress the boundaries).
 
-    Four scan layers mirror the classifier's dependency chain:
-    run-starts (needs the previous block's last-row hash flag, a tiny
-    edge join) -> run/time turns -> entry ids + last entry start ->
-    sql position base.
+    Two scan layers mirror the classifier's dependency chain after the
+    run-starts (which need the previous block's last-row hash flag, a tiny
+    edge join): run/time turns -> entry ids + last entry start.
     """
     out = slow_lines(df, text_col)
     out = out.withColumn("_blk", F.floor(F.col(order_col) / F.lit(block_size)))
@@ -310,26 +330,9 @@ def classify_slow_log_lines_scalable(
         "is_meta",
         F.col("_is_hash") & (F.col("_last_start_turn") >= F.col("_run_start_turn")),
     ).withColumn("is_sql", ~F.col("is_meta"))
-
-    # layer 3: running SQL-line count
-    out = scan_layer(
-        out, [("_sql_cum", F.col("is_sql").cast("long"), "sum", False)],
-        conv_col, order_col,
-    )
-    # layer 4: the entry's base SQL count (running max of the count AT
-    # entry starts -- monotone, so max == most recent)
-    out = scan_layer(
-        out,
-        [("_entry_base", F.when(F.col("is_entry_start"), F.col("_sql_cum")), "max", False)],
-        conv_col, order_col,
-    )
-    out = out.withColumn(
-        "sql_pos",
-        F.when(F.col("is_sql"), F.col("_sql_cum") - F.col("_entry_base") - 1),
-    )
     return out.filter(F.col("entry_id") > 0).drop(
         "_is_hash", "_is_time", "_blk", "_run_start", "_run_start_turn",
-        "_prev_time_turn", "_last_start_turn", "_sql_cum", "_entry_base",
+        "_prev_time_turn", "_last_start_turn",
     )
 
 
@@ -339,48 +342,25 @@ def assemble_slow_entries(
     order_col: str = "turn_idx",
     emit_trailing: bool = False,
 ) -> DataFrame:
-    """Group classified lines into slow-log entries (P7-P10)."""
-    df = classified
-
+    """Group classified lines into slow-log entries (P7-P10): one aggregate
+    builds the raw entry the cross-batch stream emits, and
+    ``slow_entry_columns`` derives the rest.  The entry's SQL lines are
+    collected sorted by turn, so the positional rules read array indexes:
+    ``use`` is skipped only at index 0, ``SET timestamp=`` harvested and
+    skipped only at index 1 (:873-895)."""
     line = F.col("line")
-    sql_pos = F.col("sql_pos")
-    skip = ((sql_pos == 0) & is_use_line(line)) | (
-        (sql_pos == 1) & is_set_timestamp_line(line)
+    sql_line = F.when(
+        F.col("is_sql"), F.struct(F.col(order_col).alias("i"), line.alias("m"))
     )
-    df = df.select(
-        "*",
-        F.when(sql_pos == 1, set_timestamp_value(line)).alias("_set_ts"),
-        skip.alias("_skip"),
-        F.when(F.col("is_entry_start"), time_line_epoch(line)).alias("_time_line_ts"),
-    )
-
-    meta_line = F.when(F.col("is_meta"), F.col("line"))
-    df = df.select(
-        "*", *(meta_value(meta_line, n).alias(f"_m_{n}") for n in METRIC_COLS)
-    )
-    metric_aggs = [F.max(f"_m_{n}").alias(n) for n in METRIC_COLS]
-
-    sql_struct = F.when(
-        F.col("is_sql") & ~F.col("_skip"),
-        F.struct(F.col(order_col).alias("i"), F.col("line").alias("m")),
-    )
-    agg = (
-        df.groupBy(conv_col, "entry_id")
-        .agg(
-            F.min(order_col).alias("start_turn_idx"),
-            F.min_by("ts", order_col).alias("ts"),
-            F.min_by("role", order_col).alias("role"),
-            F.min_by("tool", order_col).alias("tool"),
-            F.sum(F.col("is_sql").cast("long")).alias("_sql_line_count"),
-            F.max("_set_ts").alias("set_timestamp"),
-            F.max("_time_line_ts").alias("time_line_ts"),
-            F.array_join(
-                F.transform(F.sort_array(F.collect_list(sql_struct)), lambda s: s["m"]),
-                "\n",
-            ).alias("query_text"),
-            F.count(sql_struct).alias("_kept_count"),
-            *metric_aggs,
-        )
+    agg = classified.groupBy(conv_col, "entry_id").agg(
+        F.min(order_col).alias("start_turn_idx"),
+        F.min_by("ts", order_col).alias("ts"),
+        F.min_by("role", order_col).alias("role"),
+        F.min_by("tool", order_col).alias("tool"),
+        # an entry's first line is its '# Time:' start
+        F.min_by("line", order_col).alias("_head"),
+        F.transform(F.sort_array(F.collect_list(sql_line)), lambda s: s["m"]).alias("_sql"),
+        F.collect_list(F.when(F.col("is_meta"), line)).alias("meta_lines"),
     )
 
     # Trailing drop BEFORE the >=1-SQL-line filter: the reference flushes
@@ -397,11 +377,18 @@ def assemble_slow_entries(
 
     # entries with no SQL-section lines are never emitted (query_line falsy
     # at flush, :947-948)
-    agg = agg.filter(F.col("_sql_line_count") >= 1)
+    agg = agg.filter(F.size("_sql") >= 1)
 
-    return agg.select("*", *entry_tail_cols(F.col("_kept_count"))).drop(
-        "_sql_line_count", "_kept_count"
-    )
+    def skipped(x: Column, i: Column) -> Column:
+        return ((i == 0) & is_use_line(x)) | ((i == 1) & is_set_timestamp_line(x))
+
+    return slow_entry_columns(agg.select(
+        conv_col, "entry_id", "start_turn_idx", "ts", "role", "tool",
+        set_timestamp_value(F.get("_sql", 1)).alias("set_timestamp"),
+        time_line_epoch(F.col("_head")).alias("time_line_ts"),
+        F.filter("_sql", lambda x, i: ~skipped(x, i)).alias("kept_lines"),
+        "meta_lines",
+    ))
 
 
 def parse_slow_log(

@@ -47,7 +47,7 @@ from mariadb_to_graylog_spark.operators.errorlog import (
     parse_error_log_lines,
 )
 from mariadb_to_graylog_spark.operators.routing import RouterConfig, route
-from mariadb_to_graylog_spark.operators.slowlog import parse_slow_log
+from mariadb_to_graylog_spark.operators.slowlog import is_time_line, parse_slow_log
 
 EVENT_COLS = [
     "source",
@@ -83,11 +83,6 @@ class PipelineConfig:
     router: RouterConfig = field(default_factory=RouterConfig)
 
 
-def _slow_signature(text_col: str = "text"):
-    line = F.regexp_replace(F.col(text_col), r"\s+$", "")
-    return (F.substring(line, 1, 2) == "# ") & (F.substring(line, 2, 6) == " Time:")
-
-
 def split_dialects(
     transcripts: DataFrame, share_scan: str = "recompute"
 ) -> tuple[DataFrame, DataFrame]:
@@ -115,7 +110,7 @@ def split_dialects(
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
     flagged = prepared.withColumn(
-        "_is_slow_conv", F.max(_slow_signature().cast("int")).over(w) > 0
+        "_is_slow_conv", F.max(is_time_line(F.col("text")).cast("int")).over(w) > 0
     )
     if share_scan == "persist":
         flagged = flagged.persist()

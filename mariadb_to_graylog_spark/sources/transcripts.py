@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -122,10 +123,16 @@ def write_lineage(lineage: DataFrame, path: str) -> None:
 
 
 def read_lineage(spark: SparkSession, path: str) -> DataFrame | None:
+    """The lineage table, or None when no run has written one yet: a
+    missing path or a directory holding no lineage.  Any other failure (a
+    corrupt file, a denied read) raises; read as "no lineage" it would
+    make a resume re-route every consumed turn."""
     try:
         return spark.read.parquet(path)
-    except Exception:
-        return None
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
 
 
 def resume_filter(transcripts: DataFrame, lineage: DataFrame | None) -> DataFrame:

@@ -19,10 +19,11 @@ The line grammar has one definition, the batch column expressions.  Each
 line is parsed row-locally BEFORE the state call (error dialect:
 ``operators/errorlog.parse_error_log_lines``; slow dialect: the per-line
 helpers of ``operators/slowlog.py``), so the callbacks hold only the
-cross-batch FSM registers and the open entry.  The slow-log entry's
-metrics, ``query_text_raw``, ``ts_epoch`` and fingerprint are computed
-AFTER the state call from its META/kept lines with the same helpers the
-batch aggregate uses.
+cross-batch FSM registers and the open entry.  The slow-log callback
+emits raw entries (its META and kept lines); their metrics,
+``query_text_raw``, ``ts_epoch`` and fingerprint are computed AFTER the
+state call by ``operators/slowlog.slow_entry_columns``, the tail batch
+``assemble_slow_entries`` ends in too.
 
 BOTH dialects are covered: ``assemble_entries_stateful`` (error log) and
 ``assemble_slow_entries_stateful`` (the slow-log FSM with its registers in
@@ -44,12 +45,10 @@ from pyspark.sql import functions as F
 
 from mariadb_to_graylog_spark.operators.errorlog import parse_error_log_lines
 from mariadb_to_graylog_spark.operators.slowlog import (
-    METRIC_COLS,
-    entry_tail_cols,
     is_set_timestamp_line,
     is_use_line,
-    meta_value,
     set_timestamp_value,
+    slow_entry_columns,
     slow_lines,
     time_line_epoch,
 )
@@ -219,8 +218,8 @@ def assemble_entries_stateful(
 # slow-log dialect: the reference FSM with cross-batch state
 # ---------------------------------------------------------------------------
 
-# the raw entries the callback emits; the rest of the output is derived
-# from their lines after the state call
+# the raw entries the callback emits; slowlog.slow_entry_columns derives
+# the rest of the output from their lines after the state call
 SLOW_ENTRY_SCHEMA = (
     "conv_id string, entry_id long, start_turn_idx int, ts timestamp, "
     "role string, tool string, set_timestamp long, time_line_ts long, "
@@ -256,22 +255,6 @@ def slow_line_values(transcripts: DataFrame) -> DataFrame:
         set_timestamp_value(line).cast("decimal(20,0)").alias("set_ts"),
         F.when(F.col("_is_time"), time_line_epoch(line)).alias("time_ts"),
     )
-
-
-def slow_entry_columns(entries: DataFrame) -> DataFrame:
-    """Raw entries (SLOW_ENTRY_SCHEMA) -> the batch ``parse_slow_log``
-    columns: metrics are the max of ``meta_value`` over the META lines,
-    the tail is ``entry_tail_cols``."""
-    out = entries.select(
-        *_SLOW_ENTRY_COLS[:-2],  # all but kept_lines, meta_lines
-        F.array_join("kept_lines", "\n").alias("query_text"),
-        *(
-            F.array_max(F.transform("meta_lines", lambda ln: meta_value(ln, n))).alias(n)
-            for n in METRIC_COLS
-        ),
-        F.size("kept_lines").alias("_kept_count"),
-    )
-    return out.select("*", *entry_tail_cols(F.col("_kept_count"))).drop("_kept_count")
 
 
 def _slow_entry_row(conv_id: str, st: dict) -> dict:

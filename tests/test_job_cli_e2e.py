@@ -238,3 +238,67 @@ def test_job_cli_workers_import_package_from_any_cwd(transcripts, tmp_path):
     n_routed = int(re.search(r"routed (\d+) events", proc.stdout).group(1))
     assert n_routed > 0
     assert len(got) == n_routed
+
+
+def test_job_cli_stateful_slow_stream_sizes_state_partitions(spark, tmp_path):
+    """``--stateful-assembly`` in a vanilla CLI session: the state
+    operator's partitions follow the workers' parallelism, as recorded in
+    the checkpoint (the built-in 200 made every micro-batch, empty
+    timeout-only ones too, run 200 state tasks), and the stream routes
+    the same sinks as the batch CLI over the same input."""
+    import json
+    import signal
+
+    from conftest import make_conv
+    from test_slowlog import CORPUS
+    from test_streaming_stateful import SLOW_UNICODE
+
+    # one file, so the stream reads every line in its first micro-batch
+    src_path = str(tmp_path / "transcripts")
+    make_conv(spark, CORPUS, "conv-a").union(
+        make_conv(spark, SLOW_UNICODE, "conv-b")
+    ).coalesce(1).write.parquet(src_path)
+
+    def sinks(path):
+        rows = spark.read.parquet(path).select("sink", "gelf_json").collect()
+        return sorted((r.sink, r.gelf_json) for r in rows)
+
+    batch_out = str(tmp_path / "batch")
+    assert job_main(["--input", src_path, "--output", batch_out]) == 0
+    expected = sinks(batch_out)
+    assert expected
+
+    repo = Path(__file__).resolve().parent.parent
+    out, ckpt, log = str(tmp_path / "stream"), tmp_path / "ckpt", tmp_path / "job.log"
+    env = dict(
+        os.environ, PYTHONPATH=str(repo),
+        PYSPARK_SUBMIT_ARGS="--master local[2] pyspark-shell",
+    )
+    with open(log, "w") as log_f:
+        proc = subprocess.Popen(
+            [
+                sys.executable, str(repo / "jobs" / "run_pipeline.py"),
+                "--input", src_path, "--output", out,
+                "--stop", "NEVER", "--checkpoint", str(ckpt),
+                "--stateful-assembly", "--log-type", "SLOW", "--eof-wait", "500",
+            ],
+            cwd=str(repo), env=env, stdout=log_f, stderr=subprocess.STDOUT,
+        )
+        try:
+            # the first micro-batch's commit means the entries it flushed
+            # are in the sink (the trailing ones are dropped at their
+            # timeout, as in batch)
+            deadline = time.time() + 300
+            while not (ckpt / "commits" / "0").exists():
+                assert proc.poll() is None, log.read_text()[-3000:]
+                assert time.time() < deadline, "no committed micro-batch in 300s"
+                time.sleep(1)
+            os.kill(proc.pid, signal.SIGTERM)
+            assert proc.wait(timeout=120) == 0, log.read_text()[-3000:]
+        finally:
+            if proc.poll() is None:
+                proc.kill()
+
+    offset_meta = json.loads((ckpt / "offsets" / "0").read_text().splitlines()[1])
+    assert offset_meta["conf"]["spark.sql.shuffle.partitions"] == "2"
+    assert sinks(out) == expected

@@ -236,3 +236,18 @@ def test_fanout_write(spark, transcripts, tmp_path):
     assert {r.sink for r in back.select("sink").distinct().collect()} == {
         r.sink for r in routed.select("sink").distinct().filter(F.col("sink") != "dropped").collect()
     }
+
+
+def test_read_lineage_none_only_when_no_lineage(spark, tmp_path):
+    """No lineage yet (a missing path, an empty directory) reads as None;
+    a corrupt lineage file raises instead of silently re-routing every
+    consumed turn on resume."""
+    assert read_lineage(spark, str(tmp_path / "missing")) is None
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert read_lineage(spark, str(empty)) is None
+    corrupt = tmp_path / "corrupt"
+    corrupt.mkdir()
+    (corrupt / "part-0.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        read_lineage(spark, str(corrupt))

@@ -47,6 +47,26 @@ CORPUS = [
     "DELETE FROM t WHERE id IN (1, 2, 3);",
 ]
 
+# the positional skips at the ends of an entry's SQL-line array
+SQL_ARRAY_EDGES = [
+    "# Time: 231030 12:40:21",
+    "use a;",
+    "use b;",  # a 'use' at position 1 is kept
+    "SELECT 1;",
+    "# Time: 231030 12:40:22",
+    "use x;",  # alone: skipped, the entry is emitted with no text
+    "# Time: 231030 12:40:23",
+    "use x;",
+    "SET timestamp=7;",  # both skipped, 7 harvested
+    "# Time: 231030 12:40:24",
+    "SELECT 1;",
+    "SET timestamp=7;",  # position 1 is skipped without a 'use'
+    "# Time: 231030 12:40:25",
+    "SET timestamp=7;",  # alone at position 0: kept, not harvested
+    "# Time: 231030 12:40:26",
+    "SELECT 2;",
+]
+
 
 def spark_slow_entries(spark, lines, **kw):
     df = make_conv(spark, lines)
@@ -55,12 +75,15 @@ def spark_slow_entries(spark, lines, **kw):
 
 @pytest.mark.parametrize("emit_trailing", [False, True])
 def test_corpus_matches_reference_fsm(spark, emit_trailing):
-    expected = simulate_slow_log(CORPUS, emit_trailing=emit_trailing)
-    got = spark_slow_entries(spark, CORPUS, emit_trailing=emit_trailing)
-    assert len(got) == len(expected)
-    for row, exp in zip(got, expected):
-        assert row.query_text_raw == exp["query_text"]
-        assert row.set_timestamp == exp["set_timestamp"]
+    for lines in (CORPUS, SQL_ARRAY_EDGES):
+        expected = simulate_slow_log(lines, emit_trailing=emit_trailing)
+        got = spark_slow_entries(spark, lines, emit_trailing=emit_trailing)
+        assert len(got) == len(expected)
+        for row, exp in zip(got, expected):
+            assert row.query_text_raw == exp["query_text"]
+            assert row.set_timestamp == exp["set_timestamp"]
+    # SQL_ARRAY_EDGES, last in the loop, harvests exactly at index 1
+    assert [e["set_timestamp"] for e in expected][:5] == [None, None, 7, 7, None]
 
 
 def test_metrics_extraction(spark):
@@ -182,7 +205,7 @@ def test_scalable_classifier_equals_window_classifier(spark, block_size):
     )
 
     df = make_conv(spark, CORPUS)
-    cols = ["turn_idx", "line", "is_entry_start", "entry_id", "is_meta", "is_sql", "sql_pos"]
+    cols = ["turn_idx", "line", "is_entry_start", "entry_id", "is_meta", "is_sql"]
     ref = [tuple(r) for r in classify_slow_log_lines(df).select(cols).orderBy("turn_idx").collect()]
     got = [
         tuple(r)
@@ -225,7 +248,7 @@ def test_scalable_classifier_carries_hash_flag_across_empty_blocks(
     df = spark.createDataFrame(
         [("c", t, x) for t, x in rows], "conv_id string, turn_idx int, text string"
     )
-    cols = ["turn_idx", "is_entry_start", "entry_id", "is_meta", "is_sql", "sql_pos"]
+    cols = ["turn_idx", "is_entry_start", "entry_id", "is_meta", "is_sql"]
     ref = [tuple(r) for r in classify_slow_log_lines(df).select(cols).orderBy("turn_idx").collect()]
     got = [
         tuple(r)
@@ -256,6 +279,30 @@ def test_scalable_classifier_leaves_join_strategy_to_aqe(spark):
     finally:
         spark.conf.set(key, old)
     assert "BroadcastExchange" not in plan
+
+
+def test_slow_log_plan_shape(spark):
+    """SQL-line positions are indexes into the entry's sorted SQL-line
+    array, not running windows: ``parse_slow_log`` plans 6 Window nodes
+    (8 while two more windows numbered SQL lines).  The block-scan
+    classifier joins 3 times in sequence -- the hash-flag edge carry and
+    two scan layers (5 with the two SQL-numbering layers).  Each join's
+    carries side re-plans the same input, so n sequential joins show as
+    2**n - 1 join nodes in the plan tree: 7, not 31."""
+    import re
+
+    from mariadb_to_graylog_spark.operators.slowlog import (
+        classify_slow_log_lines_scalable,
+    )
+
+    def nodes(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return re.findall(r"(?m)^[\s:|+\-*()\d]*([A-Za-z]+)", plan)
+
+    df = make_conv(spark, CORPUS)
+    assert nodes(parse_slow_log(df)).count("Window") <= 6
+    joins = [n for n in nodes(classify_slow_log_lines_scalable(df)) if n.endswith("Join")]
+    assert len(joins) <= 2**3 - 1
 
 
 def test_scalable_full_parse_on_datagen_corpus(spark, transcripts):
