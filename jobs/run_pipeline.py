@@ -362,9 +362,17 @@ def main(argv: list[str] | None = None) -> int:
 
     # aggregates + lineage read the just-written sink tables: one extra scan
     # of the (much smaller) routed output instead of recomputing the plan --
-    # reading only THIS run's partition directory.
+    # reading only THIS run's partition directory, with the schema the
+    # write had (``sink`` becomes the trailing partition column), so no
+    # Spark job infers it from the files.
     if n_routed > 0:
-        written = spark.read.parquet(out_dir)
+        from pyspark.sql.types import StringType, StructField, StructType
+
+        sinks_schema = StructType(
+            [f for f in routed.schema.fields if f.name != "sink"]
+            + [StructField("sink", StringType())]
+        )
+        written = spark.read.schema(sinks_schema).parquet(out_dir)
         if metrics_dir:
             combined_counts(written).write.mode("append").parquet(metrics_dir)
         if args.lineage or args.eventlog_file:

@@ -1,16 +1,17 @@
-"""Constant lookups for enrichment, as column expressions.
+"""Constant lookups for enrichment, as SQL-text column expressions.
 
 The reference's only lookup is the severity -> GELF level if-chain at
 lib_consumer/gelf_message.py:36-47 ("ERROR"->"3", "WARNING"->"4",
 "NOTE"->"6", else "UNKNOWN").  That mapping and the role/tool dims are
 row constants; ``lookup`` turns them into the same if-chain as a CASE
-column, so enrichment adds no join, broadcast or Spark job to a plan.
+column, so enrichment adds no join, broadcast or Spark job to a plan.  The
+CASE is SQL text (functions/sqltext.py): enrichment's one projection
+crosses to the JVM in one call instead of one per WHEN/THEN node.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from mariadb_to_graylog_spark.functions.sqltext import case, lit
 
 # Exactly lib_consumer/gelf_message.py:40-45; UNKNOWN is the fallback
 # (gelf_message.py:47), applied by functions/gelf.gelf_level.
@@ -33,12 +34,11 @@ TOOL_ROWS = [
 ]
 
 
-def lookup(key: Column, rows: list[tuple[str, ...]], field: int) -> Column:
-    """``CASE WHEN key = row[0] THEN row[field] ... END``: NULL for an
-    unmatched or NULL key, as a left join would give, even under ANSI mode
-    (where a map ``element_at`` raises on a missing key)."""
-    first, *rest = rows
-    out = F.when(key == first[0], F.lit(first[field]))
-    for row in rest:
-        out = out.when(key == row[0], F.lit(row[field]))
-    return out
+def lookup(
+    key: str, rows: list[tuple[str, ...]], field: int, otherwise: str | None = None
+) -> str:
+    """``CASE WHEN key = row[0] THEN row[field] ... END`` as SQL text over
+    the expression ``key``: NULL (or ``otherwise``) for an unmatched or
+    NULL key, as a left join would give, even under ANSI mode (where a map
+    ``element_at`` raises on a missing key)."""
+    return case([(f"{key} = {lit(row[0])}", lit(row[field])) for row in rows], otherwise)

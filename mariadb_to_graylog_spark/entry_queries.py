@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mariadb_to_graylog_spark.functions.gelf import gelf_json_compat, gelf_level
+from mariadb_to_graylog_spark.functions.sqltext import lit
 from mariadb_to_graylog_spark.operators.assembly import (
     assemble_error_entries,
     with_entry_ids,
@@ -201,11 +202,9 @@ def _gelf_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = synth_error_transcripts(spark, sf_dir)
     parsed = parse_error_log_lines(t)
     entries = assemble_error_entries(parsed, mode="strict")
-    level = gelf_level(F.col("severity"))
-    gelf = gelf_json_compat(
-        F.lit(HOST), F.col("short_message"), F.col("ts_epoch"), level, F.col("message")
-    )
-    return entries.withColumns({"gelf_level": level, "gelf_json": gelf})
+    level = gelf_level("severity")
+    gelf = gelf_json_compat(lit(HOST), "short_message", "ts_epoch", level, "message")
+    return entries.withColumns({"gelf_level": F.expr(level), "gelf_json": F.expr(gelf)})
 
 
 def q_errorlog_gelf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -425,7 +424,7 @@ def q_slowlog_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fingerprint_sql(expr: str) -> str:
-    """The DuckDB twin of fingerprint_col, generated from the SAME rule
+    """The DuckDB twin of fingerprint_sql, generated from the SAME rule
     table so engine and oracle can never drift."""
     from mariadb_to_graylog_spark.operators.fingerprint import FINGERPRINT_RULES
 

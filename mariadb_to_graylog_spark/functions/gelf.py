@@ -16,96 +16,85 @@ Two serializers are provided:
 Severity -> GELF level (P12) is ``gelf_level``: the reference's if-chain
 (lib_consumer/gelf_message.py:36-47) as a CASE expression over
 ``dims.SEVERITY_ROWS`` with an ``UNKNOWN`` fallback -- a column, not a join.
+
+Every builder here maps SQL expression text to SQL expression text
+(functions/sqltext.py): the serializers are ~40-node expressions, and
+as Column-API calls each node cost a py4j round trip per plan build.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from mariadb_to_graylog_spark.dims import SEVERITY_ROWS, lookup
+from mariadb_to_graylog_spark.functions.sqltext import lit
 
 GELF_VERSION = "1.1"  # mariadb-log-consumer.py:119
 
+# reference escapes ONLY '"' -> '\"' (gelf_message.py:116); in a Java
+# replacement string a backslash is written '\\'
+_QUOTE, _ESCAPED_QUOTE = lit('"'), lit('\\\\"')
+_ASCII = lit(r"^[\x00-\x7F]*$")
 
-def gelf_level(severity: Column) -> Column:
+
+def gelf_level(severity: str) -> str:
     """Severity -> GELF level; unmatched or NULL -> 'UNKNOWN'."""
-    return lookup(severity, SEVERITY_ROWS, 1).otherwise(F.lit("UNKNOWN"))
-
-
-def _esc(c: Column) -> Column:
-    # reference escapes ONLY '"' -> '\"' (gelf_message.py:116)
-    return F.regexp_replace(c, '"', '\\\\"')
+    return lookup(severity, SEVERITY_ROWS, 1, otherwise=lit("UNKNOWN"))
 
 
 def gelf_fields(
-    host: Column,
-    short_message: Column,
-    ts_epoch: Column,
-    gelf_level: Column,
-    text: Column,
-) -> list[tuple[str, Column]]:
+    host: str,
+    short_message: str,
+    ts_epoch: str,
+    gelf_level: str,
+    text: str,
+) -> list[tuple[str, str]]:
     """(key, value) pairs in the reference's insertion order; every value a
-    string (gelf_message.py:96,116)."""
+    string (gelf_message.py:96,116).  Arguments and values are SQL text."""
     return [
-        ("version", F.lit(GELF_VERSION)),
-        ("host", host.cast("string")),
-        ("short_message", short_message.cast("string")),
-        ("timestamp", ts_epoch.cast("long").cast("string")),
-        ("level", gelf_level.cast("string")),
-        ("_text", text.cast("string")),
+        ("version", lit(GELF_VERSION)),
+        ("host", f"CAST({host} AS STRING)"),
+        ("short_message", f"CAST({short_message} AS STRING)"),
+        ("timestamp", f"CAST(CAST({ts_epoch} AS BIGINT) AS STRING)"),
+        ("level", f"CAST({gelf_level} AS STRING)"),
+        ("_text", f"CAST({text} AS STRING)"),
     ]
 
 
-def gelf_struct(
-    host: Column,
-    short_message: Column,
-    ts_epoch: Column,
-    gelf_level: Column,
-    text: Column,
-) -> Column:
-    return F.struct(
-        *[
-            v.alias(k)
-            for k, v in gelf_fields(host, short_message, ts_epoch, gelf_level, text)
-        ]
-    )
-
-
 def gelf_json_compat(
-    host: Column,
-    short_message: Column,
-    ts_epoch: Column,
-    gelf_level: Column,
-    text: Column,
-) -> Column:
+    host: str,
+    short_message: str,
+    ts_epoch: str,
+    gelf_level: str,
+    text: str,
+) -> str:
     """Byte-equal reimplementation of GELF_Message.to_string()."""
-    parts: list[Column] = [F.lit("{")]
+    parts = ["'{'"]
     for i, (k, v) in enumerate(
         gelf_fields(host, short_message, ts_epoch, gelf_level, text)
     ):
         sep = "," if i else ""
-        parts.append(F.lit(f'{sep}"{k}":"'))
+        parts.append(lit(f'{sep}"{k}":"'))
         # None values never occur in the reference (str() applied on entry);
         # mirror with coalesce to 'None' like str(None) would produce.
-        parts.append(_esc(F.coalesce(v, F.lit("None"))))
-        parts.append(F.lit('"'))
-    parts.append(F.lit("}"))
-    return F.concat(*parts)
+        parts.append(f"regexp_replace(coalesce({v}, 'None'), {_QUOTE}, {_ESCAPED_QUOTE})")
+        parts.append(lit('"'))
+    parts.append("'}'")
+    return f"concat({', '.join(parts)})"
 
 
 def gelf_json_strict(
-    host: Column,
-    short_message: Column,
-    ts_epoch: Column,
-    gelf_level: Column,
-    text: Column,
-) -> Column:
-    return F.to_json(gelf_struct(host, short_message, ts_epoch, gelf_level, text))
+    host: str,
+    short_message: str,
+    ts_epoch: str,
+    gelf_level: str,
+    text: str,
+) -> str:
+    fields = gelf_fields(host, short_message, ts_epoch, gelf_level, text)
+    return f"to_json(named_struct({', '.join(f'{lit(k)}, {v}' for k, v in fields)}))"
 
 
-def is_ascii(c: Column) -> Column:
+def is_ascii(c: str) -> str:
     """US-ASCII encodability (M4): the reference encodes the serialized
     message with ``bytearray(s, 'us-ascii')`` and any non-ASCII char raises,
     tripping sink failover (mariadb-log-consumer.py:567-583)."""
-    return c.rlike(r"^[\x00-\x7F]*$")
+    return f"{c} RLIKE {_ASCII}"
+

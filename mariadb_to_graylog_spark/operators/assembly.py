@@ -25,69 +25,62 @@ Two physical strategies, same result (tested equal):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mariadb_to_graylog_spark.functions.sqltext import BEFORE, RUNNING, ident, lit, project, window
+
 DEFAULT_BLOCK_SIZE = 1 << 16
+_NEWLINE = lit("\n")
 
 
 def scan_layer(
     df: DataFrame,
-    specs: list[tuple[str, Column, str, bool]],
+    specs: list[tuple[str, str, str, bool]],
     conv_col: str,
     order_col: str,
     block_col: str = "_blk",
 ) -> DataFrame:
     """One layer of distributed prefix scans over (conv, order): each spec
-    (name, value, kind 'sum'|'max', exclusive) becomes a running aggregate
-    computed as block-local window + per-block carry, over the existing
-    ``block_col`` column.
+    (name, value SQL text, kind 'sum'|'max', exclusive) becomes a running
+    aggregate computed as block-local window + per-block carry, over the
+    existing ``block_col`` column.
 
     The carries relation has one row per (conv, block) -- rows/block_size
     for a hot conversation, but at least one per conversation, so it is
     NOT small on many-conversation input and its join strategy is left to
     AQE.  Multiple specs share one groupBy.
     """
-    w_incl = (
-        Window.partitionBy(conv_col, block_col)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    conv, order, blk = ident(conv_col), ident(order_col), ident(block_col)
+    w_incl = window(f"{conv}, {blk}", order, RUNNING)
+    w_excl = window(f"{conv}, {blk}", order, BEFORE)
+    w_carry = window(conv, blk, BEFORE)
+    df = project(df, "*", *(f"{value} AS _v_{name}" for name, value, _, _ in specs))
+    df = project(df, "*", *(
+        f"{kind}(_v_{name}) {w_excl if exclusive else w_incl} AS _loc_{name}"
+        for name, _, kind, exclusive in specs
+    ))
+    totals = df.groupBy(conv_col, block_col).agg(
+        *(F.expr(f"{kind}(_v_{name}) AS _tot_{name}") for name, _, kind, _ in specs)
     )
-    w_excl = (
-        Window.partitionBy(conv_col, block_col)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_carry = (
-        Window.partitionBy(conv_col)
-        .orderBy(block_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    aggs, carry_cols = [], []
-    for name, value, kind, exclusive in specs:
-        df = df.withColumn(f"_v_{name}", value)
-        fn = F.sum if kind == "sum" else F.max
-        df = df.withColumn(
-            f"_loc_{name}", fn(f"_v_{name}").over(w_excl if exclusive else w_incl)
-        )
-        aggs.append(fn(f"_v_{name}").alias(f"_tot_{name}"))
-        carry_cols.append(fn(f"_tot_{name}").over(w_carry).alias(f"_carry_{name}"))
-    totals = df.groupBy(conv_col, block_col).agg(*aggs)
-    carries = totals.select(conv_col, block_col, *carry_cols)
+    carries = project(totals, conv, blk, *(
+        f"{kind}(_tot_{name}) {w_carry} AS _carry_{name}" for name, _, kind, _ in specs
+    ))
     df = df.join(carries, [conv_col, block_col], "left")
-    for name, _, kind, _ in specs:
+
+    def combined(name: str, kind: str) -> str:
         if kind == "sum":
-            combined = F.coalesce(f"_loc_{name}", F.lit(0)) + F.coalesce(
-                f"_carry_{name}", F.lit(0)
-            )
-        else:
-            # greatest() skips NULLs: null local (no value yet in block)
-            # falls back to the carry, and vice versa
-            combined = F.greatest(f"_loc_{name}", f"_carry_{name}")
-        df = df.withColumn(name, combined).drop(
-            f"_v_{name}", f"_loc_{name}", f"_carry_{name}"
-        )
-    return df
+            return f"coalesce(_loc_{name}, 0) + coalesce(_carry_{name}, 0)"
+        # greatest() skips NULLs: null local (no value yet in block) falls
+        # back to the carry, and vice versa
+        return f"greatest(_loc_{name}, _carry_{name})"
+
+    helpers = ", ".join(f"_{p}_{name}" for name, *_ in specs for p in ("v", "loc", "carry"))
+    return project(
+        df,
+        f"* EXCEPT ({helpers})",
+        *(f"{combined(name, kind)} AS {name}" for name, _, kind, _ in specs),
+    )
 
 
 def add_entry_ids(
@@ -96,12 +89,8 @@ def add_entry_ids(
     conv_col: str = "conv_id",
     order_col: str = "turn_idx",
 ) -> DataFrame:
-    w = (
-        Window.partitionBy(conv_col)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return df.withColumn("entry_id", F.sum(F.col(start_col).cast("long")).over(w))
+    w = window(ident(conv_col), ident(order_col), RUNNING)
+    return project(df, "*", f"sum(CAST({ident(start_col)} AS BIGINT)) {w} AS entry_id")
 
 
 def add_entry_ids_scalable(
@@ -112,14 +101,15 @@ def add_entry_ids_scalable(
     block_size: int = DEFAULT_BLOCK_SIZE,
 ) -> DataFrame:
     """Distributed prefix sum over (conv_id, turn_idx) -- see module doc."""
-    blocked = df.withColumn("_block", F.floor(F.col(order_col) / F.lit(block_size)))
-    return scan_layer(
+    blocked = project(df, "*", f"floor({ident(order_col)} / {lit(block_size)}) AS _block")
+    scanned = scan_layer(
         blocked,
-        [("entry_id", F.col(start_col).cast("long"), "sum", False)],
+        [("entry_id", f"CAST({ident(start_col)} AS BIGINT)", "sum", False)],
         conv_col,
         order_col,
         block_col="_block",
-    ).drop("_block")
+    )
+    return project(scanned, "* EXCEPT (_block)")
 
 
 def with_entry_ids(
@@ -158,58 +148,26 @@ def assemble_error_entries(
 
     with_ids = with_entry_ids(parsed, scalable=scalable, block_size=block_size,
                               conv_col=conv_col, order_col=order_col)
-    with_ids = with_ids.filter(F.col("entry_id") > 0)
+    conv, order = ident(conv_col), ident(order_col)
+    fields = ["ts_epoch", "thread_raw", "level_raw", "severity", "short_message"]
 
     if mode == "strict":
-        return (
-            with_ids.filter(F.col("is_entry_start"))
-            .select(
-                conv_col,
-                "entry_id",
-                F.col(order_col).alias("start_turn_idx"),
-                "ts",
-                "role",
-                "tool",
-                "ts_epoch",
-                "thread_raw",
-                "level_raw",
-                "severity",
-                "short_message",
-                "message",
-            )
+        return project(
+            with_ids.where("entry_id > 0 AND is_entry_start"),
+            conv, "entry_id", f"{order} AS start_turn_idx", "ts", "role", "tool",
+            *fields, "message",
         )
 
     # intended mode: one shuffle on (conv_id, entry_id); partial aggregation
     # (ObjectHashAggregate) runs map-side before the exchange.
-    heads = F.sort_array(
-        F.collect_list(F.struct(F.col(order_col).alias("i"), F.col("message").alias("m")))
+    heads = f"sort_array(collect_list(named_struct('i', {order}, 'm', message)))"
+    aggs = (
+        f"min({order}) AS start_turn_idx",
+        *(f"min_by({c}, {order}) AS {c}" for c in ("ts", "role", "tool", *fields)),
+        f"array_join(transform({heads}, s -> s.m), {_NEWLINE}) AS message",
     )
-    agg = (
-        with_ids.groupBy(conv_col, "entry_id")
-        .agg(
-            F.min(order_col).alias("start_turn_idx"),
-            F.min_by("ts", order_col).alias("ts"),
-            F.min_by("role", order_col).alias("role"),
-            F.min_by("tool", order_col).alias("tool"),
-            F.min_by("ts_epoch", order_col).alias("ts_epoch"),
-            F.min_by("thread_raw", order_col).alias("thread_raw"),
-            F.min_by("level_raw", order_col).alias("level_raw"),
-            F.min_by("severity", order_col).alias("severity"),
-            F.min_by("short_message", order_col).alias("short_message"),
-            F.array_join(F.transform(heads, lambda s: s["m"]), "\n").alias("message"),
-        )
-    )
-    return agg.select(
-        conv_col,
-        "entry_id",
-        "start_turn_idx",
-        "ts",
-        "role",
-        "tool",
-        "ts_epoch",
-        "thread_raw",
-        "level_raw",
-        "severity",
-        "short_message",
-        "message",
+    return (
+        with_ids.where("entry_id > 0")
+        .groupBy(conv_col, "entry_id")
+        .agg(*(F.expr(e) for e in aggs))
     )

@@ -2,7 +2,11 @@
 
 Re-expresses the reference's per-line cursor parser
 (``mariadb-log-consumer.py:622-733``) as pure Catalyst column expressions --
-whole-stage-codegen'd regexp extraction, no Python in the hot path.
+whole-stage-codegen'd regexp extraction, no Python in the hot path.  The
+expressions are written as Spark SQL text (functions/sqltext.py) and
+handed to the JVM one staged projection at a time: built through
+``pyspark.sql.functions`` they cost a py4j round trip or more per
+expression node, and building the plan took longer than running it.
 
 Reference semantics reproduced exactly:
 
@@ -43,25 +47,36 @@ error logs, documented rather than chased):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from mariadb_to_graylog_spark.functions.sqltext import case, ident, lit, project
 
 SHORT_MESSAGE_LENGTH = 20  # registry.py:31
 
 _F1_DATE_RE = r"^\d{4}-\d{1,2}-\d{1,2}$"
 _F2_DATE_RE = r"^(\d{2})(\d{2})(\d{2})$"
+_WS = lit(r"\s+")
+_RTRIM = lit(r"\s+$")
+_LTRIM = lit(r"^\s+")
+_TRIM = lit(r"^\s+|\s+$")
+_TIME_PART = lit(r"^\d{0,2}$")
 
 
-def _zfill2(c: Column) -> Column:
+def _zfill2(c: str) -> str:
     # str.zfill(2) pads but never truncates (Spark's lpad truncates);
     # note ''.zfill(2) == '00', so empty time components become midnight
     # parts exactly like the reference (:655-656).
-    return F.when(F.length(c) >= 2, c).otherwise(F.lpad(c, 2, "0"))
+    return case([(f"length({c}) >= 2", c)], f"lpad({c}, 2, '0')")
 
 
-def _strip(c: Column) -> Column:
+def _strip(c: str) -> str:
     # Python str.strip(): all leading/trailing whitespace.
-    return F.regexp_replace(c, r"^\s+|\s+$", "")
+    return f"regexp_replace({c}, {_TRIM}, '')"
+
+
+def _tok(arr: str, i: int) -> str:
+    # try_element_at: NULL (not an ANSI error) when the line has fewer tokens
+    return f"coalesce(try_element_at({arr}, {i}), '')"
 
 
 def parse_error_log_lines(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -73,7 +88,8 @@ def parse_error_log_lines(df: DataFrame, text_col: str = "text") -> DataFrame:
     per output column blows the janino 64KB codegen method limit and drops
     the stage to interpreted mode (observed; this shape keeps
     WholeStageCodegen).  The parquet scan still prunes to the referenced
-    columns only.
+    columns only.  Each stage is one projection of SQL text
+    (functions/sqltext.py).
     """
     # stage 1: rstrip + tokenization.  One split pass replaces per-word
     # regexp_extracts (measured: the parse stage is CPU-bound, ~91% of
@@ -81,120 +97,68 @@ def parse_error_log_lines(df: DataFrame, text_col: str = "text") -> DataFrame:
     # split(_, '\s+', limit) consumes separator runs exactly like the
     # reference's cursor (P1): tokens 1..4 = words, token 5 = the stripped
     # remainder with interior whitespace preserved.
-    s1 = df.withColumn("line", F.regexp_replace(F.col(text_col), r"\s+$", ""))
-    s1 = s1.withColumn("_lstripped", F.regexp_replace(F.col("line"), r"^\s+", ""))
-    s1 = s1.select(
-        "*",
-        F.split("_lstripped", r"\s+", 5).alias("_tok5"),
-    )
-    # try_element_at: NULL (not an ANSI error) when the line has fewer tokens
-    tok = lambda i: F.coalesce(F.try_element_at("_tok5", F.lit(i)), F.lit(""))  # noqa: E731
-    s1 = s1.select(
-        "*",
-        tok(1).alias("_w1"),
-        tok(2).alias("_w2"),
-        tok(3).alias("_w3"),
-        tok(4).alias("_w4"),
-    )
+    s1 = project(df, "*", f"regexp_replace({ident(text_col)}, {_RTRIM}, '') AS line")
+    s1 = project(s1, "*", f"regexp_replace(line, {_LTRIM}, '') AS _lstripped")
+    s1 = project(s1, "*", f"split(_lstripped, {_WS}, 5) AS _tok5")
+    s1 = project(s1, "*", *(f"{_tok('_tok5', i)} AS _w{i}" for i in range(1, 5)))
 
     # stage 2: time components + padded time string (one split on ':')
-    s2 = s1.select("*", F.split("_w2", ":").alias("_tparts"))
-    part = lambda i: F.try_element_at("_tparts", F.lit(i))  # noqa: E731
+    s2 = project(s1, "*", "split(_w2, ':') AS _tparts")
+    part = lambda i: f"try_element_at(_tparts, {i})"  # noqa: E731
     # a component zfills cleanly iff empty or 1-2 digits ('' -> '00');
     # anything else fails strptime in the reference
-    digits = lambda c: c.rlike(r"^\d{0,2}$")  # noqa: E731
-    s2 = s2.withColumn(
-        "_time_ok",
-        (F.size("_tparts") >= 3)
-        & digits(part(1))
-        & digits(part(2))
-        & digits(part(3)),
-    )
-    s2 = s2.withColumn(
-        "_time_padded",
-        F.when(
-            F.col("_time_ok"),
-            F.concat_ws(":", _zfill2(part(1)), _zfill2(part(2)), _zfill2(part(3))),
-        ),
-    )
+    digits = " AND ".join(f"{part(i)} RLIKE {_TIME_PART}" for i in (1, 2, 3))
+    s2 = project(s2, "*", f"size(_tparts) >= 3 AND {digits} AS _time_ok")
+    padded = "concat_ws(':', " + ", ".join(_zfill2(part(i)) for i in (1, 2, 3)) + ")"
+    s2 = project(s2, "*", f"{case([('_time_ok', padded)])} AS _time_padded")
 
     # stage 3: the two timestamp candidates.  try_to_timestamp +
     # unix_seconds: NULL on out-of-range dates under ANY session ANSI mode
     # (plain unix_timestamp RAISES under ANSI, but an unparseable date is
     # this parser's well-formedness *signal*, not an error)
-    yy = F.regexp_extract("_w1", _F2_DATE_RE, 1).try_cast("int")
-    f2_year = F.when(yy <= 68, yy + 2000).otherwise(yy + 1900)
-    s3 = s2.select(
+    f2 = lambda i: f"regexp_extract(_w1, {lit(_F2_DATE_RE)}, {i})"  # noqa: E731
+    yy = f"try_cast({f2(1)} AS INT)"
+    f2_year = case([(f"{yy} <= 68", f"{yy} + 2000")], f"{yy} + 1900")
+    ts_f1 = (
+        "unix_seconds(try_to_timestamp(concat(_w1, ' ', _time_padded), "
+        "'yyyy-M-d H:mm:ss'))"
+    )
+    ts_f2 = (
+        f"unix_seconds(try_to_timestamp(concat(CAST({f2_year} AS STRING), '-', "
+        f"{f2(2)}, '-', {f2(3)}, ' ', _time_padded), 'yyyy-MM-dd H:mm:ss'))"
+    )
+    s3 = project(
+        s2,
         "*",
-        F.when(
-            F.col("_w1").rlike(_F1_DATE_RE) & F.col("_time_ok"),
-            F.unix_seconds(
-                F.try_to_timestamp(
-                    F.concat(F.col("_w1"), F.lit(" "), F.col("_time_padded")),
-                    F.lit("yyyy-M-d H:mm:ss"),
-                )
-            ),
-        ).alias("_ts_f1"),
-        F.when(
-            F.col("_w1").rlike(_F2_DATE_RE) & F.col("_time_ok"),
-            F.unix_seconds(
-                F.try_to_timestamp(
-                    F.concat(
-                        f2_year.cast("string"),
-                        F.lit("-"),
-                        F.regexp_extract("_w1", _F2_DATE_RE, 2),
-                        F.lit("-"),
-                        F.regexp_extract("_w1", _F2_DATE_RE, 3),
-                        F.lit(" "),
-                        F.col("_time_padded"),
-                    ),
-                    F.lit("yyyy-MM-dd H:mm:ss"),
-                )
-            ),
-        ).alias("_ts_f2"),
+        f"{case([(f'_w1 RLIKE {lit(_F1_DATE_RE)} AND _time_ok', ts_f1)])} AS _ts_f1",
+        f"{case([(f'_w1 RLIKE {lit(_F2_DATE_RE)} AND _time_ok', ts_f2)])} AS _ts_f2",
     )
 
     # stage 4: well-formedness + field selection.  F1's message is the
     # remainder after word 4 (token 5 of the limit-5 split); F2's is the
     # remainder after word 3, which needs its own limit-4 split so interior
     # whitespace survives (the reference's to_end strip, :517-523).
-    is_f1 = F.col("_ts_f1").isNotNull()
-    ts_epoch = F.coalesce("_ts_f1", "_ts_f2")
-    well_formed = ts_epoch.isNotNull()
-    rest4 = F.coalesce(F.try_element_at("_tok5", F.lit(5)), F.lit(""))
-    rest3 = F.coalesce(
-        F.try_element_at(F.split("_lstripped", r"\s+", 4), F.lit(4)), F.lit("")
-    )
-    s4 = s3.select(
+    is_f1 = "_ts_f1 IS NOT NULL"
+    well_formed = "coalesce(_ts_f1, _ts_f2) IS NOT NULL"
+    rest4 = _tok("_tok5", 5)
+    rest3 = _tok(f"split(_lstripped, {_WS}, 4)", 4)
+    s4 = project(
+        s3,
         "*",
-        well_formed.alias("is_entry_start"),
-        ts_epoch.alias("ts_epoch"),
-        F.when(is_f1, F.col("_w3")).alias("thread_raw"),
-        F.when(
-            well_formed, F.when(is_f1, F.col("_w4")).otherwise(F.col("_w3"))
-        ).alias("level_raw"),
-        F.when(well_formed, F.when(is_f1, rest4).otherwise(rest3))
-        .otherwise(_strip(F.col("line")))
-        .alias("message"),
+        f"{well_formed} AS is_entry_start",
+        "coalesce(_ts_f1, _ts_f2) AS ts_epoch",
+        f"{case([(is_f1, '_w3')])} AS thread_raw",
+        f"{case([(well_formed, case([(is_f1, '_w4')], '_w3'))])} AS level_raw",
+        f"{case([(well_formed, case([(is_f1, rest4)], rest3))], _strip('line'))} AS message",
     )
 
-    # stage 5: derived presentation columns
-    out = s4.select(
-        "*",
-        F.when(
-            F.col("is_entry_start"),
-            F.upper(F.translate(F.col("level_raw"), "[]", "")),
-        ).alias("severity"),
-        F.when(
-            F.col("is_entry_start"),
-            F.concat(
-                F.col("level_raw"),
-                F.lit(" "),
-                F.substring(F.col("message"), 1, SHORT_MESSAGE_LENGTH),
-            ),
-        ).alias("short_message"),
-    )
-    return out.drop(
-        "_lstripped", "_tok5", "_tparts", "_w1", "_w2", "_w3", "_w4",
-        "_time_padded", "_time_ok", "_ts_f1", "_ts_f2",
+    # stage 5: derived presentation columns; the helpers end here
+    severity = "upper(translate(level_raw, '[]', ''))"
+    short = f"concat(level_raw, ' ', substring(message, 1, {SHORT_MESSAGE_LENGTH}))"
+    return project(
+        s4,
+        "* EXCEPT (_lstripped, _tok5, _w1, _w2, _w3, _w4, _tparts, _time_ok, "
+        "_time_padded, _ts_f1, _ts_f2)",
+        f"{case([('is_entry_start', severity)])} AS severity",
+        f"{case([('is_entry_start', short)])} AS short_message",
     )

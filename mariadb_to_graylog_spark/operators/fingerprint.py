@@ -10,6 +10,10 @@ This module reimplements the core pt-fingerprint rewrites (as publicly
 documented: lowercase, literals -> ``?``, value lists -> ``(?+)``,
 whitespace collapse) as a chain of JVM-side ``regexp_replace`` expressions:
 zero Python per row, whole-stage codegen, ~10^5x cheaper than a fork.
+``fingerprint_sql`` writes the chain as one Spark SQL expression text
+(functions/sqltext.py): the JVM parses it once, where the same 30-odd
+nested Column-API calls cost a py4j round trip per node on every plan
+build.
 
 ``fingerprint_py`` is the identical pure-Python twin, used as the golden
 oracle in tests and by driver-side tooling.  The regexes avoid lookaround
@@ -21,8 +25,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from mariadb_to_graylog_spark.functions.sqltext import lit
 
 # (pattern, replacement) applied in order, after lowercasing.  The order
 # mirrors pt-fingerprint's documented passes: comments out first, then
@@ -76,17 +79,20 @@ def capitalize_first_word_py(phrase: str) -> str:
     return phrase[:i].upper() + phrase[i:]
 
 
-def fingerprint_col(c: Column) -> Column:
-    s = F.lower(c)
+_TRIM = lit(r"^\s+|\s+$")
+
+
+def fingerprint_sql(c: str) -> str:
+    """``fingerprint_py`` as Spark SQL text over the expression ``c``."""
+    s = f"lower({c})"
     for pat, rep in FINGERPRINT_RULES:
         # Java replacement strings treat \ and $ specially; our replacements
         # ('?', '(?+)', ' ') contain neither.
-        s = F.regexp_replace(s, pat, rep)
-    s = F.regexp_replace(s, r"^\s+|\s+$", "")
-    return capitalize_first_word_col(s)
+        s = f"regexp_replace({s}, {lit(pat)}, {lit(rep)})"
+    s = f"regexp_replace({s}, {_TRIM}, '')"
+    return capitalize_first_word_sql(s)
 
 
-def capitalize_first_word_col(c: Column) -> Column:
-    first = F.regexp_extract(c, r"^([^ ]*)", 1)
-    rest = c.substr(F.length(first) + F.lit(1), F.length(c))
-    return F.concat(F.upper(first), rest)
+def capitalize_first_word_sql(c: str) -> str:
+    first = f"regexp_extract({c}, '^([^ ]*)', 1)"
+    return f"concat(upper({first}), substr({c}, length({first}) + 1, length({c})))"

@@ -12,6 +12,9 @@ collapses to a pure routing expression:
     http  elif http configured
     dropped otherwise            (the reference silently loses the message)
 
+``sink_expr`` writes that expression as SQL text (functions/sqltext.py),
+parsed once by the JVM instead of built one py4j call per node.
+
 Fan-out is one pass over a routed DataFrame: ``write.partitionBy('sink')``
 writes all per-sink tables in a single job -- no per-sink rescan of the
 fact table.  At cluster scale each task streams its rows into per-sink
@@ -23,10 +26,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mariadb_to_graylog_spark.functions.gelf import is_ascii
+from mariadb_to_graylog_spark.functions.sqltext import case, ident
 
 
 @dataclass(frozen=True)
@@ -38,23 +42,18 @@ class RouterConfig:
     http: bool = True
 
 
-def sink_expr(gelf_json: Column, cfg: RouterConfig = RouterConfig()) -> Column:
+def sink_expr(gelf_json: str, cfg: RouterConfig = RouterConfig()) -> str:
+    """The routing column as SQL text over the expression ``gelf_json``."""
     ascii_ok = is_ascii(gelf_json)
-    expr = F.when(F.lit(False), F.lit(""))  # seed for the when-chain
-    if cfg.udp:
-        expr = expr.when(ascii_ok, F.lit("udp"))
-    if cfg.tcp:
-        expr = expr.when(ascii_ok, F.lit("tcp"))
-    if cfg.http:
-        expr = expr.otherwise(F.lit("http"))
-        return expr
-    return expr.otherwise(F.lit("dropped"))
+    branches = [(ascii_ok, f"'{sink}'") for sink in ("udp", "tcp") if getattr(cfg, sink)]
+    otherwise = "'http'" if cfg.http else "'dropped'"
+    return case(branches, otherwise) if branches else otherwise
 
 
 def route(
     df: DataFrame, gelf_col: str = "gelf_json", cfg: RouterConfig = RouterConfig()
 ) -> DataFrame:
-    return df.withColumn("sink", sink_expr(F.col(gelf_col), cfg))
+    return df.withColumn("sink", F.expr(sink_expr(ident(gelf_col), cfg)))
 
 
 def write_fanout(
@@ -71,7 +70,7 @@ def write_fanout(
     ``combined_counts`` (A2) the job CLI computes over them, hold none;
     their number is the ``rows_dropped`` observation the CLI prints.
     """
-    df = routed.filter(F.col("sink") != "dropped")
+    df = routed.where("sink != 'dropped'")
     if repartition_output:
         df = df.repartition(repartition_output, "sink", "conv_id")
     df.write.mode(mode).partitionBy("sink").parquet(base_path)

@@ -32,6 +32,13 @@ Reference semantics preserved:
   Python UDF on the batch path).  They are taken after the per-entry
   aggregate, over the entry's collected META lines only.
 
+The line flags, ``time_line_epoch``, the META metrics and the positional
+rules are SQL-text builders (str -> str, functions/sqltext.py) composed in
+Python and handed over once per projection, one projection per dependent
+window layer: the same JVM expressions as Column-API calls, without a py4j
+round trip per expression node on every plan build (each streaming
+micro-batch rebuilds the plan).
+
 One entry tail for batch and stream: ``assemble_slow_entries`` aggregates
 each entry into the raw-entry shape the cross-batch FSM emits
 (streaming/stateful.py) and both hand it to ``slow_entry_columns``.
@@ -44,11 +51,20 @@ drop such lines, divergence documented here.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mariadb_to_graylog_spark.functions.sqltext import (
+    BEFORE,
+    RUNNING,
+    case,
+    ident,
+    lit,
+    project,
+    window,
+)
 from mariadb_to_graylog_spark.operators.assembly import scan_layer
-from mariadb_to_graylog_spark.operators.fingerprint import fingerprint_col
+from mariadb_to_graylog_spark.operators.fingerprint import fingerprint_sql
 
 # field -> (regex over a META line, cast type); '' group => no match => NULL.
 # Patterns avoid lookaround so they are portable across Java regex / RE2.
@@ -74,81 +90,81 @@ META_FIELD_PATTERNS: dict[str, tuple[str, str]] = {
 
 METRIC_COLS = list(META_FIELD_PATTERNS)
 
+_RTRIM = lit(r"\s+$")
+_TIME_RAW = lit(r"^# Time:\s+(.*\S)\s*$")
+_TIME_DATE = lit(r"^(\d{2})(\d{2})(\d{2})\s")
+_TIME_CLOCK = lit(r"^\d{6}\s+(\d{1,2}:\d{2}:\d{2})$")
+_TIME_ISO = lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
+
 
 # ---------------------------------------------------------------------------
 # the per-line slow-log grammar: the one definition read by the window
 # classifier, its block-scan twin and the cross-batch FSM
-# (streaming/stateful.py)
+# (streaming/stateful.py).  Each helper maps SQL text to SQL text.
 # ---------------------------------------------------------------------------
 
 
-def is_time_line(line: Column) -> Column:
+def is_time_line(line: str) -> str:
     """The ``'# Time:'`` prefix of an entry-start candidate: line[0:2] ==
     '# ' and line[1:7] == ' Time:'.  Trailing whitespace never reaches a
     matching prefix, so the flag reads the same before and after rstrip."""
-    return F.substring(line, 1, 7) == "# Time:"
+    return f"substring({line}, 1, 7) = '# Time:'"
 
 
 def slow_lines(df: DataFrame, text_col: str = "text") -> DataFrame:
     """rstripped non-empty ``line`` (empty lines are FSM no-ops, :901-902)
     plus its ``_is_hash`` (``'# '``) and ``_is_time`` (``is_time_line``)
     prefix flags."""
-    line = F.regexp_replace(F.col(text_col), r"\s+$", "")
-    out = df.withColumn("line", line).filter(F.col("line") != "")
-    is_hash = F.substring("line", 1, 2) == "# "
-    is_time = is_time_line(F.col("line"))
-    return out.withColumn("_is_hash", is_hash).withColumn("_is_time", is_time)
+    line = f"regexp_replace({ident(text_col)}, {_RTRIM}, '') AS line"
+    return project(
+        project(df, "*", line).where("line != ''"),
+        "*",
+        "substring(line, 1, 2) = '# ' AS _is_hash",
+        f"{is_time_line('line')} AS _is_time",
+    )
 
 
-def is_use_line(line: Column) -> Column:
+def is_use_line(line: str) -> str:
     """skipped when it is SQL line 0 (:873-880)"""
-    return F.substring(line, 1, 4) == "use "
+    return f"substring({line}, 1, 4) = 'use '"
 
 
-def is_set_timestamp_line(line: Column) -> Column:
+def is_set_timestamp_line(line: str) -> str:
     """skipped, and its value harvested, when it is SQL line 1 (:882-895)"""
-    return F.substring(line, 1, 14) == "SET timestamp="
+    return f"substring({line}, 1, 14) = 'SET timestamp='"
 
 
-def set_timestamp_value(line: Column) -> Column:
+def set_timestamp_value(line: str) -> str:
     """P8: the exact ``line[14:len-1]`` slice; try_cast so a garbage or
     overflowing value is NULL, not an ANSI error."""
-    return F.when(
-        is_set_timestamp_line(line),
-        F.substring(line, 15, F.length(line) - F.lit(15)).try_cast("long"),
-    )
+    value = f"try_cast(substring({line}, 15, length({line}) - 15) AS BIGINT)"
+    return case([(is_set_timestamp_line(line), value)])
 
 
-def time_line_epoch(line: Column) -> Column:
+def time_line_epoch(line: str) -> str:
     """Intended ``'# Time:'`` parse -> epoch seconds: ``yymmdd H:mm:ss``
     (pivot 69) or an ISO datetime with a fraction; NULL otherwise."""
-    t_raw = F.regexp_extract(line, r"^# Time:\s+(.*\S)\s*$", 1)
-    yy = F.regexp_extract(t_raw, r"^(\d{2})(\d{2})(\d{2})\s", 1).try_cast("int")
-    t_f2 = F.unix_seconds(F.try_to_timestamp(
-        F.concat(
-            F.when(yy <= 68, yy + 2000).otherwise(yy + 1900).cast("string"),
-            F.lit("-"),
-            F.regexp_extract(t_raw, r"^(\d{2})(\d{2})(\d{2})\s", 2),
-            F.lit("-"),
-            F.regexp_extract(t_raw, r"^(\d{2})(\d{2})(\d{2})\s", 3),
-            F.lit(" "),
-            F.regexp_extract(t_raw, r"^\d{6}\s+(\d{1,2}:\d{2}:\d{2})$", 1),
-        ),
-        F.lit("yyyy-MM-dd H:mm:ss"),
-    ))
-    t_iso = F.unix_seconds(
-        F.try_to_timestamp(t_raw, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
+    t_raw = f"regexp_extract({line}, {_TIME_RAW}, 1)"
+    date = lambda i: f"regexp_extract({t_raw}, {_TIME_DATE}, {i})"  # noqa: E731
+    yy = f"try_cast({date(1)} AS INT)"
+    year = case([(f"{yy} <= 68", f"{yy} + 2000")], f"{yy} + 1900")
+    t_f2 = (
+        f"unix_seconds(try_to_timestamp(concat(CAST({year} AS STRING), '-', "
+        f"{date(2)}, '-', {date(3)}, ' ', regexp_extract({t_raw}, {_TIME_CLOCK}, 1)), "
+        "'yyyy-MM-dd H:mm:ss'))"
     )
-    return F.coalesce(t_f2, t_iso)
+    t_iso = f"unix_seconds(try_to_timestamp({t_raw}, {_TIME_ISO}))"
+    return f"coalesce({t_f2}, {t_iso})"
 
 
-def meta_value(line: Column, name: str) -> Column:
+def meta_value(line: str, name: str) -> str:
     """One META field of one line, typed; an entry's value is the max over
     its META lines."""
     pat, typ = META_FIELD_PATTERNS[name]
-    v = F.regexp_extract(line, pat, 1)
+    v = f"regexp_extract({line}, {lit(pat)}, 1)"
     # try_cast: regex-validated but overflow-able digits must not ANSI-abort
-    return F.when(v != "", v).try_cast(typ)
+    present = f"{v} != ''"
+    return f"try_cast({case([(present, v)])} AS {typ.upper()})"
 
 
 def slow_entry_columns(entries: DataFrame) -> DataFrame:
@@ -161,25 +177,25 @@ def slow_entry_columns(entries: DataFrame) -> DataFrame:
     ``query_text_raw`` is byte-equal to the reference's accumulated string,
     which starts with '\\n' (the first append is ''+'\\n'+line,
     :821-826); ``query_text`` is the clean join."""
-    head = [c for c in entries.columns if c not in ("kept_lines", "meta_lines")]
-    out = entries.select(
-        *head,
-        F.array_join("kept_lines", "\n").alias("query_text"),
+    newline = lit("\n")
+    out = project(
+        entries,
+        "* EXCEPT (kept_lines, meta_lines)",
+        f"array_join(kept_lines, {newline}) AS query_text",
         *(
-            F.array_max(F.transform("meta_lines", lambda ln: meta_value(ln, n))).alias(n)
+            f"array_max(transform(meta_lines, ln -> {meta_value('ln', n)})) AS {ident(n)}"
             for n in METRIC_COLS
         ),
-        F.size("kept_lines").alias("_kept_count"),
+        "size(kept_lines) AS _kept_count",
     )
-    query_text = F.col("query_text")
-    return out.select(
-        "*",
-        F.when(F.col("_kept_count") > 0, F.concat(F.lit("\n"), query_text))
-        .otherwise(F.lit(""))
-        .alias("query_text_raw"),
-        F.coalesce("set_timestamp", "time_line_ts").alias("ts_epoch"),
-        fingerprint_col(query_text).alias("query_fingerprint"),
-    ).drop("_kept_count")
+    raw = case([("_kept_count > 0", f"concat({newline}, query_text)")], "''")
+    return project(
+        out,
+        "* EXCEPT (_kept_count)",
+        f"{raw} AS query_text_raw",
+        "coalesce(set_timestamp, time_line_ts) AS ts_epoch",
+        f"{fingerprint_sql('query_text')} AS query_fingerprint",
+    )
 
 
 def classify_slow_log_lines(
@@ -203,51 +219,53 @@ def classify_slow_log_lines(
     * same-run-as-entry-start (META)   -> 'the last entry start lies at or
       after my run's start turn'.
 
-    A SQL line's position within its entry is not numbered here: the
-    entry aggregate sorts the SQL lines into an array and reads indexes.
+    One projection per dependent window layer, three window layers in
+    all: (previous hash flag, previous Time turn) -> run start -> (entry
+    id, META).  A SQL line's position within its entry is not
+    numbered here: the entry aggregate sorts the SQL lines into an array
+    and reads indexes.
     """
     out = slow_lines(df, text_col)
+    conv, order = ident(conv_col), ident(order_col)
+    w = window(conv, order)
+    w_cum = window(conv, order, RUNNING)
+    w_prev = window(conv, order, BEFORE)
 
-    w = Window.partitionBy(conv_col).orderBy(order_col)
-    w_cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    w_prev = w.rowsBetween(Window.unboundedPreceding, -1)
-
-    # start turn of the current maximal '# '-run (valid for hash rows)
-    run_start = F.col("_is_hash") & F.coalesce(
-        ~F.lag("_is_hash").over(w), F.lit(True)
+    # layer 1: the previous line's '# ' flag and the last Time turn
+    # before this line
+    out = project(
+        out,
+        "*",
+        f"lag(_is_hash) {w} AS _prev_hash",
+        f"max({case([('_is_time', order)])}) {w_prev} AS _prev_time_turn",
     )
-    out = out.withColumn(
-        "_run_start_turn",
-        F.max(F.when(run_start, F.col(order_col))).over(w_cum),
+    # layer 2: start turn of the current maximal '# '-run (valid for hash
+    # rows); an entry start is a '# Time:' line with no earlier Time
+    # inside its run
+    run_start = "_is_hash AND coalesce(NOT _prev_hash, true)"
+    out = project(
+        out, "*", f"max({case([(run_start, order)])}) {w_cum} AS _run_start_turn"
     )
-
-    # entry start = '# Time:' line with no earlier Time inside its run
-    prev_time_turn = F.max(F.when(F.col("_is_time"), F.col(order_col))).over(w_prev)
-    out = out.withColumn(
-        "is_entry_start",
-        F.col("_is_time")
-        & (
-            prev_time_turn.isNull()
-            | (prev_time_turn < F.col("_run_start_turn"))
-        ),
-    )
-
-    out = out.withColumn(
-        "entry_id", F.sum(F.col("is_entry_start").cast("long")).over(w_cum)
+    out = project(
+        out,
+        "*",
+        "_is_time AND (_prev_time_turn IS NULL OR _prev_time_turn < _run_start_turn)"
+        " AS is_entry_start",
     )
 
-    # META = hash line whose run contains the current entry's start
-    last_entry_start_turn = F.max(
-        F.when(F.col("is_entry_start"), F.col(order_col))
-    ).over(w_cum)
-    out = out.withColumn(
-        "is_meta",
-        F.col("_is_hash") & (last_entry_start_turn >= F.col("_run_start_turn")),
+    # layer 3: entry ids, and META = hash line whose run contains the
+    # current entry's start
+    last_entry_start_turn = f"max({case([('is_entry_start', order)])}) {w_cum}"
+    out = project(
+        out,
+        "*",
+        f"sum(CAST(is_entry_start AS BIGINT)) {w_cum} AS entry_id",
+        f"_is_hash AND {last_entry_start_turn} >= _run_start_turn AS is_meta",
     )
-    out = out.withColumn("is_sql", ~F.col("is_meta"))
-    return (
-        out.filter(F.col("entry_id") > 0)
-        .drop("_is_hash", "_is_time", "_run_start_turn")
+    return project(
+        out.where("entry_id > 0"),
+        "* EXCEPT (_is_hash, _is_time, _prev_hash, _prev_time_turn, _run_start_turn)",
+        "NOT is_meta AS is_sql",
     )
 
 
@@ -270,8 +288,8 @@ def classify_slow_log_lines_scalable(
     run-starts (which need the previous block's last-row hash flag, a tiny
     edge join): run/time turns -> entry ids + last entry start.
     """
-    out = slow_lines(df, text_col)
-    out = out.withColumn("_blk", F.floor(F.col(order_col) / F.lit(block_size)))
+    conv, order = ident(conv_col), ident(order_col)
+    out = project(slow_lines(df, text_col), "*", f"floor({order} / {lit(block_size)}) AS _blk")
 
     # previous row's _is_hash: block-local lag, with the boundary fallback
     # taken from the last row of the previous PRESENT block (lag over the
@@ -281,58 +299,54 @@ def classify_slow_log_lines_scalable(
     # conversation start); null at conversation start.  The edge relation
     # is one row per (conv, block) -- at least one row per conversation,
     # so its join strategy is left to AQE.
-    w_local = Window.partitionBy(conv_col, "_blk").orderBy(order_col)
-    w_edge = Window.partitionBy(conv_col).orderBy("_blk")
-    edges = (
-        out.groupBy(conv_col, "_blk")
-        .agg(F.max_by("_is_hash", F.col(order_col)).alias("_last_hash"))
-        .select(
-            conv_col, "_blk",
-            F.lag("_last_hash").over(w_edge).alias("_edge_hash"),
-        )
+    last_hash = out.groupBy(conv_col, "_blk").agg(
+        F.expr(f"max_by(_is_hash, {order}) AS _last_hash")
+    )
+    edges = project(
+        last_hash, conv, "_blk", f"lag(_last_hash) {window(conv, '_blk')} AS _edge_hash"
     )
     out = out.join(edges, [conv_col, "_blk"], "left")
-    prev_hash = F.coalesce(F.lag("_is_hash").over(w_local), F.col("_edge_hash"))
-    run_start = F.col("_is_hash") & F.coalesce(~prev_hash, F.lit(True))
-    out = out.withColumn("_run_start", run_start).drop("_edge_hash")
+    prev_hash = f"coalesce(lag(_is_hash) {window(f'{conv}, _blk', order)}, _edge_hash)"
+    out = project(
+        out,
+        "* EXCEPT (_edge_hash)",
+        f"_is_hash AND coalesce(NOT {prev_hash}, true) AS _run_start",
+    )
 
     # layer 1: run-start turn (inclusive max) + previous Time turn
     # (exclusive max)
     out = scan_layer(
         out,
         [
-            ("_run_start_turn", F.when(F.col("_run_start"), F.col(order_col)), "max", False),
-            ("_prev_time_turn", F.when(F.col("_is_time"), F.col(order_col)), "max", True),
+            ("_run_start_turn", case([("_run_start", order)]), "max", False),
+            ("_prev_time_turn", case([("_is_time", order)]), "max", True),
         ],
         conv_col,
         order_col,
     )
-    out = out.withColumn(
-        "is_entry_start",
-        F.col("_is_time")
-        & (
-            F.col("_prev_time_turn").isNull()
-            | (F.col("_prev_time_turn") < F.col("_run_start_turn"))
-        ),
+    out = project(
+        out,
+        "*",
+        "_is_time AND (_prev_time_turn IS NULL OR _prev_time_turn < _run_start_turn)"
+        " AS is_entry_start",
     )
 
     # layer 2: entry ids (sum) + turn of the current entry's start (max)
     out = scan_layer(
         out,
         [
-            ("entry_id", F.col("is_entry_start").cast("long"), "sum", False),
-            ("_last_start_turn", F.when(F.col("is_entry_start"), F.col(order_col)), "max", False),
+            ("entry_id", "CAST(is_entry_start AS BIGINT)", "sum", False),
+            ("_last_start_turn", case([("is_entry_start", order)]), "max", False),
         ],
         conv_col,
         order_col,
     )
-    out = out.withColumn(
-        "is_meta",
-        F.col("_is_hash") & (F.col("_last_start_turn") >= F.col("_run_start_turn")),
-    ).withColumn("is_sql", ~F.col("is_meta"))
-    return out.filter(F.col("entry_id") > 0).drop(
-        "_is_hash", "_is_time", "_blk", "_run_start", "_run_start_turn",
-        "_prev_time_turn", "_last_start_turn",
+    out = project(out, "*", "_is_hash AND _last_start_turn >= _run_start_turn AS is_meta")
+    return project(
+        out.where("entry_id > 0"),
+        "* EXCEPT (_is_hash, _is_time, _blk, _run_start, _run_start_turn, "
+        "_prev_time_turn, _last_start_turn)",
+        "NOT is_meta AS is_sql",
     )
 
 
@@ -348,20 +362,18 @@ def assemble_slow_entries(
     collected sorted by turn, so the positional rules read array indexes:
     ``use`` is skipped only at index 0, ``SET timestamp=`` harvested and
     skipped only at index 1 (:873-895)."""
-    line = F.col("line")
-    sql_line = F.when(
-        F.col("is_sql"), F.struct(F.col(order_col).alias("i"), line.alias("m"))
-    )
-    agg = classified.groupBy(conv_col, "entry_id").agg(
-        F.min(order_col).alias("start_turn_idx"),
-        F.min_by("ts", order_col).alias("ts"),
-        F.min_by("role", order_col).alias("role"),
-        F.min_by("tool", order_col).alias("tool"),
+    conv, order = ident(conv_col), ident(order_col)
+    sql_line = case([("is_sql", f"named_struct('i', {order}, 'm', line)")])
+    agg = classified.groupBy(conv_col, "entry_id").agg(*(F.expr(e) for e in (
+        f"min({order}) AS start_turn_idx",
+        f"min_by(ts, {order}) AS ts",
+        f"min_by(role, {order}) AS role",
+        f"min_by(tool, {order}) AS tool",
         # an entry's first line is its '# Time:' start
-        F.min_by("line", order_col).alias("_head"),
-        F.transform(F.sort_array(F.collect_list(sql_line)), lambda s: s["m"]).alias("_sql"),
-        F.collect_list(F.when(F.col("is_meta"), line)).alias("meta_lines"),
-    )
+        f"min_by(line, {order}) AS _head",
+        f"transform(sort_array(collect_list({sql_line})), s -> s.m) AS _sql",
+        f"collect_list({case([('is_meta', 'line')])}) AS meta_lines",
+    )))
 
     # Trailing drop BEFORE the >=1-SQL-line filter: the reference flushes
     # entry e when the NEXT '# Time:' arrives (:925-931,947-949), so every
@@ -370,23 +382,20 @@ def assemble_slow_entries(
     # Computing max(entry_id) after the SQL filter wrongly dropped the last
     # complete entry in that case.
     if not emit_trailing:
-        w_conv = Window.partitionBy(conv_col)
-        agg = agg.withColumn("_max_entry", F.max("entry_id").over(w_conv)).filter(
-            F.col("entry_id") < F.col("_max_entry")
-        ).drop("_max_entry")
+        agg = project(agg, "*", f"max(entry_id) {window(conv)} AS _max_entry")
 
     # entries with no SQL-section lines are never emitted (query_line falsy
     # at flush, :947-948)
-    agg = agg.filter(F.size("_sql") >= 1)
+    emitted = "size(_sql) >= 1"
+    agg = agg.where(emitted if emit_trailing else f"entry_id < _max_entry AND {emitted}")
 
-    def skipped(x: Column, i: Column) -> Column:
-        return ((i == 0) & is_use_line(x)) | ((i == 1) & is_set_timestamp_line(x))
-
-    return slow_entry_columns(agg.select(
-        conv_col, "entry_id", "start_turn_idx", "ts", "role", "tool",
-        set_timestamp_value(F.get("_sql", 1)).alias("set_timestamp"),
-        time_line_epoch(F.col("_head")).alias("time_line_ts"),
-        F.filter("_sql", lambda x, i: ~skipped(x, i)).alias("kept_lines"),
+    skipped = f"(i = 0 AND {is_use_line('x')}) OR (i = 1 AND {is_set_timestamp_line('x')})"
+    return slow_entry_columns(project(
+        agg,
+        conv, "entry_id", "start_turn_idx", "ts", "role", "tool",
+        f"{set_timestamp_value('get(_sql, 1)')} AS set_timestamp",
+        f"{time_line_epoch('_head')} AS time_line_ts",
+        f"filter(_sql, (x, i) -> NOT ({skipped})) AS kept_lines",
         "meta_lines",
     ))
 

@@ -32,8 +32,6 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from mariadb_to_graylog_spark.dims import ROLE_ROWS, TOOL_ROWS, lookup
 from mariadb_to_graylog_spark.functions.gelf import (
@@ -41,6 +39,7 @@ from mariadb_to_graylog_spark.functions.gelf import (
     gelf_json_strict,
     gelf_level,
 )
+from mariadb_to_graylog_spark.functions.sqltext import WHOLE, case, lit, project, window
 from mariadb_to_graylog_spark.operators.assembly import assemble_error_entries
 from mariadb_to_graylog_spark.operators.errorlog import (
     SHORT_MESSAGE_LENGTH,
@@ -104,19 +103,15 @@ def split_dialects(
     # as a partition-only window, but sorts on (conv_id, turn_idx) -- the
     # exact ordering every downstream window needs, so the entire pipeline
     # runs on ONE sort after ONE exchange.
-    w = (
-        Window.partitionBy("conv_id")
-        .orderBy("turn_idx")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    flagged = prepared.withColumn(
-        "_is_slow_conv", F.max(is_time_line(F.col("text")).cast("int")).over(w) > 0
+    w = window("conv_id", "turn_idx", WHOLE)
+    flagged = project(
+        prepared, "*", f"max(CAST({is_time_line('text')} AS INT)) {w} > 0 AS _is_slow_conv"
     )
     if share_scan == "persist":
         flagged = flagged.persist()
     return (
-        flagged.filter(~F.col("_is_slow_conv")).drop("_is_slow_conv"),
-        flagged.filter(F.col("_is_slow_conv")).drop("_is_slow_conv"),
+        project(flagged.where("NOT _is_slow_conv"), "* EXCEPT (_is_slow_conv)"),
+        project(flagged.where("_is_slow_conv"), "* EXCEPT (_is_slow_conv)"),
     )
 
 
@@ -129,8 +124,9 @@ def error_events(transcripts: DataFrame, cfg: PipelineConfig) -> DataFrame:
 def error_entries_to_events(entries: DataFrame) -> DataFrame:
     """Entry table -> EVENT_COLS shape (shared by the batch plan and the
     stateful streaming assembly, whose entries carry the same columns)."""
-    return entries.select(
-        F.lit("error").alias("source"),
+    return project(
+        entries,
+        "'error' AS source",
         "conv_id",
         "entry_id",
         "start_turn_idx",
@@ -138,16 +134,16 @@ def error_entries_to_events(entries: DataFrame) -> DataFrame:
         "role",
         "tool",
         "ts_epoch",
-        F.col("level_raw").alias("severity_raw"),
+        "level_raw AS severity_raw",
         "severity",
         "short_message",
-        F.col("message").alias("text"),
-        F.col("thread_raw").try_cast("long").alias("thread_id"),
-        F.lit(None).cast("double").alias("query_time"),
-        F.lit(None).cast("double").alias("lock_time"),
-        F.lit(None).cast("long").alias("rows_sent"),
-        F.lit(None).cast("long").alias("rows_examined"),
-        F.lit(None).cast("string").alias("query_fingerprint"),
+        "message AS text",
+        "try_cast(thread_raw AS BIGINT) AS thread_id",
+        "CAST(NULL AS DOUBLE) AS query_time",
+        "CAST(NULL AS DOUBLE) AS lock_time",
+        "CAST(NULL AS BIGINT) AS rows_sent",
+        "CAST(NULL AS BIGINT) AS rows_examined",
+        "CAST(NULL AS STRING) AS query_fingerprint",
     )
 
 
@@ -162,11 +158,12 @@ def slow_events(transcripts: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
 def slow_entries_to_events(entries: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Entry table -> EVENT_COLS shape (shared with stateful streaming)."""
-    severity = F.when(
-        F.col("query_time") > cfg.slow_warn_seconds, F.lit("WARNING")
-    ).otherwise(F.lit("NOTE"))
-    return entries.select(
-        F.lit("slow").alias("source"),
+    severity = case(
+        [(f"query_time > {lit(float(cfg.slow_warn_seconds))}", "'WARNING'")], "'NOTE'"
+    )
+    return project(
+        entries,
+        "'slow' AS source",
         "conv_id",
         "entry_id",
         "start_turn_idx",
@@ -174,13 +171,11 @@ def slow_entries_to_events(entries: DataFrame, cfg: PipelineConfig) -> DataFrame
         "role",
         "tool",
         "ts_epoch",
-        F.lit("[Slow]").alias("severity_raw"),
-        severity.alias("severity"),
-        F.concat(
-            F.lit("[Slow] "),
-            F.substring("query_fingerprint", 1, SHORT_MESSAGE_LENGTH),
-        ).alias("short_message"),
-        F.col("query_text").alias("text"),
+        "'[Slow]' AS severity_raw",
+        f"{severity} AS severity",
+        f"concat('[Slow] ', substring(query_fingerprint, 1, {SHORT_MESSAGE_LENGTH}))"
+        " AS short_message",
+        "query_text AS text",
         "thread_id",
         "query_time",
         "lock_time",
@@ -193,22 +188,20 @@ def slow_entries_to_events(entries: DataFrame, cfg: PipelineConfig) -> DataFrame
 def enrich(events: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Dim lookups (P12 + north-star role/tool dims) + GELF column in one
     projection; ``tool, role`` lead the routed column order."""
-    role, tool = F.col("role"), F.col("tool")
-    level = gelf_level(F.col("severity"))
+    level = gelf_level("severity")
     serializer = gelf_json_compat if cfg.serializer == "compat" else gelf_json_strict
-    gelf = serializer(
-        F.lit(cfg.hostname), F.col("short_message"), F.col("ts_epoch"), level, F.col("text")
-    )
-    return events.select(
-        tool,
-        role,
-        *[c for c in events.columns if c not in ("role", "tool")],
-        level.alias("gelf_level"),
-        lookup(role, ROLE_ROWS, 1).alias("role_group"),
-        lookup(role, ROLE_ROWS, 2).alias("default_source"),
-        lookup(tool, TOOL_ROWS, 1).alias("tool_kind"),
-        lookup(tool, TOOL_ROWS, 2).alias("sink_hint"),
-        gelf.alias("gelf_json"),
+    gelf = serializer(lit(cfg.hostname), "short_message", "ts_epoch", level, "text")
+    return project(
+        events,
+        "tool",
+        "role",
+        "* EXCEPT (role, tool)",
+        f"{level} AS gelf_level",
+        f"{lookup('role', ROLE_ROWS, 1)} AS role_group",
+        f"{lookup('role', ROLE_ROWS, 2)} AS default_source",
+        f"{lookup('tool', TOOL_ROWS, 1)} AS tool_kind",
+        f"{lookup('tool', TOOL_ROWS, 2)} AS sink_hint",
+        f"{gelf} AS gelf_json",
     )
 
 

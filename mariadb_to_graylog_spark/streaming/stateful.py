@@ -41,8 +41,8 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
+from mariadb_to_graylog_spark.functions.sqltext import project
 from mariadb_to_graylog_spark.operators.errorlog import parse_error_log_lines
 from mariadb_to_graylog_spark.operators.slowlog import (
     is_set_timestamp_line,
@@ -245,15 +245,15 @@ def slow_line_values(transcripts: DataFrame) -> DataFrame:
     travels as a decimal: pandas turns a long column holding NULLs into
     float64, which loses digits past 2**53.  No name has a leading
     underscore, which ``itertuples`` would rename."""
-    line = F.col("line")
-    return slow_lines(transcripts).select(
+    return project(
+        slow_lines(transcripts),
         *_HEAD_COLS, "line",
-        F.col("_is_hash").alias("is_hash"),
-        F.col("_is_time").alias("is_time"),
-        is_use_line(line).alias("is_use"),
-        is_set_timestamp_line(line).alias("is_set"),
-        set_timestamp_value(line).cast("decimal(20,0)").alias("set_ts"),
-        F.when(F.col("_is_time"), time_line_epoch(line)).alias("time_ts"),
+        "_is_hash AS is_hash",
+        "_is_time AS is_time",
+        f"{is_use_line('line')} AS is_use",
+        f"{is_set_timestamp_line('line')} AS is_set",
+        f"CAST({set_timestamp_value('line')} AS DECIMAL(20,0)) AS set_ts",
+        f"CASE WHEN _is_time THEN {time_line_epoch('line')} END AS time_ts",
     )
 
 

@@ -11,6 +11,7 @@ from reference_sim import gelf_to_string, simulate_error_log
 from mariadb_to_graylog_spark.operators.assembly import assemble_error_entries
 from mariadb_to_graylog_spark.operators.errorlog import parse_error_log_lines
 from mariadb_to_graylog_spark.functions.gelf import gelf_json_compat, gelf_level
+from mariadb_to_graylog_spark.functions.sqltext import lit
 
 CORPUS = [
     "2019-11-01 16:10:48 0 [Note] WSREP: Read nil XID from storage engines, skipping position init",
@@ -40,16 +41,11 @@ def spark_error_entries(spark, lines, mode="strict", host="sparkhost", scalable=
     df = make_conv(spark, lines)
     parsed = parse_error_log_lines(df)
     entries = assemble_error_entries(parsed, mode=mode, scalable=scalable)
-    entries = entries.withColumn("gelf_level", gelf_level(F.col("severity")))
-    entries = entries.withColumn(
-        "gelf_json",
-        gelf_json_compat(
-            F.lit(host),
-            F.col("short_message"),
-            F.col("ts_epoch"),
-            F.col("gelf_level"),
-            F.col("message"),
-        ),
+    entries = entries.selectExpr("*", f"{gelf_level('severity')} AS gelf_level")
+    entries = entries.selectExpr(
+        "*",
+        gelf_json_compat(lit(host), "short_message", "ts_epoch", "gelf_level", "message")
+        + " AS gelf_json",
     )
     return entries.orderBy("entry_id").collect()
 

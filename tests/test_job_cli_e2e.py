@@ -59,6 +59,26 @@ def test_job_batch_with_lineage_and_resume(spark, transcripts, tmp_path):
     assert n2 == 0
 
 
+def test_job_cli_reads_sinks_back_without_a_job(spark, transcripts, tmp_path):
+    """The sinks the run wrote are read back with the routed schema, so no
+    Spark job infers it from the files: the whole run with metrics and
+    lineage takes at most 9 jobs (10 while the read inferred it), and the
+    read-back lineage and counts match the written rows."""
+    from conftest import group_jobs
+
+    src_path = str(tmp_path / "transcripts")
+    transcripts.write.parquet(src_path)
+    out, metrics = str(tmp_path / "sinks"), str(tmp_path / "metrics")
+    lineage = str(tmp_path / "lineage")
+    argv = ["--input", src_path, "--output", out, "--metrics", metrics, "--lineage", lineage]
+    assert group_jobs(spark, lambda: job_main(argv)) <= 9
+    written = spark.read.parquet(out)
+    n = written.count()
+    assert n > 0
+    assert spark.read.parquet(metrics).agg(F.sum("n")).collect()[0][0] == n
+    assert spark.read.parquet(lineage).agg(F.sum("rows_routed")).collect()[0][0] == n
+
+
 def test_resume_metrics_scoped_to_run(spark, transcripts, tmp_path):
     """A second (non-resume) run appending to the SAME output must record
     only its own rows in metrics -- the read-back is run_id-scoped."""

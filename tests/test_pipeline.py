@@ -251,3 +251,42 @@ def test_read_lineage_none_only_when_no_lineage(spark, tmp_path):
     (corrupt / "part-0.parquet").write_bytes(b"not a parquet file")
     with pytest.raises(Exception):
         read_lineage(spark, str(corrupt))
+
+
+def test_build_routed_py4j_round_trips_bounded(spark, transcripts, monkeypatch):
+    """The row grammars are SQL text handed over once per projection, so
+    building the routed plan costs a few hundred py4j round trips; built
+    one Column-API call per expression node it cost 6,400-7,450.  Counted
+    at the client connection every Python-to-JVM command goes through."""
+    import gc
+
+    import py4j.clientserver as cs
+
+    build_routed(transcripts)  # warm: class lookups, cached schemas
+    gc.collect()  # py4j releases collected Java references with commands too
+    calls = 0
+    send = cs.ClientServerConnection.send_command
+
+    def counting(self, command):
+        nonlocal calls
+        calls += 1
+        return send(self, command)
+
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counting)
+    build_routed(transcripts)
+    monkeypatch.undo()
+    assert 0 < calls <= 1000
+
+
+def test_routed_rows_ignore_escaped_string_literals(spark, transcripts):
+    """SQL-text literals parse to the same strings whether or not the
+    parser takes backslashes literally, so the routed rows are too."""
+    key = "spark.sql.parser.escapedStringLiterals"
+    rows = {}
+    for value in ("true", "false"):
+        spark.conf.set(key, value)
+        try:
+            rows[value] = sorted(map(repr, build_routed(transcripts).collect()))
+        finally:
+            spark.conf.unset(key)
+    assert rows["true"] == rows["false"] and rows["true"]

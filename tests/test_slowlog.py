@@ -283,8 +283,10 @@ def test_scalable_classifier_leaves_join_strategy_to_aqe(spark):
 
 def test_slow_log_plan_shape(spark):
     """SQL-line positions are indexes into the entry's sorted SQL-line
-    array, not running windows: ``parse_slow_log`` plans 6 Window nodes
-    (8 while two more windows numbered SQL lines).  The block-scan
+    array, not running windows, and the classifier builds one projection
+    per dependent window layer: ``parse_slow_log`` plans 4 Window nodes,
+    three classifier layers and the trailing-entry max (6 with one window
+    per column, 8 while two more windows numbered SQL lines).  The block-scan
     classifier joins 3 times in sequence -- the hash-flag edge carry and
     two scan layers (5 with the two SQL-numbering layers).  Each join's
     carries side re-plans the same input, so n sequential joins show as
@@ -300,7 +302,7 @@ def test_slow_log_plan_shape(spark):
         return re.findall(r"(?m)^[\s:|+\-*()\d]*([A-Za-z]+)", plan)
 
     df = make_conv(spark, CORPUS)
-    assert nodes(parse_slow_log(df)).count("Window") <= 6
+    assert nodes(parse_slow_log(df)).count("Window") <= 4
     joins = [n for n in nodes(classify_slow_log_lines_scalable(df)) if n.endswith("Join")]
     assert len(joins) <= 2**3 - 1
 
@@ -334,9 +336,9 @@ def test_fingerprint_spark_equals_python(spark):
         "  select\n  col   FROM t  WHERE x = 'it''s'  ",
     ]
     df = spark.createDataFrame([(q,) for q in queries], "q string")
-    from mariadb_to_graylog_spark.operators.fingerprint import fingerprint_col
+    from mariadb_to_graylog_spark.operators.fingerprint import fingerprint_sql
 
-    got = [r.fp for r in df.select(fingerprint_col(F.col("q")).alias("fp")).collect()]
+    got = [r.fp for r in df.selectExpr(f"{fingerprint_sql('q')} AS fp").collect()]
     assert got == [fingerprint_py(q) for q in queries]
 
 

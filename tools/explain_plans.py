@@ -11,7 +11,10 @@ Checks:
      2-column ReadSchema.
   3. predicate pushdown: turn_idx filter appears in PushedFilters.
 
-Usage: python tools/explain_plans.py [--verbose]
+Usage: python tools/explain_plans.py [--verbose] [--transcripts PATH]
+
+Without ``--transcripts`` the check runs over bench.py's small warm-up
+table, written first if it is missing.
 """
 
 from __future__ import annotations
@@ -27,7 +30,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--verbose", action="store_true")
-    ap.add_argument("--transcripts", default="/tmp/spark_graft_bench/transcripts_warm")
+    ap.add_argument("--transcripts", help="transcripts parquet (default: bench warm-up table)")
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
@@ -36,6 +39,10 @@ def main() -> int:
     from mariadb_to_graylog_spark.session import get_spark
 
     spark = get_spark(app_name="explain", cpus=4)
+    if args.transcripts is None:
+        from bench import ensure_warmup_table
+
+        args.transcripts = ensure_warmup_table(spark)
     t = spark.read.parquet(args.transcripts)
 
     failures: list[str] = []
